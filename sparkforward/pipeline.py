@@ -48,17 +48,19 @@ def ff_score_transform(
     mode: Mode | None = None,
 ) -> DataFrame:
     """FFScore.transform (ref pyterrier.py:26-48): replace ``score`` with the
-    dense score, keep the sparse score as ``score_0``, re-rank per query."""
-    from sparkforward.score import ff_score
+    dense score, keep the sparse score as ``score_0``, re-rank per query.
+    The sparse score rides through the gather, so the run is read once."""
+    from sparkforward.score import _query_vectors_df, compute_scores
 
     internal = _to_internal(run)
     ranking = Ranking(internal)
-    scored = ff_score(
-        ranking, index, encoder=encoder, query_vectors=query_vectors, mode=mode,
-        check_missing=False,
+    qvec_df = _query_vectors_df(run.sparkSession, ranking, encoder, query_vectors)
+    cand = internal.dropna(subset=["q_id", "id", "score"]).select(
+        *(F.col(c).cast("string").alias(c) for c in ("q_id", "id")),
+        *(["query"] if ranking.has_queries else []), F.col("score").alias("score_0"),
     )
-    sparse = internal.select("q_id", "id", F.col("score").alias("score_0"))
-    out = scored.df.join(sparse, ["q_id", "id"])
+    scored = compute_scores(cand, index, qvec_df, mode=mode, check_missing=False)
+    out = scored.withColumnRenamed("ff_score", "score").dropna(subset=["score"])
     return _to_pyterrier(add_ranks(out).withColumn("rank", F.col("rank") - 1))
 
 

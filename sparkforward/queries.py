@@ -251,7 +251,8 @@ def _dense_scores(
     spark: SparkSession, sf_dir: str, candidates: DataFrame,
     qvec_map: dict[str, int] | None = None,
 ) -> DataFrame:
-    """(q_id, doc_id, dense) = round(dot(qvec, emb[doc_id]), 4) for candidates."""
+    """(q_id, doc_id, ..., dense) = round(dot(qvec, emb[doc_id]), 4) for
+    candidates; their other columns (e.g. the sparse ``score``) ride along."""
     from sparkforward.score import dot_expr
 
     emb = load_embeddings(spark, sf_dir)
@@ -260,8 +261,7 @@ def _dense_scores(
         candidates.join(emb, candidates.doc_id == emb.vec_id)
         .join(F.broadcast(qvecs), "q_id")
         .select(
-            "q_id",
-            "doc_id",
+            *candidates.columns,
             F.round(dot_expr("q_vector", "embedding"), SCORE_DECIMALS).alias("dense"),
         )
     )
@@ -575,12 +575,9 @@ def q_interpolate_from_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = wand_topk(index, queries_df(spark), k=K_CAND).select(
         "q_id", F.col("id").cast("bigint").alias("doc_id"), "score"
     )
-    dense = _dense_scores(spark, sf_dir, cand.select("q_id", "doc_id"))
-    # dense is bounded by construction (<= K_CAND rows/query) but derived,
-    # so the planner cannot estimate it: without the hint this join planned
-    # as the pipeline's only SortMergeJoin (2 exchanges + 2 sorts on the
-    # serve path; guide §3.1 — pick the strategy deliberately)
-    final = cand.join(F.broadcast(dense), ["q_id", "doc_id"]).withColumn(
+    # the sparse score rides through the gather: joining the dense scores
+    # back to ``cand`` would run the WAND serve a second time
+    final = _dense_scores(spark, sf_dir, cand).withColumn(
         "score_int",
         F.round(
             F.lit(ALPHA) * F.col("score") + F.lit(1.0 - ALPHA) * F.col("dense"),
@@ -2578,23 +2575,27 @@ def _collect_qvecs(spark, sf_dir, mapping) -> dict[str, list[float]]:
     ids = list(mapping.values())
     rows: dict[int, list[float]] | None = None
     try:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+    except ImportError:  # no pyarrow on the driver: use Spark
+        pq = None
+    if pq is not None:
         # |queries| vectors from a LOCAL parquet fixture: read them on the
         # driver (row-group-pruned pyarrow scan) instead of launching a
         # Spark job — the same driver-side shortcut as query tokenization.
         # float32 -> Python float upcasts identically to a Spark collect,
-        # so downstream dot products are bit-identical.
-        import pyarrow.parquet as pq
-
-        path = f"{sf_dir}/embeddings.parquet"
-        tbl = pq.read_table(
-            path, columns=["vec_id", "embedding"],
-            filters=[("vec_id", "in", ids)],
-        )
-        rows = dict(zip(tbl["vec_id"].to_pylist(), tbl["embedding"].to_pylist()))
-        if set(rows) < set(ids):  # unexpected layout: fall back below
+        # so downstream dot products are bit-identical. Only a missing or
+        # unreadable file falls back; a type mismatch raises.
+        try:
+            tbl = pq.read_table(
+                f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"],
+                filters=[("vec_id", "in", ids)],
+            )
+            rows = dict(zip(tbl["vec_id"].to_pylist(), tbl["embedding"].to_pylist()))
+            if set(rows) < set(ids):  # unexpected layout: fall back below
+                rows = None
+        except (OSError, pa.ArrowInvalid):  # remote/exotic storage: use Spark
             rows = None
-    except Exception:  # noqa: BLE001 — remote/exotic storage: use Spark
-        rows = None
     if rows is None:
         emb = load_embeddings(spark, sf_dir)
         rows = {

@@ -220,8 +220,8 @@ class Ranking:
         """``alpha * self.score + (1 - alpha) * other.score``; missing -> 0.
 
         The reference's signature operator (ranking.py:293-326). One full
-        outer shuffle join on (q_id, id); with both sides pre-partitioned by
-        q_id (as our BM25/FF outputs are) Catalyst reuses the exchange.
+        outer shuffle join on (q_id, id). Spark runs each side's plan on its
+        own, so an ``other`` derived from ``self`` re-runs ``self``'s lineage.
         """
         d1 = minmax_normalize(self._df) if normalize else self._df
         d2 = minmax_normalize(other._df) if normalize else other._df

@@ -12,7 +12,7 @@ Reference semantics re-expressed as one lazy DataFrame DAG
 4. mode aggregation ``groupBy(q_id, id).agg(max|avg|first)``
    (``index/base.py:306-312``),
 5. score-column replacement (``index/base.py:461``): the output Ranking's
-   score IS the dense score; interpolation stays a separate explicit step.
+   score IS the dense score; ``interpolated_rerank`` interpolates instead.
 
 Missing IDs raise ``IndexError`` like the reference (``index/util.py:38-39``)
 via a cheap left-anti-join probe (optional at scale).
@@ -29,7 +29,6 @@ from collections.abc import Iterable, Mapping, Sequence
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sparkforward.index import Mode, VectorIndex
 from sparkforward.ranking import Ranking, add_ranks
@@ -66,15 +65,10 @@ def _query_vectors_df(
     query_vectors: DataFrame | Mapping[str, Sequence[float]] | None = None,
 ) -> DataFrame:
     """(q_id, q_vector) — encode distinct queries or accept precomputed."""
+    schema = "q_id string, q_vector array<float>"
     if query_vectors is not None:
         if isinstance(query_vectors, Mapping):
             rows = [(q, [float(x) for x in v]) for q, v in query_vectors.items()]
-            schema = T.StructType(
-                [
-                    T.StructField("q_id", T.StringType()),
-                    T.StructField("q_vector", T.ArrayType(T.FloatType())),
-                ]
-            )
             return spark.createDataFrame(rows, schema)
         return query_vectors.select("q_id", "q_vector")
     if encoder is None:
@@ -91,12 +85,6 @@ def _query_vectors_df(
         (r["q_id"], [float(x) for x in np.asarray(v, dtype=np.float32)])
         for r, v in zip(pairs, vecs)
     ]
-    schema = T.StructType(
-        [
-            T.StructField("q_id", T.StringType()),
-            T.StructField("q_vector", T.ArrayType(T.FloatType())),
-        ]
-    )
     return spark.createDataFrame(rows, schema)
 
 
@@ -113,6 +101,29 @@ def _check_missing_ids(candidates: DataFrame, id_vectors: DataFrame) -> None:
         raise IndexError(f"ID {missing[0]['id']} not found in the index.")
 
 
+def _gather(cand, id_vectors, qvec_df, mode: Mode, how: str) -> DataFrame:
+    """Join candidates to their vectors and query vectors (``how``), dot
+    JVM-side, and aggregate per (q_id, id) by mode. Every other candidate
+    column rides through the aggregate, so no caller joins back to the
+    candidates; with ``how="left"`` a pair without a vector keeps a null
+    ``ff_score``."""
+    carried = [c for c in cand.columns if c not in ("q_id", "id")]
+    joined = (
+        cand.join(id_vectors, "id", how)
+        .join(F.broadcast(qvec_df), "q_id", how)
+        .withColumn("_dot", dot_expr("q_vector", "vector"))
+    )
+    if mode == Mode.MAXP:
+        agg = F.max("_dot")
+    elif mode == Mode.AVEP:
+        agg = F.avg("_dot")
+    else:  # FIRSTP / PASSAGE: exactly one vector per id after the view filter
+        agg = F.first("_dot")
+    return joined.groupBy("q_id", "id").agg(
+        agg.cast("float").alias("ff_score"), *(F.first(c).alias(c) for c in carried)
+    )
+
+
 def compute_scores(
     candidates: DataFrame,
     index: VectorIndex,
@@ -121,7 +132,8 @@ def compute_scores(
     check_missing: bool = True,
     broadcast_candidates: bool = False,
 ) -> DataFrame:
-    """(q_id, id, ff_score) for every candidate pair.
+    """(q_id, id, ff_score, ...) for every candidate pair with a vector;
+    the candidates' other columns (e.g. ``score``, ``query``) are carried.
 
     The gather-join keys on the mode's lookup ID; MAXP/AVEP fan out to all
     passages of a doc, FIRSTP to the first-inserted one, PASSAGE to the
@@ -136,21 +148,8 @@ def compute_scores(
     id_vectors = index.vectors_for_mode(mode)
     if check_missing:
         _check_missing_ids(candidates, id_vectors)
-    cand = candidates.select("q_id", "id")
-    if broadcast_candidates:
-        cand = F.broadcast(cand)
-    joined = (
-        cand.join(id_vectors, "id")
-        .join(F.broadcast(qvec_df), "q_id")
-        .withColumn("_dot", dot_expr("q_vector", "vector"))
-    )
-    if mode == Mode.MAXP:
-        agg = F.max("_dot")
-    elif mode == Mode.AVEP:
-        agg = F.avg("_dot")
-    else:  # FIRSTP / PASSAGE: exactly one vector per id after the view filter
-        agg = F.first("_dot")
-    return joined.groupBy("q_id", "id").agg(agg.cast("float").alias("ff_score"))
+    cand = F.broadcast(candidates) if broadcast_candidates else candidates
+    return _gather(cand, id_vectors, qvec_df, mode, "inner")
 
 
 def ff_score(
@@ -165,8 +164,8 @@ def ff_score(
     """``Index.__call__`` equivalent (index/base.py:389-469): score a ranking.
 
     Returns a Ranking whose ``score`` IS the dense score (name
-    "fast-forward"); the sparse score is retained as column ``score_sparse``
-    for interpolation.
+    "fast-forward"), with the ``query`` column when the input has one;
+    candidates without a vector are dropped.
 
     ``batch_size`` (reference index/base.py:445-459) exists only to bound
     the reference's single-process peak memory; here partitioning IS the
@@ -179,18 +178,10 @@ def ff_score(
     spark = SparkSession.getActiveSession()
     qvec_df = _query_vectors_df(spark, ranking, encoder, query_vectors)
     scores = compute_scores(
-        ranking.df, index, qvec_df, mode=mode, check_missing=check_missing
+        ranking.df.drop("score"), index, qvec_df, mode=mode,
+        check_missing=check_missing,
     )
-    out = (
-        ranking.df.withColumnRenamed("score", "score_sparse")
-        .join(scores, ["q_id", "id"])
-        .withColumn("score", F.col("ff_score").cast("float"))
-        .drop("ff_score")
-    )
-    return Ranking(out.select(*(
-        ["q_id", "id", "score"]
-        + (["query"] if "query" in out.columns else [])
-    )), name="fast-forward")
+    return Ranking(scores.withColumnRenamed("ff_score", "score"), name="fast-forward")
 
 
 def interpolated_rerank(
@@ -205,14 +196,20 @@ def interpolated_rerank(
     """The flagship pipeline: ``alpha*sparse + (1-alpha)*dense`` re-ranking.
 
     Equivalent of ``bm25 % N >> FFScore(idx) >> FFInterpolate(alpha)``
-    (docs/pyterrier.md:10, util/pyterrier.py:26-83), fused into one DAG so
-    the candidate join happens once.
+    (docs/pyterrier.md:10, util/pyterrier.py:26-83) with the same rows as
+    ``sparse.interpolate(ff_score(sparse, ...), alpha)``: a candidate
+    without a vector (or of a query without one) scores ``alpha*sparse``.
+    The candidate ranking is read once — the gather left-joins the vectors
+    and carries the sparse score through its aggregate, so the first stage
+    runs once per call instead of once per join side.
     """
-    dense = ff_score(
-        sparse, index, encoder=encoder, query_vectors=query_vectors, mode=mode,
-        check_missing=False,
-    )
-    out = sparse.interpolate(dense, alpha)
+    spark = SparkSession.getActiveSession()
+    mode = mode or index.mode
+    qvec_df = _query_vectors_df(spark, sparse, encoder, query_vectors)
+    scored = _gather(sparse.df, index.vectors_for_mode(mode), qvec_df, mode, "left")
+    a = float(alpha)
+    score = a * F.col("score") + (1.0 - a) * F.coalesce(F.col("ff_score"), F.lit(0.0))
+    out = Ranking(scored.withColumn("score", score.cast("float")), name=sparse.name)
     return out.cut(k) if k is not None else out
 
 
@@ -333,13 +330,7 @@ def _early_stopping_driver(
         if not surviving:
             break
 
-    schema = T.StructType(
-        [
-            T.StructField("q_id", T.StringType()),
-            T.StructField("id", T.StringType()),
-            T.StructField("score", T.FloatType()),
-        ]
-    )
+    schema = "q_id string, id string, score float"
     return Ranking(spark.createDataFrame(out_rows, schema), name="fast-forward")
 
 
@@ -439,17 +430,15 @@ def early_stopping_scores(
         if surviving is not None:
             chunk = chunk.filter(F.col("q_id").isin(surviving))
         ff = compute_scores(
-            chunk, index, qvec_df, mode=mode, check_missing=False,
-            broadcast_candidates=True,
+            chunk.select("q_id", "id", "score"), index, qvec_df, mode=mode,
+            check_missing=False, broadcast_candidates=True,
         )
         if decimals is not None:
             ff = ff.withColumn("ff_score", F.round("ff_score", decimals))
         int_score = alpha * F.col("score") + (1.0 - alpha) * F.col("ff_score")
         if decimals is not None:
             int_score = F.round(int_score, decimals)
-        chunk_scores = (
-            chunk.join(ff, ["q_id", "id"]).withColumn("int_score", int_score)
-        ).persist()
+        chunk_scores = ff.withColumn("int_score", int_score).persist()
         chunks.append(chunk_scores)
         accumulated = (
             chunk_scores

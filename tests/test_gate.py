@@ -186,6 +186,37 @@ def test_wand_index_cache_builds_once_and_release_removes_dir(spark):
     assert not os.path.exists(path)
 
 
+def test_qvec_read_falls_back_only_for_missing_files(spark, tmp_path, monkeypatch):
+    """The driver-side query-vector read falls back to a Spark scan when the
+    embeddings file is missing, but a vec_id type mismatch (string ids,
+    integer mapping) raises instead of silently switching paths."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkforward import queries
+
+    scans = []
+
+    def spark_scan(spark_, sf_dir):
+        scans.append(sf_dir)
+        return spark_.createDataFrame(
+            [(1, [1.0, 2.0])], "vec_id bigint, embedding array<float>"
+        )
+
+    monkeypatch.setattr(queries, "load_embeddings", spark_scan)
+    missing = str(tmp_path / "missing")
+    assert queries._collect_qvecs(spark, missing, {"q1": 1}) == {"q1": [1.0, 2.0]}
+    assert scans == [missing]
+
+    pq.write_table(pa.table({
+        "vec_id": pa.array(["1", "2"]),
+        "embedding": pa.array([[1.0, 2.0], [3.0, 4.0]], pa.list_(pa.float32())),
+    }), str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(TypeError):
+        queries._collect_qvecs(spark, str(tmp_path), {"q1": 1})
+    assert scans == [missing]
+
+
 def test_caches_auto_expire_across_real_session_stop(tmp_path):
     """Integration: populate both engine caches, stop the session, start a
     new one — the caches are empty and the new context has nothing

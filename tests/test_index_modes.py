@@ -215,3 +215,79 @@ def test_delete_ids_tombstone_semantics(spark, doc_psg_index, doc_ranking, tmp_p
     # in-memory (pathless) index: pure filtered view
     mem = VectorIndex.empty(spark).add(VECTORS, doc_ids=DOC_IDS, psg_ids=PSG_IDS)
     assert mem.delete_ids(["d0"]).doc_ids == {"d1", "d2", "d3"}
+
+
+# ------------------------------------------- single-reference re-ranking #
+#: precomputed query vectors; MISSING_Q2 omits q2 on purpose
+QVECS = {"q1": [1.0, 0.0, 2.0, 0.0, 1.0], "q2": [0.5, 1.0, 0.0, 1.0, 3.0]}
+MISSING_Q2 = {"q1": QVECS["q1"]}
+
+
+def _rows(ranking: Ranking) -> tuple[list[str], list[tuple]]:
+    df = ranking.df
+    return df.columns, sorted(tuple(r) for r in df.collect())
+
+
+def _reference_rerank(sparse, index, alpha, query_vectors, mode, k=None):
+    """The composition interpolated_rerank replaces: ff_score, then a
+    full-outer Ranking.interpolate, then cut."""
+    dense = ff_score(sparse, index, query_vectors=query_vectors, mode=mode,
+                     check_missing=False)
+    out = sparse.interpolate(dense, alpha)
+    return out.cut(k) if k is not None else out
+
+
+@pytest.mark.parametrize("mode", [Mode.MAXP, Mode.AVEP, Mode.FIRSTP, Mode.PASSAGE])
+@pytest.mark.parametrize("with_queries", [True, False])
+def test_interpolated_rerank_matches_composition(spark, doc_psg_index, mode, with_queries):
+    """interpolated_rerank reads the ranking once, yet returns exactly the
+    rows of ff_score + Ranking.interpolate: a candidate with no vector
+    ("x") and every candidate of a query with no vector (q2, when the
+    mapping omits it) score alpha*sparse, and the query column survives."""
+    from sparkforward.score import interpolated_rerank
+
+    base = PSG_RUN if mode == Mode.PASSAGE else DOC_RUN
+    run = {q: {**ids, "x": 7} for q, ids in base.items()}
+    sparse = Ranking.from_run(spark, run, queries=QUERIES if with_queries else None)
+    qvecs = QVECS if with_queries else MISSING_Q2
+    for k in (None, 3):
+        got = interpolated_rerank(sparse, doc_psg_index, 0.3, query_vectors=qvecs,
+                                  mode=mode, k=k)
+        want = _reference_rerank(sparse, doc_psg_index, 0.3, qvecs, mode, k)
+        assert _rows(got) == _rows(want)
+        assert got.has_queries == with_queries
+    scores = interpolated_rerank(sparse, doc_psg_index, 0.3, query_vectors=qvecs,
+                                 mode=mode)
+    assert scores["q1"]["x"] == np.float32(0.3 * 7)
+    if not with_queries:
+        assert scores["q2"] == {
+            i: np.float32(0.3 * s) for i, s in run["q2"].items()
+        }
+
+
+def test_ff_score_transform_keeps_raw_sparse_score(spark, doc_psg_index):
+    """ff_score_transform carries score_0 through the gather: rows equal
+    the ff_score output joined back to the run, and score_0 keeps the
+    run's own (double) type."""
+    from pyspark.sql import functions as F
+
+    from sparkforward.pipeline import ff_score_transform
+
+    run = spark.createDataFrame(
+        [(q, QUERIES[q], d, s + 0.1) for q, ids in DOC_RUN.items()
+         for d, s in ids.items()] + [("q1", QUERIES["q1"], "x", 9.0)],
+        "qid string, query string, docno string, score double",
+    )
+    got = ff_score_transform(run, doc_psg_index, encoder=ENCODER, mode=Mode.AVEP)
+    internal = run.withColumnRenamed("qid", "q_id").withColumnRenamed("docno", "id")
+    scored = ff_score(Ranking(internal), doc_psg_index, encoder=ENCODER,
+                      mode=Mode.AVEP, check_missing=False)
+    want = scored.df.join(
+        internal.select("q_id", "id", F.col("score").alias("score_0")), ["q_id", "id"]
+    )
+    want = want.withColumnRenamed("q_id", "qid").withColumnRenamed("id", "docno")
+    assert got.columns[:-1] == want.columns
+    assert dict(got.dtypes)["score_0"] == "double"
+    assert sorted(tuple(r)[:-1] for r in got.collect()) == sorted(
+        tuple(r) for r in want.collect()
+    )

@@ -79,19 +79,22 @@ def test_spread_sits_at_python_boundaries_only(spark, monkeypatch):
         bm25._tf_persisted(docs, "doc_id", "text")
     )
     bm25._TF_CACHE.release()
-    # above the floor, the exchange feeds exactly the Python kernels
+    # above the floor, the exchange feeds exactly the Python kernels; the
+    # frames cached under the patched floor are released even on failure
     monkeypatch.setattr(tokenize, "SPREAD_MIN_BYTES", 0)
-    for df in (
-        bm25._tf_persisted(docs, "doc_id", "text"),
-        repetition_stats(docs),
-        simhash(docs),
-    ):
-        plan = _plan(df)
-        i_ex = plan.find("RoundRobinPartitioning")
-        i_py = plan.find("MapInPandas")
-        assert 0 <= i_py < i_ex, plan[:400]  # exchange feeds the kernel
-    assert "Exchange" not in _plan(token_counts(docs))
-    bm25._TF_CACHE.release()
+    try:
+        for df in (
+            bm25._tf_persisted(docs, "doc_id", "text"),
+            repetition_stats(docs),
+            simhash(docs),
+        ):
+            plan = _plan(df)
+            i_ex = plan.find("RoundRobinPartitioning")
+            i_py = plan.find("MapInPandas")
+            assert 0 <= i_py < i_ex, plan[:400]  # exchange feeds the kernel
+        assert "Exchange" not in _plan(token_counts(docs))
+    finally:
+        bm25._TF_CACHE.release()
 
 
 def test_bm25_scan_is_pruned(spark):
@@ -153,6 +156,54 @@ def test_interpolate_uses_broadcast_hash_joins(spark):
     plan = _plan(q.q_interpolate_rerank(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def _final_plan(df) -> str:
+    """The final (post-AQE) physical plan of ``df`` after collecting it."""
+    df.collect()
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
+@pytest.fixture(scope="module")
+def rerank_inputs(spark, docs_index):
+    """A WAND candidate ranking over the fixture plus the gate's MAXP
+    passage-vector index (two passages per doc) and one query vector."""
+    from sparkforward import queries as q
+    from sparkforward.index import Mode
+    from sparkforward.ranking import Ranking
+    from sparkforward.wand import wand_topk
+
+    vectors = q._psg_vector_index(spark, SF, Mode.MAXP)
+    index, qdf = docs_index
+    qvecs = q._collect_qvecs(spark, SF, {"q1": 3})
+    return Ranking(wand_topk(index, qdf, k=50)), vectors, qvecs
+
+
+def test_fast_forward_scorers_serve_the_first_stage_once(spark, rerank_inputs):
+    """Every Fast-Forward scorer reads its candidate ranking once: the
+    final plan holds ONE FlatMapGroupsInPandas (the WAND serve kernel) and
+    no FullOuter join — joining scores back to the ranking would re-run
+    the first stage per join side, since Spark reuses none of them."""
+    from sparkforward.score import ff_score, interpolated_rerank
+
+    sparse, vectors, qvecs = rerank_inputs
+    for out in (
+        interpolated_rerank(sparse, vectors, 0.2, query_vectors=qvecs, k=10),
+        ff_score(sparse, vectors, query_vectors=qvecs, check_missing=False),
+    ):
+        plan = _final_plan(out.df)
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert "FullOuter" not in plan, plan
+
+
+def test_interpolate_from_wand_serves_once(spark):
+    """The gate's full WAND -> dense -> interpolate entry carries the sparse
+    score through the gather instead of joining back to the candidates."""
+    from sparkforward import queries as q
+
+    plan = _final_plan(q.q_interpolate_from_wand(spark, SF))
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "FullOuter" not in plan, plan
 
 
 def test_textstats_is_pure_jvm(spark):

@@ -42,8 +42,10 @@ def main() -> None:
             txt = explain_str(df)
         except Exception as e:  # noqa: BLE001 — record the failure, keep going
             txt = f"EXPLAIN FAILED: {e!r}"
+        # plans quote string literals verbatim, and a NUL byte (e.g. the
+        # BM25 "\x00stats" marker) would make the dump a binary file
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as fh:
-            fh.write(txt + "\n")
+            fh.write(txt.replace("\x00", "\\x00") + "\n")
         print(f"dumped {name}", file=sys.stderr)
     spark.stop()
 
