@@ -140,6 +140,7 @@ from sparkforward.postings import (
     salt_partials,
     varbyte_decode,
 )
+from sparkforward.session import local_frame
 
 _BLOCK_COLS = [f.name for f in BLOCK_POSTING_SCHEMA.fields]
 
@@ -470,9 +471,7 @@ def append_to_index(
             if resharded:
                 base_input = base_post.join(
                     F.broadcast(
-                        spark.createDataFrame(
-                            [(t,) for t in resharded], "term string"
-                        )
+                        local_frame(spark, [(t,) for t in resharded], "term string")
                     ),
                     "term",
                     "left_semi",
@@ -521,9 +520,7 @@ def append_to_index(
             tomb = (
                 delta_df.select("term")
                 if mode == "segment"
-                else spark.createDataFrame(
-                    [(t,) for t in resharded], "term string"
-                )
+                else local_frame(spark, [(t,) for t in resharded], "term string")
             )
             tomb.write.mode("overwrite").parquet(
                 os.path.join(gen_dir, "tombstones")
@@ -799,8 +796,8 @@ def delete_docs(
             "overwrite"
         ).parquet(os.path.join(gen_dir, "terms"))
         all_dels = np.union1d(old_dels, new_ids)
-        spark.createDataFrame(
-            [(int(x),) for x in all_dels], "doc_id long"
+        local_frame(
+            spark, [(int(x),) for x in all_dels], "doc_id long"
         ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(gen_dir, "deletes")
         )

@@ -107,7 +107,7 @@ def _scores_for_pairs(
     from sparkforward.tokenize import corpus_globals
 
     spark = tf.sparkSession
-    qt = spark.createDataFrame(pair_rows, "q_id string, term string")
+    qt = local_frame(spark, pair_rows, "q_id string, term string")
     tf_q = tf.filter(F.col("term").isin(term_list))
     df_stats = tf_q.groupBy("term").agg(F.count("*").alias("df"))
     contribs = (
@@ -129,7 +129,7 @@ def _scores_for_pairs(
 #: round-1 audit flagged (bm25.py:97). Entries auto-expire when their
 #: session stops (SessionScopedCache sweeps on every access); an explicit
 #: :func:`release_caches` remains for within-session corpus rotation.
-from sparkforward.session import SessionScopedCache  # noqa: E402
+from sparkforward.session import SessionScopedCache, local_frame  # noqa: E402
 
 _TF_CACHE = SessionScopedCache()
 
@@ -138,7 +138,7 @@ def _tf_persisted(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     sess = docs.sparkSession
     try:
         key = (docs.semanticHash(), id_col, text_col)
-    except Exception:  # noqa: BLE001 — hashing unsupported: fall back, uncached
+    except NotImplementedError:  # hashing unsupported: fall back, uncached
         key = None
     if key is not None:
         hit = _TF_CACHE.get(sess, key)
@@ -276,7 +276,7 @@ def bm25_rm3_topk(
             if t not in seen:
                 seen.add(t)
                 pairs.append((r["q_id"], t))
-    qt = spark.createDataFrame(pairs, "q_id string, term string")
+    qt = local_frame(spark, pairs, "q_id string, term string")
 
     def score_pairs(pair_rows: list[tuple[str, str]], term_list: list[str]) -> DataFrame:
         # statistics as embedded broadcast subtrees — one action per

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkforward.session import local_frame
+
 INDEX_SCHEMA = T.StructType(
     [
         T.StructField("vec_idx", T.LongType()),
@@ -71,7 +73,7 @@ class VectorIndex:
     # ------------------------------ build ------------------------------ #
     @classmethod
     def empty(cls, spark: SparkSession, mode: Mode = Mode.PASSAGE) -> "VectorIndex":
-        return cls(spark.createDataFrame([], INDEX_SCHEMA), mode=mode)
+        return cls(local_frame(spark, [], INDEX_SCHEMA), mode=mode)
 
     def __len__(self) -> int:
         return self.df.count()
@@ -127,10 +129,10 @@ class VectorIndex:
 
         spark = SparkSession.getActiveSession()
         rows = [
-            (int(cur_len + i), doc_ids[i], psg_ids[i], [float(x) for x in vectors[i]])
+            (int(cur_len + i), doc_ids[i], psg_ids[i], vectors[i])
             for i in range(n)
         ]
-        new_df = spark.createDataFrame(rows, INDEX_SCHEMA)
+        new_df = local_frame(spark, rows, INDEX_SCHEMA)
         return VectorIndex(
             self.df.unionByName(new_df), mode=self.mode, quantizer=self.quantizer,
             path=self.path,
@@ -270,7 +272,7 @@ class VectorIndex:
             ids = sorted({str(x) for x in doc_ids})
             if not ids:
                 return self
-            ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id string")
+            ids_df = local_frame(spark, [(i,) for i in ids], "doc_id string")
         missing = (
             ids_df.join(self.df.select("doc_id"), "doc_id", "left_anti")
             .limit(5)
@@ -466,7 +468,7 @@ def index_from_dicts(
     buf: list[tuple] = []
 
     def flush(buf):
-        return spark.createDataFrame(buf, schema)
+        return local_frame(spark, buf, schema)
 
     for i, d in enumerate(corpus):
         buf.append((d.get("doc_id"), d.get("psg_id"), d["text"], i))

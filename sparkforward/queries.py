@@ -72,15 +72,15 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries_df(spark: SparkSession, subset: list[str] | None = None) -> DataFrame:
-    """Fixed-query-set local relation, memoized per (session, subset) —
-    repeated entries otherwise pay a fresh createDataFrame conversion each
-    call (a few hundred ms of py4j per query at fixture scale)."""
+    """Fixed-query set as an Arrow local relation (:func:`local_frame`, a
+    JVM ``LocalTableScan``: reading or broadcasting it runs no job),
+    memoized per (session, subset) so repeated entries reuse one frame."""
     key = (tuple(subset) if subset is not None else None,)
     hit = _QUERIES_DF_CACHE.get(spark, key)
     if hit is not None:
         return hit
     rows = [(q, t) for q, t in QUERY_SET if subset is None or q in subset]
-    df = spark.createDataFrame(rows, "q_id string, query string")
+    df = local_frame(spark, rows, "q_id string, query string")
     _QUERIES_DF_CACHE.put(spark, key, df)
     return df
 
@@ -143,7 +143,7 @@ def _bm25_ctes(subset: list[str] | None = None, source: str = "documents") -> st
 #: retrieval run — so the engine materializes it once per corpus+session
 #: instead of re-deriving it per downstream operator. Entries auto-expire
 #: when their session stops (SessionScopedCache sweeps on access).
-from sparkforward.session import SessionScopedCache, is_alive  # noqa: E402
+from sparkforward.session import SessionScopedCache, is_alive, local_frame  # noqa: E402
 
 _RANKED_CACHE = SessionScopedCache()
 #: (session, subset) -> fixed-query-set local relation (see queries_df)
@@ -338,7 +338,7 @@ def q_bm25_wand_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (previously bench/pytest-guarded only)."""
     from sparkforward.wand import wand_topk
 
-    qdf = spark.createDataFrame(BATCH_QUERY_SET, "q_id string, query string")
+    qdf = local_frame(spark, BATCH_QUERY_SET, "q_id string, query string")
     return wand_topk(_wand_index(spark, sf_dir), qdf, k=K_FINAL)
 
 
@@ -1375,7 +1375,7 @@ def q_bm25_rm3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Anserini/PyTerrier first-stage stack ships, over the native engine."""
     from sparkforward.bm25 import bm25_rm3_topk
 
-    qdf = spark.createDataFrame(QUERY_SET, "q_id string, query string")
+    qdf = local_frame(spark, QUERY_SET, "q_id string, query string")
     return bm25_rm3_topk(
         load_documents(spark, sf_dir), qdf,
         k=10, k_fb=RM3_K_FB, n_exp=RM3_N_EXP, exp_weight=RM3_WEIGHT,
@@ -1473,9 +1473,7 @@ def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         quant = _fitted_pq(sf_dir, X=_pq_fit_matrix(spark, sf_dir))
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1604,9 +1602,7 @@ def q_similarity_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _IVFPQ_DIR_CACHE.put(spark, (sf_dir,), d)
     index = load_ivfpq_index(spark, d)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1657,9 +1653,7 @@ def q_similarity_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_ivfpq_index(spark, d, emb.filter(F.col("vec_id") >= cut))
         _IVFPQ_DIR_CACHE.put(spark, ("appended", sf_dir), d)
     index = load_ivfpq_index(spark, d)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -1959,9 +1953,7 @@ def q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.similarity import lsh_topk_deterministic
 
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -2015,9 +2007,7 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.similarity import ivf_topk
 
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -2036,9 +2026,7 @@ def q_similarity_ivf_kernel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.similarity import ivf_topk
 
     emb = load_embeddings(spark, sf_dir)
-    qmap = spark.createDataFrame(
-        list(MODE_QVEC_ID.items()), "q_id string, qvec_id long"
-    )
+    qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
         "q_id", F.col("embedding").alias("q_vector")
     )
@@ -2608,16 +2596,13 @@ def _collect_qvecs(spark, sf_dir, mapping) -> dict[str, list[float]]:
 
 
 def _local_qvec_df(spark, sf_dir, mapping) -> DataFrame:
-    """(q_id, q_vector:array<float>) as a LOCAL relation from the memoized
-    qvec collect — broadcasting it launches no job, unlike the old
-    qmap ⋈ embeddings subtree that re-scanned the embeddings table inside
-    every dense entry's plan. float32 values round-trip exactly through
-    the driver, so downstream dot products are bit-identical."""
+    """(q_id, q_vector:array<float>) from the memoized qvec collect, as an
+    Arrow local relation (:func:`local_frame`): it plans as a JVM
+    ``LocalTableScan``, so broadcasting it runs no job and no scan of the
+    embeddings table. float32 values round-trip exactly through the
+    driver, so downstream dot products are bit-identical."""
     qv = _collect_qvecs(spark, sf_dir, mapping)
-    return spark.createDataFrame(
-        [(q, [float(x) for x in v]) for q, v in qv.items()],
-        "q_id string, q_vector array<float>",
-    )
+    return local_frame(spark, list(qv.items()), "q_id string, q_vector array<float>")
 
 
 def q_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkforward.session import local_frame
+
 if TYPE_CHECKING:
     from pathlib import Path
 
@@ -142,8 +144,8 @@ class Ranking:
         df = self._df.drop("query") if "query" in self._df.columns else self._df
         if isinstance(queries, Mapping):
             spark = SparkSession.getActiveSession()
-            qdf = spark.createDataFrame(
-                list(queries.items()),
+            qdf = local_frame(
+                spark, list(queries.items()),
                 T.StructType(
                     [
                         T.StructField("q_id", T.StringType()),
@@ -315,7 +317,7 @@ class Ranking:
                 T.StructField("score", T.FloatType()),
             ]
         )
-        return cls(spark.createDataFrame(rows, schema), name=name, queries=queries)
+        return cls(local_frame(spark, rows, schema), name=name, queries=queries)
 
     def to_ir_measures(self) -> DataFrame:
         """Project to ir-measures column names. Ref: util/__init__.py:29-37."""

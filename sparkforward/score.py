@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from sparkforward.index import Mode, VectorIndex
 from sparkforward.ranking import Ranking, add_ranks
+from sparkforward.session import local_frame
 
 
 def dot_expr(a, b):
@@ -68,8 +69,7 @@ def _query_vectors_df(
     schema = "q_id string, q_vector array<float>"
     if query_vectors is not None:
         if isinstance(query_vectors, Mapping):
-            rows = [(q, [float(x) for x in v]) for q, v in query_vectors.items()]
-            return spark.createDataFrame(rows, schema)
+            return local_frame(spark, list(query_vectors.items()), schema)
         return query_vectors.select("q_id", "q_vector")
     if encoder is None:
         raise ValueError("Either an encoder or precomputed query_vectors is required.")
@@ -81,11 +81,8 @@ def _query_vectors_df(
         ranking.df.select("q_id", "query").dropDuplicates(["q_id"]).collect()
     )
     vecs = encoder([r["query"] for r in pairs])
-    rows = [
-        (r["q_id"], [float(x) for x in np.asarray(v, dtype=np.float32)])
-        for r, v in zip(pairs, vecs)
-    ]
-    return spark.createDataFrame(rows, schema)
+    rows = [(r["q_id"], np.asarray(v, dtype=np.float32)) for r, v in zip(pairs, vecs)]
+    return local_frame(spark, rows, schema)
 
 
 def _check_missing_ids(candidates: DataFrame, id_vectors: DataFrame) -> None:
@@ -331,7 +328,7 @@ def _early_stopping_driver(
             break
 
     schema = "q_id string, id string, score float"
-    return Ranking(spark.createDataFrame(out_rows, schema), name="fast-forward")
+    return Ranking(local_frame(spark, out_rows, schema), name="fast-forward")
 
 
 def early_stopping_scores(

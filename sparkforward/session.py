@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -25,6 +26,9 @@ def get_spark(
 
     :param cores: local core count; defaults to ``$SPARK_GRAFT_CPUS`` or 32.
     :param shuffle_partitions: defaults to ``max(cores, 32)``.
+
+    The driver heap is ``$SPARK_DRIVER_MEM`` when set, else
+    :func:`default_driver_memory`.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -42,7 +46,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # deterministic session timezone so timestamp-derived results are stable
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -50,6 +57,47 @@ def get_spark(
     spark = builder.getOrCreate()
     _prewarm_python_workers(spark, cores)
     return spark
+
+
+def default_driver_memory() -> str:
+    """A third of physical memory, in MiB (Spark's ``"<n>m"`` form).
+
+    G1 grows the heap toward its cap as a long session allocates, so a cap
+    sized for a large host lets the driver's resident memory outgrow a
+    small host's RAM; a third leaves room for the Python workers and the
+    page cache."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 3 // 2**20}m"
+
+
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (positional tuples), built as an
+    Arrow local relation.
+
+    ``spark.createDataFrame(<list>, schema)`` pickles the rows into a Python
+    RDD, so every action over it, a broadcast of it included, runs a
+    Python-worker job. The same rows sent as a ``pyarrow.Table`` plan as a
+    JVM ``LocalTableScan``, which launches no job. Each column is built as
+    one typed Arrow array, so values convert as on the list path (doubles
+    into ``array<float>`` round to float32) and a value that does not fit
+    its type raises (``pyarrow.ArrowInvalid``), as does a row whose width
+    differs from the schema's.
+
+    :param schema: a DDL string (``"q_id string, n int"``) or a StructType.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    )
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:

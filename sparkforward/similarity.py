@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkforward.score import dot_expr
+from sparkforward.session import local_frame
 
 
 def cosine_expr(a: str, b: str):
@@ -512,7 +513,7 @@ def ivfpq_topk(
             quantizer,
             {r["q_id"]: r["q_vector"] for r in query_vectors.collect()},
         )
-    lut_df = spark.createDataFrame(luts, "q_id string, lut array<double>")
+    lut_df = local_frame(spark, luts, "q_id string, lut array<double>")
 
     table = _ivfpq_codes_table(emb, quantizer, centroids, id_col, vec_col)
     probes = query_vectors.select(
@@ -879,9 +880,9 @@ def ivfpq_index_topk(
     qvecs = {r["q_id"]: r["q_vector"] for r in query_vectors.collect()}
     if luts is None:
         luts = build_adc_luts(index.quantizer, qvecs)
-    lut_df = spark.createDataFrame(luts, "q_id string, lut array<double>")
+    lut_df = local_frame(spark, luts, "q_id string, lut array<double>")
     probe_rows = driver_probe_lists(qvecs, index.centroids, n_probe)
-    probes = spark.createDataFrame(probe_rows, "q_id string, cent_id int")
+    probes = local_frame(spark, probe_rows, "q_id string, cent_id int")
     probe_cids = sorted({c for _q, c in probe_rows})
     M, Ks, _dsub = index.quantizer.codebooks.shape
     table = index.codes.filter(F.col("cent_id").isin(probe_cids)).select(

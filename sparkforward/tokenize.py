@@ -57,11 +57,13 @@ def tokenize(text: str) -> list[str]:
     return TOKEN_RE.findall(text.lower())
 
 
-#: below this many input bytes the spread is skipped: a single-task Python
-#: kernel over <4 MB of text finishes in well under a second, while the
-#: round-robin exchange + per-task scheduling it would buy cost more
-#: (drift-controlled A/B, round 8: the exchange made fixture-scale BM25
-#: ~10% slower; a data-size floor, not a core-count constant)
+#: below this many input bytes the spread is skipped. The bytes are the
+#: input files' compressed on-disk size (``os.stat``), not raw text: at
+#: snappy's ~3-4x on text the floor is ~12-16 MB of text. Under it the
+#: round-robin exchange + per-task scheduling cost more than the single
+#: Python task they would split (drift-controlled A/B, round 8, on
+#: fixtures of at most 594 KB on disk: the exchange made BM25 ~10%
+#: slower; a data-size floor, not a core-count constant)
 SPREAD_MIN_BYTES = 4 << 20
 
 
@@ -103,7 +105,7 @@ def spread_small_input(docs: DataFrame) -> DataFrame:
         n_splits = max(len(files), -(-total // max_split))
         if n_splits * 2 <= cores:
             return docs.repartition(cores)
-    except Exception:  # noqa: BLE001 — exotic plans: keep the input as-is
+    except (OSError, ValueError):  # file gone mid-stat, unparsable split size
         pass
     return docs
 

@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 
 from sparkforward.bm25 import B, K1, SCORE_DECIMALS
 from sparkforward.postings import PostingIndex, varbyte_decode
+from sparkforward.session import local_frame
 
 #: sentinel "no more docs in this shard" for shallow_bound's block-last slot
 _NO_DOC = 2**62
@@ -1005,8 +1006,8 @@ def _serve_blocked(
         "q_id", "serve_shard", "idf", "q_n_serve", "theta",
     ]
     if survive:
-        skey = spark.createDataFrame(
-            survive,
+        skey = local_frame(
+            spark, survive,
             "q_id string, serve_shard int, term string, salt int, block_no int, "
             "idf double, q_n_serve int, theta double",
         )
@@ -1016,8 +1017,8 @@ def _serve_blocked(
             .select(*sel_cols)
         )
     if whole_rows:
-        wkey = spark.createDataFrame(
-            whole_rows,
+        wkey = local_frame(
+            spark, whole_rows,
             "q_id string, serve_shard int, term string, salt int, "
             "idf double, q_n_serve int, theta double",
         )
@@ -1053,8 +1054,8 @@ def _serve_blocked(
                     ).otherwise(F.lit(0.0))
                 )
             contrib = contrib + F.greatest(*cases)
-        ckey = spark.createDataFrame(
-            coarse_rows,
+        ckey = local_frame(
+            spark, coarse_rows,
             "q_id string, serve_shard int, term string, salt int, "
             "idf double, q_n_serve int, theta double, cother double",
         )
@@ -1327,11 +1328,12 @@ def wand_topk(
             legacy, deletes=deletes, deletes_bc=deletes_bc,
         )
         if per_shard is None:
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(spark, [], RESULT_SCHEMA)
     else:
         # legacy whole-row layout (pre-round-4 index): gather entire
         # (term, salt) rows; laziness then saves decode but not I/O
-        qt_meta = spark.createDataFrame(
+        qt_meta = local_frame(
+            spark,
             [(q, t, meta[t][0], q_n_serve[q]) for q, ts in q_terms.items() for t in ts],
             "q_id string, term string, idf double, q_n_serve int",
         )

@@ -110,3 +110,44 @@ def test_rm3_expands_and_changes_ranking(spark):
     zero = {(r["q_id"], r["id"], r["rank"]) for r in
             bm25_rm3_topk(docs, qdf, k=10, exp_weight=0.0).collect()}
     assert zero == plain  # weight 0 degenerates to plain BM25
+
+
+def test_tf_cache_key_fallback_is_narrow(spark, monkeypatch):
+    """An unsupported ``semanticHash`` serves uncached; any other error
+    while keying the tf cache raises instead of silently going uncached."""
+    from sparkforward import bm25
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+    def unsupported():
+        raise NotImplementedError("semanticHash")
+
+    monkeypatch.setattr(docs, "semanticHash", unsupported)
+    n_cached = len(bm25._TF_CACHE)
+    bm25._tf_persisted(docs, "doc_id", "text").unpersist()
+    assert len(bm25._TF_CACHE) == n_cached
+
+    def broken():
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(docs, "semanticHash", broken)
+    with pytest.raises(RuntimeError, match="boom"):
+        bm25._tf_persisted(docs, "doc_id", "text")
+
+
+def test_spread_small_input_fallback_is_narrow(spark, monkeypatch):
+    """A layout that cannot be read (a file gone mid-stat) keeps the input
+    as-is; an unexpected error raises instead of silently skipping the
+    spread."""
+    from sparkforward.tokenize import spread_small_input
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    monkeypatch.setattr(docs, "inputFiles", lambda: ["file:/nonexistent/x.parquet"])
+    assert spread_small_input(docs) is docs
+
+    def broken():
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(docs, "inputFiles", broken)
+    with pytest.raises(RuntimeError, match="boom"):
+        spread_small_input(docs)

@@ -5,9 +5,12 @@ pushdown, pruning, broadcast choice, no accidental cross products — so a
 refactor that silently degrades a plan fails CI, not a 100 TB run.
 """
 
+import ast
 import os
 
 import pytest
+
+from sparkforward.session import local_frame
 
 SF = "/root/testdata/sf0.001"
 
@@ -128,9 +131,7 @@ def docs_index(spark, tmp_path_factory):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     path = str(tmp_path_factory.mktemp("planidx"))
     index = build_inverted_index(docs, path, num_partitions=4)
-    qdf = spark.createDataFrame(
-        [("q1", "spark query join")], "q_id string, query string"
-    )
+    qdf = local_frame(spark, [("q1", "spark query join")], "q_id string, query string")
     return index, qdf
 
 
@@ -204,6 +205,91 @@ def test_interpolate_from_wand_serves_once(spark):
     plan = _final_plan(q.q_interpolate_from_wand(spark, SF))
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert "FullOuter" not in plan, plan
+
+
+@pytest.fixture(scope="module")
+def pruning_index(spark, tmp_path_factory):
+    """600 docs of five common terms plus a rare term clustered in doc-id
+    space, in blocks of 8: selective queries prune blocks, common-term
+    queries gather whole series, and a tiny metadata budget goes coarse."""
+    import numpy as np
+
+    from sparkforward.postings import build_inverted_index
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for i in range(600):
+        toks = list(rng.choice([f"c{j}" for j in range(5)], size=20))
+        if 100 <= i < 112:
+            toks += ["rarezz"] * 5
+        rows.append((i, " ".join(toks)))
+    docs = local_frame(spark, rows, "doc_id long, text string")
+    return build_inverted_index(
+        docs.repartition(3), str(tmp_path_factory.mktemp("pruneidx")),
+        num_partitions=3, block_size=8,
+        salt_threshold=100, n_salt=4, target_shard_postings=200,
+    )
+
+
+@pytest.mark.parametrize("path", ["whole", "survive", "coarse"])
+def test_wand_serve_plans_no_python_rdd(spark, pruning_index, path):
+    """Each WAND key-table path (whole-series, pruned per-block, coarse)
+    broadcasts an Arrow local relation: after collecting, the final plan
+    holds no ``ExistingRDD`` (a Python RDD costs a Python-worker job on
+    every broadcast)."""
+    from sparkforward.wand import wand_topk
+
+    query, budget = {
+        "whole": ("c0 c1", None), "survive": ("rarezz c0", None),
+        "coarse": ("rarezz c0", 1),
+    }[path]
+    qdf = local_frame(spark, [("q1", query)], "q_id string, query string")
+    io: dict = {}
+    out = wand_topk(pruning_index, qdf, k=5, io_stats=io, max_meta_blocks=budget)
+    plan = _final_plan(out)
+    assert "ExistingRDD" not in plan, plan
+    if path == "coarse":
+        assert io["coarse_terms"] > 0, io
+    else:
+        assert io.get("coarse_terms", 0) == 0, io
+        pruned = io["bytes_gathered"] < io["bytes_total"]
+        assert pruned == (path == "survive"), io
+
+
+def test_rerank_with_query_vector_mapping_plans_no_python_rdd(spark, rerank_inputs):
+    """``interpolated_rerank`` given a ``query_vectors`` mapping builds the
+    query-vector table as an Arrow local relation."""
+    from sparkforward.score import interpolated_rerank
+
+    sparse, vectors, qvecs = rerank_inputs
+    out = interpolated_rerank(sparse, vectors, 0.2, query_vectors=qvecs, k=10)
+    plan = _final_plan(out.df)
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_engine_builds_driver_rows_only_through_local_frame():
+    """No ``createDataFrame(`` call under ``sparkforward/`` outside
+    ``session.local_frame``: one way to turn driver rows into a frame."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "sparkforward")
+    found = []
+    for name in sorted(os.listdir(pkg)):
+        if not name.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(pkg, name)).read())
+        allowed = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "local_frame"
+            and name == "session.py"
+            for n in ast.walk(f)
+        }
+        found += [
+            f"{name}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame" and id(n) not in allowed
+        ]
+    assert not found, found
 
 
 def test_textstats_is_pure_jvm(spark):
