@@ -95,7 +95,7 @@ mode exists:
     O(log df) times over the index's lifetime, amortized O(bytes · log)
     instead of O(bytes · appends).
   - **Additive term dictionaries.** Each lsm segment stores its DELTA's
-    (term, df) only; :func:`postings.compose_segment_terms` sums them at
+    (term, df) only; :func:`postings.current_terms` sums them at
     load and re-derives idf/n_shards under the current corpus — so the
     dictionary write is O(delta vocabulary) too.
 
@@ -131,7 +131,6 @@ from sparkforward.postings import (
     _build_partials,
     attach_term_meta,
     compose_segment_postings,
-    compose_segment_terms,
     current_terms,
     head_map,
     index_data_root,
@@ -245,12 +244,9 @@ def _stored_head(stats: dict, base_terms: DataFrame) -> dict[str, int]:
 def _visible_base(spark: SparkSession, path: str, stats: dict) -> DataFrame:
     """The committed index's visible posting rows, raw metadata (the
     appender drops or recomputes bounds, so no ratio adjustment)."""
-    if stats.get("segments"):
-        df = compose_segment_postings(spark, path, stats, adjust_bounds=False)
-    else:
-        root = index_data_root(path, stats)
-        df = spark.read.parquet(os.path.join(root, "postings"))
-    return df.drop("bucket")
+    return compose_segment_postings(spark, path, stats, adjust_bounds=False).drop(
+        "bucket"
+    )
 
 
 def _write_postings(rows: DataFrame, gen_dir: str, n_buckets: int) -> None:
@@ -528,7 +524,7 @@ def append_to_index(
         if mode == "lsm":
             # additive dictionary: the DELTA's (term, df) only — summed and
             # re-idf'd under the current corpus at load
-            # (postings.compose_segment_terms)
+            # (postings.current_terms)
             delta_df.select("term", "df").write.mode("overwrite").parquet(
                 os.path.join(gen_dir, "terms")
             )
@@ -678,7 +674,7 @@ def delete_docs(
     new_ids = np.unique(np.asarray(list(ids), dtype=np.int64))
     if len(new_ids) == 0:
         return PostingIndex.load(spark, path)
-    old_dels = load_deletes(spark, path, stats)
+    old_dels = load_deletes(path, stats)
     already = np.intersect1d(new_ids, old_dels)
     if len(already):
         raise RuntimeError(
@@ -851,13 +847,13 @@ def compact_index(spark: SparkSession, path: str) -> PostingIndex:
     :func:`postings.merge_salted`) under the pinned head map — the same
     inputs a scratch union build would stable-sort and re-encode, hence
     byte-identical output. The union dictionary is materialized from the
-    additive per-segment tables (:func:`postings.compose_segment_terms`).
+    additive per-segment tables (:func:`postings.current_terms`).
     One merge shuffle over the index — the LSM cadence cost, paid once per
     ``max_segments`` appends instead of per append.
     """
     with open(os.path.join(path, "stats.json")) as fh:
         stats = json.load(fh)
-    deletes = load_deletes(spark, path, stats)
+    deletes = load_deletes(path, stats)
     if not stats.get("segments") and not len(deletes):
         return PostingIndex.load(spark, path)
 

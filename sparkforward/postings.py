@@ -41,9 +41,13 @@ import json
 import math
 import os
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -337,10 +341,34 @@ def decode_blocked_posting_list(
     return d, varbyte_decode(bytes(row["tf_blob"])), varbyte_decode(bytes(row["dl_blob"]))
 
 
+def _posting_parts(path: str, stats: dict) -> list[tuple]:
+    """``[(postings dir, avgdl ratio, block_no offset, term-tombstone dirs
+    of NEWER segments)]``, newest first: what the serve view composes
+    (:func:`compose_segment_postings`, :class:`PlanningCatalog`). A single
+    generation is one part, its ratio ``avgdl / data_avgdl`` (a delete
+    moves avgdl, not the stored bounds)."""
+    cur = float(stats["avgdl"])
+    segs = stats.get("segments")
+    if not segs:
+        wrote = float(stats.get("data_avgdl", cur))
+        pdir = os.path.join(index_data_root(path, stats), "postings")
+        return [(pdir, cur / wrote if wrote > 0 else 1.0, 0, [])]
+    parts, newer = [], []
+    for ord_ in range(len(segs) - 1, -1, -1):
+        seg = segs[ord_]
+        d = os.path.join(path, seg["dir"]) if seg["dir"] else path
+        ratio = cur / float(seg["avgdl"])
+        parts.append((os.path.join(d, "postings"), ratio, ord_ << 24, list(newer)))
+        if seg.get("tombstones"):
+            newer.append(os.path.join(path, seg["tombstones"]))
+    return parts
+
+
 def compose_segment_postings(
     spark: SparkSession, path: str, stats: dict, adjust_bounds: bool = True
 ) -> DataFrame:
-    """Visible postings of an LSM segment stack (append.py mode="segment").
+    """Visible postings of a committed index: one generation, or an LSM
+    segment stack (append.py modes "segment" and "lsm").
 
     The visible set is the union over segments, where a term re-merged by a
     NEWER segment tombstones its rows in every older one. Stale segments'
@@ -354,7 +382,8 @@ def compose_segment_postings(
     always recomputed from raw tf/dl under the CURRENT avgdl
     (wand.py serve kernels), so serving stays EXACT. The adjustment is
     baked into the composed DataFrame, keeping every downstream consumer
-    (serve planner, metadata aggregates, kernels) segment-oblivious.
+    (serve planner, metadata aggregates, kernels) segment-oblivious. A
+    single generation whose avgdl a delete moved scales the same way.
 
     ``adjust_bounds=False`` yields the raw stored rows — for the appender
     and compactor, which drop or recompute the metadata anyway.
@@ -372,114 +401,93 @@ def compose_segment_postings(
     (auto-compaction keeps stacks far below this) x <= 2^24 blocks per
     (term, salt, segment) (8M postings/shard target, >= 1 posting/block).
     """
-    segs = stats["segments"]
+    segs = stats.get("segments") or []
     if adjust_bounds and len(segs) > 128:
         raise RuntimeError(
             f"segment stack too deep ({len(segs)} > 128) — compact_index first"
         )
-    cur = float(stats["avgdl"])
-    parts = []
-    tomb: DataFrame | None = None
-    for ord_ in range(len(segs) - 1, -1, -1):  # newest first: accum tombstones
-        seg = segs[ord_]
-        d = os.path.join(path, seg["dir"]) if seg["dir"] else path
-        df = spark.read.parquet(os.path.join(d, "postings"))
-        if tomb is not None:
+    postings: DataFrame | None = None
+    for pdir, ratio, offset, tombs in _posting_parts(path, stats):
+        df = spark.read.parquet(pdir)
+        if tombs:
             # tombstone vocabulary is bounded by the deltas' vocabularies
+            tomb = reduce(
+                DataFrame.unionByName,
+                [spark.read.parquet(t).select("term") for t in tombs],
+            )
             df = df.join(F.broadcast(tomb), "term", "left_anti")
-        ratio = cur / float(seg["avgdl"])
         if adjust_bounds and ratio != 1.0:
             df = df.withColumn(
                 "max_z", F.col("max_z") * F.lit(max(1.0, ratio))
             ).withColumn("min_z", F.col("min_z") * F.lit(min(1.0, ratio)))
-        if adjust_bounds and ord_ > 0:
+        if adjust_bounds and offset:
             df = df.withColumn(
-                "block_no", (F.col("block_no") + F.lit(ord_ << 24)).cast("int")
+                "block_no", (F.col("block_no") + F.lit(offset)).cast("int")
             )
-        parts.append(df)
-        t = seg.get("tombstones")
-        if t:
-            tdf = spark.read.parquet(os.path.join(path, t)).select("term")
-            tomb = tdf if tomb is None else tomb.unionByName(tdf)
-    postings = parts[0]
-    for df in parts[1:]:
-        postings = postings.unionByName(df)
+        postings = df if postings is None else postings.unionByName(df)
     return postings
 
 
-def compose_segment_terms(spark: SparkSession, path: str, stats: dict) -> DataFrame:
-    """Union term dictionary of an ADDITIVE (LSM) segment stack.
-
-    LSM segments (append.py mode="lsm") store only their DELTA's term
-    frequencies — O(delta vocabulary) written per append instead of the
-    whole union dictionary. Each document is counted in exactly one
-    segment, so the union df is the plain sum: walk newest -> oldest,
-    taking additive segments' delta-local tables until the newest
-    NON-additive segment (a built base or a term-granular append, whose
-    terms table IS the union as of its commit), then sum and re-derive
-    idf under the CURRENT corpus size + per-term shard counts from the
-    pinned head map in ``stats`` — the same :func:`attach_term_meta`
-    expression a scratch build runs, so composed metadata is bit-identical
-    to a from-scratch union build's.
-    """
-    parts = []
+def _terms_dirs(path: str, stats: dict) -> list[str]:
+    """The terms/ tables making up the CURRENT dictionary
+    (:func:`current_terms`, :class:`PlanningCatalog`): the ``terms_dir``
+    override (:func:`append.delete_docs` moves only the dictionary and the
+    tombstone sidecar to a new generation), else ``data_dir/terms``. An
+    ADDITIVE (LSM) stack's lsm segments store only their delta's (term,
+    df): it lists those newest first, down to the newest non-lsm segment,
+    whose table (or a pre-stack ``terms_dir`` override) IS the union as of
+    its commit."""
+    td = stats.get("terms_dir")
+    if stats.get("terms_layout") != "additive":
+        root = os.path.join(path, td) if td else index_data_root(path, stats)
+        return [os.path.join(root, "terms")]
+    dirs = []
     for seg in reversed(stats["segments"]):
         d = os.path.join(path, seg["dir"]) if seg["dir"] else path
         if seg.get("kind") != "lsm":
-            # this segment's table already holds the union up to here; a
-            # delete-generation terms_dir override (written pre-stack, when
-            # the index had no segments) supersedes the base's own table
-            td = stats.get("terms_dir")
-            if td:
-                d = os.path.join(path, td)
-            parts.append(
-                spark.read.parquet(os.path.join(d, "terms")).select("term", "df")
-            )
+            dirs.append(os.path.join(os.path.join(path, td) if td else d, "terms"))
             break
-        parts.append(
-            spark.read.parquet(os.path.join(d, "terms")).select("term", "df")
-        )
-    df_union = parts[0]
-    for p in parts[1:]:
-        df_union = df_union.unionByName(p)
-    df_union = df_union.groupBy("term").agg(F.sum("df").alias("df"))
-    head = {t: int(m) for t, m in (stats.get("head") or {}).items()}
-    return attach_term_meta(df_union, float(stats["n_docs"]), head)
+        dirs.append(os.path.join(d, "terms"))
+    return dirs
 
 
 def current_terms(spark: SparkSession, path: str, stats: dict) -> DataFrame:
-    """The committed index's CURRENT term dictionary, whatever its layout.
+    """The committed index's CURRENT term dictionary, whatever its layout
+    (:func:`_terms_dirs`), for the loader, appender and compactor alike.
 
-    Resolution order: an explicit ``terms_dir`` override (written by
-    :func:`append.delete_docs` — the postings stay in place, only the
-    dictionary and the tombstone sidecar move to a new generation), then
-    the additive per-segment sum (LSM stacks), then the plain
-    ``data_dir/terms`` table. Shared by the loader, the appender and the
-    compactor so every maintenance op sees the same dictionary.
-    """
-    if stats.get("terms_layout") == "additive":
-        # LSM stack — the compose itself honors a pre-stack terms_dir
-        # override for the base segment's union table
-        return compose_segment_terms(spark, path, stats)
-    td = stats.get("terms_dir")
-    if td:
-        return spark.read.parquet(os.path.join(path, td, "terms"))
-    return spark.read.parquet(os.path.join(index_data_root(path, stats), "terms"))
+    An additive stack's df is the plain sum of its tables (each document
+    counts in exactly one segment); idf and n_shards re-derive under the
+    current corpus and pinned head map through :func:`attach_term_meta`,
+    bit-identical to a from-scratch union build's."""
+    dirs = _terms_dirs(path, stats)
+    if stats.get("terms_layout") != "additive":
+        return spark.read.parquet(dirs[0])
+    df_union = reduce(
+        DataFrame.unionByName,
+        [spark.read.parquet(d).select("term", "df") for d in dirs],
+    )
+    df_union = df_union.groupBy("term").agg(F.sum("df").alias("df"))
+    return attach_term_meta(df_union, float(stats["n_docs"]), _head(stats))
 
 
-def load_deletes(spark: SparkSession, path: str, stats: dict) -> np.ndarray:
+def _head(stats: dict) -> dict[str, int]:
+    return {t: int(m) for t, m in (stats.get("head") or {}).items()}
+
+
+def load_deletes(path: str, stats: dict) -> np.ndarray:
     """The cumulative doc-tombstone sidecar as a SORTED int64 array.
 
     Deletes are workload-bounded (takedown/GDPR batches), never
     corpus-sized — the array is driver-held and ships to serve kernels in
-    the task closure like the head map does. Empty array when the index
-    has no deletes.
+    the task closure like the head map does. Read with pyarrow on the
+    driver, so loading an index runs no Spark job for it. Empty array when
+    the index has no deletes.
     """
     dd = stats.get("deletes_dir")
     if not dd:
         return np.empty(0, dtype=np.int64)
-    rows = spark.read.parquet(os.path.join(path, dd, "deletes")).collect()
-    return np.sort(np.asarray([r["doc_id"] for r in rows], dtype=np.int64))
+    ids = ds.dataset(os.path.join(path, dd, "deletes")).to_table(columns=["doc_id"])
+    return np.sort(ids["doc_id"].to_numpy().astype(np.int64))
 
 
 def index_data_root(path: str, stats: dict | None = None) -> str:
@@ -498,6 +506,140 @@ def index_data_root(path: str, stats: dict | None = None) -> str:
     return os.path.join(path, sub) if sub else path
 
 
+def _term_in(terms: list[str]) -> pc.Expression:
+    """``term IN terms``; a typed value set, so an empty list matches
+    nothing instead of failing to bind."""
+    return pc.field("term").isin(pa.array(terms, pa.string()))
+
+
+#: the block-metadata columns serve planning reads (every non-blob column)
+BLOCK_META_COLS = [
+    "salt", "block_no", "n", "first_doc", "last_doc", "max_z", "min_z", "n_bytes",
+]
+
+
+class PlanningCatalog:
+    """Serve-planning metadata of one index generation, read on the driver.
+
+    pyarrow reads the term dictionary and the postings' block-metadata
+    columns, filtered by term (row groups prune on the term-sorted layout;
+    blob pages are never read), so planning a serve launches no Spark job.
+    The reads compose what :meth:`PostingIndex.load` composes
+    (:func:`_posting_parts`, :func:`_terms_dirs`); an additive dictionary's
+    idf re-derives as :func:`attach_term_meta` derives it, through the
+    JVM's ``StrictMath.log`` (Spark's ``log``), so it is bit-identical.
+    """
+
+    def __init__(self, spark: SparkSession, path: str, stats: dict):
+        self._jvm = spark._jvm
+        self._stats = stats
+        self._parts = [
+            (ds.dataset(p), ratio, offset, [ds.dataset(t) for t in tombs])
+            for p, ratio, offset, tombs in _posting_parts(path, stats)
+        ]
+        self._terms = [ds.dataset(d) for d in _terms_dirs(path, stats)]
+
+    def _dictionary(self, terms: list[str]) -> pa.Table:
+        """(term, idf[, n_shards]) rows of ``terms``."""
+        flt = _term_in(terms)
+        if self._stats.get("terms_layout") != "additive":
+            return self._terms[0].to_table(filter=flt)
+        parts = [d.to_table(columns=["term", "df"], filter=flt) for d in self._terms]
+        dfs = pa.concat_tables(parts).group_by("term").aggregate([("df", "sum")])
+        n, log = float(self._stats["n_docs"]), self._jvm.java.lang.StrictMath.log
+        head, names = _head(self._stats), dfs["term"].to_pylist()
+        idf = [log(1.0 + (n - df + 0.5) / (df + 0.5)) for df in dfs["df_sum"].to_pylist()]
+        nsh = [head.get(t, 1) for t in names]
+        return pa.table({"term": names, "idf": idf, "n_shards": nsh})
+
+    def _blocks(self, terms: list[str]) -> Iterator[pa.Table]:
+        """Composed (term, *BLOCK_META_COLS) rows of ``terms``, a table per
+        scanned batch."""
+        for dset, ratio, offset, tombs in self._parts:
+            flt = _term_in(terms)
+            dead = {t for ts in tombs for t in ts.to_table(filter=flt)["term"].to_pylist()}
+            live = [t for t in terms if t not in dead]
+            if not live:
+                continue
+            cols = ["term", *BLOCK_META_COLS]
+            for batch in dset.to_batches(columns=cols, filter=_term_in(live)):
+                tb = pa.Table.from_batches([batch])
+                fix = {}
+                if ratio != 1.0:
+                    fix["max_z"] = pc.multiply(tb["max_z"], max(1.0, ratio))
+                    fix["min_z"] = pc.multiply(tb["min_z"], min(1.0, ratio))
+                if offset:
+                    fix["block_no"] = pc.add(tb["block_no"], pa.scalar(offset, pa.int32()))
+                for c, v in fix.items():
+                    tb = tb.set_column(cols.index(c), c, v)
+                yield tb
+
+    def term_meta(self, terms: list[str]) -> dict[str, tuple[float, int]]:
+        """term -> (idf, n_shards) for those of ``terms`` in the dictionary."""
+        tb = self._dictionary(list(terms))
+        names, idf = tb["term"].to_pylist(), tb["idf"].to_pylist()
+        # a pre-round-2 dictionary has no n_shards: every term is unsharded
+        nsh = tb["n_shards"].to_pylist() if "n_shards" in tb.column_names else [1] * len(idf)
+        return dict(zip(names, zip(idf, nsh)))
+
+    def block_plan(self, terms: list[str], cap: int):
+        """-> ``(fine, coarse)`` from ONE streaming column-pruned read.
+
+        ``fine``: the block rows (``term`` + :data:`BLOCK_META_COLS`,
+        sorted by term, salt, block_no) of every term with 1..``cap``
+        blocks, or None. ``coarse``: term -> ``[(salt, blocks, shard_max_z,
+        n_bytes, n_postings)]``, (term, salt) aggregates computed in Arrow,
+        for every term with more. A term's rows are dropped once its count
+        passes ``cap``, so the driver holds at most ``cap`` block rows per
+        term plus one batch, whatever a head term's posting count.
+        """
+        held: dict[str, list[pa.Table]] = {}
+        counts: dict[str, int] = {}
+        aggs = []
+        for tb in self._blocks(list(terms)):
+            aggs.append(tb.group_by(["term", "salt"]).aggregate(
+                [("block_no", "count"), ("max_z", "max"), ("n_bytes", "sum"), ("n", "sum")]
+            ))
+            vc = pc.value_counts(tb["term"])
+            for t, c in zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()):
+                counts[t] = counts.get(t, 0) + c
+                if counts[t] > cap:
+                    held.pop(t, None)
+                else:
+                    held.setdefault(t, []).append(tb.filter(pc.equal(tb["term"], t)))
+        fine = pa.concat_tables([p for ps in held.values() for p in ps]).sort_by(
+            [("term", "ascending"), ("salt", "ascending"), ("block_no", "ascending")]
+        ) if held else None
+        over = [t for t, c in counts.items() if c > cap]
+        coarse: dict[str, list[tuple]] = {}
+        if over:
+            agg = pa.concat_tables(aggs).filter(pc.field("term").isin(over)).group_by(
+                ["term", "salt"]
+            ).aggregate([("block_no_count", "sum"), ("max_z_max", "max"),
+                         ("n_bytes_sum", "sum"), ("n_sum", "sum")])
+            for r in agg.to_pylist():
+                coarse.setdefault(r["term"], []).append(
+                    (r["salt"], r["block_no_count_sum"], r["max_z_max_max"],
+                     r["n_bytes_sum_sum"], r["n_sum_sum"])
+                )
+        return fine, coarse
+
+
+class _FrameCatalog(PlanningCatalog):
+    """The catalog of an index made from DataFrames rather than loaded from
+    a path: the same reads, collected through Spark as Arrow."""
+
+    def __init__(self, index: "PostingIndex"):
+        self._index = index
+
+    def _dictionary(self, terms: list[str]) -> pa.Table:
+        return self._index.terms.filter(F.col("term").isin(terms)).toArrow()
+
+    def _blocks(self, terms: list[str]) -> Iterator[pa.Table]:
+        post = self._index.postings.filter(F.col("term").isin(terms))
+        yield post.select("term", *BLOCK_META_COLS).toArrow()
+
+
 # ----------------------------------------------------------------- build #
 class PostingIndex:
     """A built inverted index: postings + term stats + global stats."""
@@ -509,6 +651,7 @@ class PostingIndex:
         stats: dict,
         path: str | None = None,
         deletes: np.ndarray | None = None,
+        catalog: PlanningCatalog | None = None,
     ):
         self.postings = postings
         self.terms = terms  # (term, df, idf, n_shards)
@@ -519,19 +662,12 @@ class PostingIndex:
         self.deletes: np.ndarray = (
             deletes if deletes is not None else np.empty(0, dtype=np.int64)
         )
-        self._term_meta: dict[str, tuple[float, int]] = {}
+        #: serve-planning metadata of this generation, read on the driver
+        self.catalog: PlanningCatalog = catalog or _FrameCatalog(self)
         #: lazy SparkContext.broadcast of the tombstone array — ONE ship per
         #: index generation instead of a task-closure copy per serve (at
         #: takedown-batch scale the closure re-ship is the cost)
         self._deletes_bc = None
-        #: per-term (term, salt) shard summaries: [(salt, blocks, shard_max_z,
-        #: n_bytes, n_postings)] — memoized like _term_meta
-        self._shard_meta: dict[str, list[tuple]] = {}
-        #: per-term block metadata rows (FINE terms only — bounded by
-        #: wand.MAX_META_BLOCKS per term); memoized per distinct queried term
-        self._block_meta: dict[str, list] = {}
-        #: term -> largest cap at which its block count overflowed
-        self._block_overflow: dict[str, int] = {}
 
     def deletes_broadcast(self, spark: SparkSession):
         """The tombstone array as a broadcast variable, created once per
@@ -544,162 +680,18 @@ class PostingIndex:
             self._deletes_bc = spark.sparkContext.broadcast(self.deletes)
         return self._deletes_bc
 
-    def term_meta(self, terms: list[str]) -> dict[str, tuple[float, int]]:
-        """term -> (idf, n_shards) for the given terms — the serving-side
-        dictionary lookup. Point-queries the terms table (In-filter
-        pushdown) and memoizes per term, so repeated queries over a served
-        index skip the lookup job entirely; the driver-side cache grows
-        with DISTINCT QUERIED terms (bounded by workload, not vocabulary).
-        """
-        missing = [t for t in terms if t not in self._term_meta]
-        if missing:
-            tdf = self.terms
-            if "n_shards" not in tdf.columns:  # pre-round-2 index layout
-                tdf = tdf.withColumn("n_shards", F.lit(1))
-            for r in (
-                tdf.filter(F.col("term").isin(missing))
-                .select("term", "idf", "n_shards")
-                .collect()
-            ):
-                self._term_meta[r["term"]] = (float(r["idf"]), int(r["n_shards"]))
-            for t in missing:  # absent from the dictionary: pin the miss too
-                self._term_meta.setdefault(t, (0.0, 0))
-        return {t: self._term_meta[t] for t in terms}
-
-    def shard_meta(self, terms: list[str]) -> dict[str, list[tuple]]:
-        """term -> [(salt, blocks, shard_max_z, n_bytes, n_postings)] from a
-        tiny metadata aggregate (block-layout index). Memoized per queried
-        term; the aggregate reads only non-blob columns."""
-        missing = [t for t in terms if t not in self._shard_meta]
-        if missing:
-            rows = (
-                self.postings.filter(F.col("term").isin(missing))
-                .groupBy("term", "salt")
-                .agg(
-                    F.count("*").alias("blocks"),
-                    F.max("max_z").alias("shard_max_z"),
-                    F.sum("n_bytes").alias("n_bytes"),
-                    F.sum("n").alias("n_postings"),
-                )
-                .collect()
-            )
-            for t in missing:
-                self._shard_meta.setdefault(t, [])
-            for r in rows:
-                self._shard_meta[r["term"]].append(
-                    (int(r["salt"]), int(r["blocks"]), float(r["shard_max_z"]),
-                     int(r["n_bytes"]), int(r["n_postings"]))
-                )
-        return {t: self._shard_meta.get(t, []) for t in terms}
-
-    def block_meta(self, terms: list[str]) -> dict[str, list]:
-        """term -> block metadata rows (no blobs — column-pruned scan).
-
-        Serving memoizes per distinct queried term, so repeated serves over
-        a hot index skip the metadata job entirely; callers bound which
-        terms they request (wand.MAX_META_BLOCKS — head terms beyond the
-        cap are planned from shard_meta aggregates instead, keeping driver
-        memory workload-bounded at any corpus size)."""
-        missing = [t for t in terms if t not in self._block_meta]
-        if missing:
-            rows = (
-                self.postings.filter(F.col("term").isin(missing))
-                .select(
-                    "term", "salt", "block_no", "n", "first_doc", "last_doc",
-                    "max_z", "min_z", "n_bytes",
-                )
-                .collect()
-            )
-            for t in missing:
-                self._block_meta.setdefault(t, [])
-            for r in rows:
-                self._block_meta[r["term"]].append(r)
-        return {t: self._block_meta.get(t, []) for t in terms}
-
-    def capped_block_meta(
-        self, terms: list[str], cap: int
-    ) -> tuple[dict[str, list], set[str]]:
-        """(term -> block rows, overflowed terms) in two tiny metadata jobs.
-
-        Classification runs as a ``groupBy(term).count()`` — a partial
-        (map-side-combined) aggregate, so a 10^12-doc head term never
-        funnels its millions of block rows through one task just to be
-        ranked (the Window.row_number cap it replaces did exactly that);
-        block rows are then collected ONLY for the under-cap terms, with
-        the overflowed terms never shipping a single block row. Fine
-        terms' rows memoize exactly like :meth:`block_meta`; overflow
-        verdicts memoize per (term, cap seen) so a later call with a
-        LARGER budget re-collects.
-        """
-        cap = int(cap)
-        over = {
-            t for t in terms
-            if (t in self._block_overflow and self._block_overflow[t] >= cap)
-            # fully-cached terms re-classify against THIS call's budget
-            or (t in self._block_meta and len(self._block_meta[t]) > cap)
-        }
-        missing = [
-            t for t in terms if t not in self._block_meta and t not in over
-        ]
-        if missing:
-            counts = dict(
-                self.postings.filter(F.col("term").isin(missing))
-                .groupBy("term")
-                .count()
-                .collect()
-            )
-            fine = []
-            for t in missing:
-                c = int(counts.get(t, 0))
-                if c > cap:
-                    self._block_overflow[t] = cap
-                    self._block_meta.pop(t, None)
-                    over.add(t)
-                else:
-                    fine.append(t)
-            got: dict[str, list] = {t: [] for t in fine}
-            if fine:
-                rows = (
-                    self.postings.filter(F.col("term").isin(fine))
-                    .select(
-                        "term", "salt", "block_no", "n", "first_doc",
-                        "last_doc", "max_z", "min_z", "n_bytes",
-                    )
-                    .collect()
-                )
-                for r in rows:
-                    got[r["term"]].append(r)
-            for t, rs in got.items():
-                self._block_meta[t] = rs
-        return (
-            {t: self._block_meta.get(t, []) for t in terms if t not in over},
-            {t for t in terms if t in over},
-        )
-
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "PostingIndex":
         with open(os.path.join(path, "stats.json")) as fh:
             stats = json.load(fh)
-        terms = current_terms(spark, path, stats)
-        deletes = load_deletes(spark, path, stats)
-        if not stats.get("segments"):
-            root = index_data_root(path, stats)
-            postings = spark.read.parquet(os.path.join(root, "postings"))
-            # a delete moves stats.avgdl without touching the stored block
-            # bounds (written under data_avgdl) — the same avgdl-ratio bound
-            # the segment compose applies keeps pruning sound (z moves by at
-            # most the ratio: monotone denominator bound; scores recompute
-            # exactly from tf/dl at serve time)
-            cur = float(stats["avgdl"])
-            wrote = float(stats.get("data_avgdl", cur))
-            if wrote != cur and wrote > 0:
-                ratio = cur / wrote
-                postings = postings.withColumn(
-                    "max_z", F.col("max_z") * F.lit(max(1.0, ratio))
-                ).withColumn("min_z", F.col("min_z") * F.lit(min(1.0, ratio)))
-            return cls(postings, terms, stats, path=path, deletes=deletes)
-        postings = compose_segment_postings(spark, path, stats)
-        return cls(postings, terms, stats, path=path, deletes=deletes)
+        return cls(
+            compose_segment_postings(spark, path, stats),
+            current_terms(spark, path, stats),
+            stats,
+            path=path,
+            deletes=load_deletes(path, stats),
+            catalog=PlanningCatalog(spark, path, stats),
+        )
 
     def cache(self) -> "PostingIndex":
         """Pin postings + term stats in executor memory for serving."""

@@ -423,7 +423,7 @@ def _lsm_index(spark: SparkSession, sf_dir: str):
     terms), so head-term (term, salt) shards hold block rows in all three
     segments and serving exercises the cross-segment concatenation
     (postings.compose_segment_postings block renumbering) plus the
-    additive dictionary (postings.compose_segment_terms)."""
+    additive dictionary (postings.current_terms)."""
     import tempfile
 
     from sparkforward.append import append_to_index

@@ -28,7 +28,10 @@ def get_spark(
     :param shuffle_partitions: defaults to ``max(cores, 32)``.
 
     The driver heap is ``$SPARK_DRIVER_MEM`` when set, else
-    :func:`default_driver_memory`.
+    :func:`default_driver_memory`. Python workers start through
+    :mod:`sparkforward.worker_daemon`, found through the workers'
+    ``PYTHONPATH`` whatever the driver's working directory; ``extra_conf``
+    overrides either setting.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -51,12 +54,24 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", WORKER_DAEMON)
+        .config("spark.executorEnv.PYTHONPATH", _package_root())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _prewarm_python_workers(spark, cores)
     return spark
+
+
+#: the Python-worker daemon module engine sessions start workers through
+WORKER_DAEMON = "sparkforward.worker_daemon"
+
+
+def _package_root() -> str:
+    """The sys.path entry that holds this package (a directory, or the zip
+    of a ``--py-files`` deployment)."""
+    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_driver_memory() -> str:
@@ -105,10 +120,15 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
 
     The first Python-evaluated stage otherwise pays ``cores`` concurrent
     worker cold-starts (fork + pandas/pyarrow import) inside whatever
-    query happens to run first — serving latency noise, not engine work.
-    Workers are reused afterwards (``spark.python.worker.reuse`` default),
-    so this is a one-time cost moved to session creation. Idempotent per
-    session."""
+    query happens to run first. Workers are reused afterwards
+    (``spark.python.worker.reuse`` default); each later task still pays
+    pyspark's per-task set-up, which :mod:`sparkforward.worker_daemon`
+    keeps from re-reading zip archives. Idempotent per session.
+
+    A worker that cannot start (its daemon module does not import, say)
+    would fail every later Python stage with an opaque end-of-stream
+    error, so the failure is raised here, naming the daemon module and the
+    workers' ``PYTHONPATH``."""
     if getattr(spark, "_sfwd_prewarmed", False):
         return
     try:
@@ -117,8 +137,19 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
             .mapInPandas(lambda it: it, schema="id long")
             .write.format("noop").mode("overwrite").save()
         )
-    except Exception:  # noqa: BLE001 — never fail session creation over this
-        pass
+    except Exception as e:  # noqa: BLE001 — re-raised with the worker set-up
+        conf = spark.sparkContext.getConf()
+        spark.stop()  # a later get_spark must not get this session back
+        paths = [
+            conf.get("spark.executorEnv.PYTHONPATH", None),
+            os.environ.get("PYTHONPATH"),
+        ]
+        raise RuntimeError(
+            "Python workers failed to start: daemon module "
+            f"{conf.get('spark.python.daemon.module', 'pyspark.daemon')!r}, "
+            f"workers' PYTHONPATH {os.pathsep.join(p for p in paths if p)!r} "
+            "(plus pyspark's own archives)"
+        ) from e
     spark._sfwd_prewarmed = True
 
 

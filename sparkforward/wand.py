@@ -1,9 +1,10 @@
 """Top-k BM25 serving over the posting index: metadata-planned I/O,
 block-max WAND, DAAT, **lazy block decoding**.
 
-Per query: a metadata-only pass over the block-granular index (parquet
-column pruning — blob pages unread; memoized per term) plans which blocks
-to gather at all; the gather joins surviving blocks against a driver-known
+Per query: a driver-side metadata read of the block-granular index (its
+planning catalog: pyarrow, column-pruned — blob pages unread, no Spark
+job) plans which blocks to gather at all; the gather joins surviving
+blocks against a driver-known
 ``In(term, ...)`` predicate (pushed into the parquet scan — row-group
 min/max pruning on the sorted ``term`` column) plus broadcast key tables; a
 document-at-a-time WAND traversal with block-max skipping produces the
@@ -721,11 +722,11 @@ def _serve_blocked(
 ):
     """Block-granular serve: metadata plan -> block pre-filter -> gather.
 
-    Plan (driver, from column-pruned metadata — no blob bytes read, both
-    passes memoized on the index per distinct queried term):
+    Plan (driver, from the index's planning catalog — column-pruned
+    pyarrow reads, no blob bytes, no Spark job):
 
-    * **Fine/coarse split.** A tiny (term, salt) aggregate classifies each
-      query term: FINE terms (<= ``max_meta_blocks`` blocks total) ship
+    * **Fine/coarse split.** One metadata read classifies each query term
+      by its block count: FINE terms (<= ``max_meta_blocks`` blocks total) ship
       their per-block metadata to the driver; COARSE terms (Zipf heads at
       web scale) ship only per-shard summaries — driver memory is bounded
       by the workload's fine terms, never by a head term's posting count.
@@ -769,24 +770,17 @@ def _serve_blocked(
     Returns the per-shard result DataFrame, or None when no query term
     exists in the dictionary.
     """
-    from collections import defaultdict
-
     eps = 10.0 ** (-SCORE_DECIMALS)
     neg_inf = -np.inf
     _levels = _rmq_levels
 
-    # ONE metadata job classifies terms AND collects fine terms' block rows
-    # (windowed row cap); the (term, salt) aggregate job runs only when a
-    # term actually overflowed the budget — the common serve pays a single
-    # planning job on first touch and zero afterwards (memoized).
+    # ONE column-pruned driver-side read classifies terms, returns the fine
+    # terms' block rows and the coarse terms' (term, salt) summaries.
     # A legacy (n_shards-less) block index has arbitrary salt ids that the
     # coarse join below cannot address — plan everything fine there.
     cap = (1 << 62) if legacy else int(max_meta_blocks)
-    by_term, overflowed = index.capped_block_meta(term_list, cap)
-    fine_terms = [t for t in term_list if by_term.get(t)]
-    fine_set = set(fine_terms)
-    coarse_terms = sorted(overflowed)
-    shard = index.shard_meta(coarse_terms) if coarse_terms else {}
+    fine_tb, shard = index.catalog.block_plan(term_list, cap)
+    coarse_terms = sorted(shard)
 
     def coarse_shardmax(t: str, s: int) -> float:
         m_t = meta[t][1]
@@ -805,42 +799,44 @@ def _serve_blocked(
     # fully vectorized (batched searchsorted + O(1) range-max queries —
     # _rmq_levels/_rmq_max, shared with the vectorized kernel), so plan
     # time is ~|blocks| log |blocks|, not a Python loop per block pair.
+    # fine_tb is sorted by (term, salt, block_no): each series is a slice.
     fine_series: dict[str, dict[int, dict]] = {}
-    for t in fine_terms:
+    cols = {} if fine_tb is None else {c: fine_tb[c].to_numpy() for c in fine_tb.column_names}
+    keys = list(zip(cols.get("term", ()), cols.get("salt", ())))
+    starts = [i for i in range(len(keys)) if i == 0 or keys[i] != keys[i - 1]]
+    for lo, hi in zip(starts, starts[1:] + [len(keys)]):
+        t, salt = keys[lo]
         idf_t = meta[t][0]
-        by_salt: dict[int, list] = defaultdict(list)
-        for r in by_term[t]:
-            by_salt[r["salt"]].append(r)
-        fine_series[t] = {}
-        for salt, rows in by_salt.items():
-            rows.sort(key=lambda r: r["block_no"])
-            scores = np.asarray([idf_t * r["max_z"] for r in rows], dtype=np.float64)
-            firsts = np.asarray([r["first_doc"] for r in rows], dtype=np.int64)
-            lasts = np.asarray([r["last_doc"] for r in rows], dtype=np.int64)
-            ns = np.asarray([r["n"] for r in rows], dtype=np.int64)
-            if deletes is not None and len(deletes):
-                # θ0 k-coverage counts must only count SURVIVING docs:
-                # subtract the tombstones falling in each block's doc range
-                # (an overcount when a tombstone's id isn't actually in the
-                # block — which only LOWERS θ0: sound)
-                ns = np.maximum(
-                    ns
-                    - (
-                        np.searchsorted(deletes, lasts, side="right")
-                        - np.searchsorted(deletes, firsts, side="left")
-                    ),
-                    0,
-                )
-            fine_series[t][salt] = {
-                "firsts": firsts,
-                "lasts": lasts,
-                "scores": scores,
-                "levels": _levels(scores),
-                "mins": np.asarray([idf_t * r["min_z"] for r in rows], dtype=np.float64),
-                "ns": ns,
-                "nbytes": np.asarray([r["n_bytes"] for r in rows], dtype=np.int64),
-                "rows": rows,
-            }
+        firsts = cols["first_doc"][lo:hi]
+        lasts = cols["last_doc"][lo:hi]
+        ns = cols["n"][lo:hi]
+        if deletes is not None and len(deletes):
+            # θ0 k-coverage counts must only count SURVIVING docs:
+            # subtract the tombstones falling in each block's doc range
+            # (an overcount when a tombstone's id isn't actually in the
+            # block — which only LOWERS θ0: sound)
+            ns = np.maximum(
+                ns
+                - (
+                    np.searchsorted(deletes, lasts, side="right")
+                    - np.searchsorted(deletes, firsts, side="left")
+                ),
+                0,
+            )
+        scores = idf_t * cols["max_z"][lo:hi]
+        fine_series.setdefault(t, {})[int(salt)] = {
+            "firsts": firsts,
+            "lasts": lasts,
+            "scores": scores,
+            "levels": _levels(scores),
+            "mins": idf_t * cols["min_z"][lo:hi],
+            "ns": ns,
+            "nbytes": cols["n_bytes"][lo:hi],
+            "block_no": cols["block_no"][lo:hi],
+            "max_z": cols["max_z"][lo:hi],
+        }
+    fine_terms = [t for t in term_list if t in fine_series]
+    fine_set = set(fine_terms)
 
     def _salts_for(t: str, s: int) -> list[int]:
         # salt % m == s % m keeps every residue class serving shard s; for
@@ -966,11 +962,9 @@ def _serve_blocked(
                         )
                         bytes_gathered += int(nbytes.sum())
                         continue
-                    rows = ser["rows"]
-                    for i in np.nonzero(keep)[0]:
-                        r = rows[int(i)]
+                    for b in ser["block_no"][keep]:
                         survive.append(
-                            (q, int(s), t, int(salt), int(r["block_no"]),
+                            (q, int(s), t, int(salt), int(b),
                              float(meta[t][0]), int(m_serve), float(theta))
                         )
                     bytes_gathered += int(nbytes[keep].sum())
@@ -1034,18 +1028,20 @@ def _serve_blocked(
         # row-group-prunable) inside the scan
         contrib = F.lit(0.0)
         for t in fine_terms:
-            rows = sorted(by_term[t], key=lambda r: r["first_doc"])
-            if not rows:
-                continue
+            sers = list(fine_series[t].values())
+            order = np.argsort(np.concatenate([x["firsts"] for x in sers]), kind="stable")
+            firsts, lasts, max_z = (
+                np.concatenate([x[c] for x in sers])[order]
+                for c in ("firsts", "lasts", "max_z")
+            )
             idf_t = meta[t][0]
-            n_iv = min(_FINE_INTERVALS, len(rows))
-            step = -(-len(rows) // n_iv)
+            n_iv = min(_FINE_INTERVALS, len(order))
+            step = -(-len(order) // n_iv)
             cases = [F.lit(0.0)]
-            for i in range(0, len(rows), step):
-                chunk = rows[i : i + step]
-                lo = min(r["first_doc"] for r in chunk)
-                hi = max(r["last_doc"] for r in chunk)
-                m = idf_t * max(r["max_z"] for r in chunk)
+            for i in range(0, len(order), step):
+                lo = firsts[i : i + step].min()
+                hi = lasts[i : i + step].max()
+                m = idf_t * max_z[i : i + step].max()
                 cases.append(
                     F.when(
                         (F.col("first_doc") <= F.lit(int(hi)))
@@ -1187,8 +1183,11 @@ def wand_topk(
     ``max_meta_blocks``: per-term driver-side planning budget (default
     :data:`MAX_META_BLOCKS`); terms above it are planned from (term, salt)
     aggregates with a Catalyst-side block filter — see
-    :func:`_serve_blocked`. Both metadata passes are memoized on the index
-    per distinct queried term, so repeated serves skip the planning jobs.
+    :func:`_serve_blocked`. The planning metadata (dictionary lookup and
+    block rows) is read on the driver from the index's
+    :class:`~sparkforward.postings.PlanningCatalog`, so planning launches
+    no Spark job; collecting ``queries`` is the only action before the
+    returned DataFrame's own.
 
     Postings are pruned to query terms before any decode via a pushed-down
     In-filter on the term-sorted scan. A query is then served as
@@ -1215,8 +1214,8 @@ def wand_topk(
     # The query set is tiny and known before the scan — collect it, tokenize
     # driver-side with the canonical rule (identical semantics to the JVM
     # split; one job fewer than exploding + dropDuplicates in Spark), look
-    # the terms up in the dictionary (a memoized point query on the terms
-    # table), and push an In(term, ...) predicate INTO the parquet scan so
+    # the terms up in the dictionary (the planning catalog's driver-side
+    # read), and push an In(term, ...) predicate INTO the parquet scan so
     # row-group min/max pruning on the term-sorted postings skips everything
     # else (a broadcast join alone would still read every row group). idf and
     # per-query parallelism then travel as ONE broadcast side table instead
@@ -1267,11 +1266,9 @@ def wand_topk(
         )
     # blocked + legacy (no n_shards): salts stay AS STORED — the blocked
     # planner groups rows into per-salt cursors under one serve shard
-    # (modulus 1; term_meta reports n_shards=1), which is exact for any
+    # (modulus 1; the catalog reports n_shards=1), which is exact for any
     # per-term doc-disjoint salting scheme.
-    meta = {
-        t: m for t, m in index.term_meta(term_list).items() if m[1] > 0
-    }
+    meta = index.catalog.term_meta(term_list)
 
     forced = 1
     if n_serve_shards and int(n_serve_shards) > 1:

@@ -13,3 +13,45 @@ def spark():
     s = get_spark(app_name="sparkforward-tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def index_variants(spark, tmp_path_factory):
+    """Paths of one small index per on-disk layout the loader composes:
+    ``plain``; ``deleted`` (data_avgdl != avgdl); ``lsm`` (a 3-deep
+    additive stack); ``segment`` (a 3-deep term-granular stack with term
+    tombstones); ``terms_dir`` (a delete's dictionary override under an
+    lsm stack)."""
+    from pyspark.sql import functions as F
+
+    from sparkforward.append import append_to_index, delete_docs
+    from sparkforward.postings import build_inverted_index
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    d = F.col("doc_id").cast("long")
+    root = tmp_path_factory.mktemp("index_variants")
+    paths = {}
+
+    def build(name, below):
+        paths[name] = p = str(root / name)
+        build_inverted_index(
+            docs.filter(d < below), p, salt_threshold=300, n_salt=8,
+            block_size=32, num_partitions=4, target_shard_postings=80,
+        )
+        return p
+
+    def append(p, lo, hi, mode):
+        append_to_index(
+            spark, p, docs.filter((d >= lo) & (d < hi)), num_partitions=4, mode=mode
+        )
+
+    build("plain", 1 << 30)
+    delete_docs(spark, build("deleted", 1 << 30), docs.filter(d % 7 == 3).select(d))
+    for mode in ("lsm", "segment"):
+        p = build(mode, 300)
+        append(p, 300, 400, mode)
+        append(p, 400, 1 << 30, mode)
+    p = build("terms_dir", 400)
+    delete_docs(spark, p, docs.filter((d < 400) & (d % 7 == 3)).select(d))
+    append(p, 400, 1 << 30, "lsm")
+    return paths

@@ -414,3 +414,36 @@ def test_ivf_plan_shape(spark):
     # query-vector lookup (centroids are inlined literals, not a scan)
     scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
     assert len(scans) == 2, scans
+
+
+@pytest.mark.parametrize(
+    "layout,budget",
+    [("plain", None), ("lsm", None), ("deleted", None), ("plain", 1)],
+    ids=["plain", "lsm3", "deleted", "coarse"],
+)
+def test_wand_topk_plans_without_spark_jobs(spark, index_variants, layout, budget):
+    """With the query frame an Arrow local relation, ``wand_topk`` launches
+    no Spark job before its first action: the dictionary lookup and the
+    block metadata come from the index's driver-side planning catalog, on
+    a plain index, a 3-deep lsm stack, a deleted index and the coarse path
+    (every term over a one-block budget)."""
+    from sparkforward.postings import PostingIndex
+    from sparkforward.wand import wand_topk
+
+    index = PostingIndex.load(spark, index_variants[layout])
+    qdf = local_frame(
+        spark, [("q1", "the web pages"), ("q2", "dup spark join")],
+        "q_id string, query string",
+    )
+    sc = spark.sparkContext
+    group = f"wand-planning-{layout}-{budget}"
+    sc.setJobGroup(group, "wand_topk planning")
+    try:
+        io: dict = {}
+        out = wand_topk(index, qdf, k=5, io_stats=io, max_meta_blocks=budget)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert (io["coarse_terms"] > 0) == (budget is not None), io
+    assert len(out.collect()) == 10

@@ -637,6 +637,8 @@ def test_wand_serve_edge_queries(spark, docs, tmp_path):
         index, spark.createDataFrame([], "q_id string, query string"), k=5
     )
     assert empty.count() == 0
+    absent = spark.createDataFrame([("qa", "zzzznotaterm")], "q_id string, query string")
+    assert wand_topk(index, absent, k=5).count() == 0
 
 
 def test_block_prefilter_skips_bytes_and_stays_exact(spark, tmp_path):
@@ -738,25 +740,29 @@ def test_coarse_term_planning_equals_fine(spark, tmp_path):
     pd.testing.assert_frame_equal(all_coarse, expected, check_dtype=False)
 
 
-def test_block_meta_cached_per_term(spark, tmp_path):
-    """Repeated serves reuse the memoized metadata (no re-collect): the
-    planning caches grow once per distinct queried term; under the default
-    budget no term overflows, so the (term, salt) aggregate job never runs
-    at all (the serve pays ONE planning job on first touch)."""
+def test_repeated_serves_plan_without_spark_jobs(spark, tmp_path):
+    """Serve planning reads its metadata on the driver (the index's
+    planning catalog): a first serve, a repeat and a budget that turns
+    every term coarse launch no Spark job before their first action, and
+    the tiny budget changes no row."""
+    from sparkforward.session import local_frame
+
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     index = build_inverted_index(docs, str(tmp_path / "mc"), num_partitions=2)
-    qdf = spark.createDataFrame([("q1", "spark query")], "q_id string, query string")
-    wand_topk(index, qdf, k=5).collect()
-    n_block = len(index._block_meta)
-    assert n_block > 0
-    assert len(index._shard_meta) == 0  # no overflow -> no aggregate job
-    wand_topk(index, qdf, k=5).collect()
-    assert len(index._block_meta) == n_block
-    # a tiny budget re-classifies the cached terms as coarse and pulls the
-    # shard aggregates; results stay identical (pinned elsewhere)
-    wand_topk(index, qdf, k=5, max_meta_blocks=0).collect()
-    assert len(index._shard_meta) > 0
-    assert len(index._block_meta) == n_block  # fine cache untouched
+    qdf = local_frame(spark, [("q1", "spark query")], "q_id string, query string")
+    sc = spark.sparkContext
+    rows = []
+    for i, budget in enumerate((None, None, 0)):
+        group = f"plan-{i}"
+        sc.setJobGroup(group, "serve planning")
+        try:
+            out = wand_topk(index, qdf, k=5, max_meta_blocks=budget)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        rows.append(sorted(tuple(r) for r in out.collect()))
+    assert rows[0] and rows[0] == rows[1] == rows[2]
 
 
 def test_wand_serve_fuzz_equals_exhaustive_bm25(spark, tmp_path):
@@ -945,13 +951,12 @@ def test_wand_serve_fuzz_clustered_ids(spark, tmp_path):
         pd.testing.assert_frame_equal(served_w, expected), seed
         # gap-split must actually fire on the run-local terms: no block of
         # a local term may bridge two runs
-        bm, _ = index.capped_block_meta([f"r{ri}w0" for ri in range(3)], 1 << 30)
-        for t, brs in bm.items():
-            for r in brs:
-                assert any(
-                    r["first_doc"] >= lo and r["last_doc"] < hi
-                    for lo, hi in runs
-                ), f"{t} block [{r['first_doc']}, {r['last_doc']}] bridges runs"
+        fine, _ = index.catalog.block_plan([f"r{ri}w0" for ri in range(3)], 1 << 30)
+        for r in fine.to_pylist():
+            assert any(
+                r["first_doc"] >= lo and r["last_doc"] < hi
+                for lo, hi in runs
+            ), f"{r['term']} block [{r['first_doc']}, {r['last_doc']}] bridges runs"
 
 def test_batch_serve_invariant_under_meta_budget(spark, docs, tmp_path):
     """The 64-query batch entry's rows must be IDENTICAL under

@@ -1,7 +1,13 @@
-"""Session helpers: the Arrow local-relation builder and the driver heap
-default."""
+"""Session helpers: the Arrow local-relation builder, the driver heap
+default, and the Python-worker daemon's zip-archive guard."""
 
+import importlib
 import os
+import subprocess
+import sys
+import textwrap
+import zipfile
+import zipimport
 
 import numpy as np
 import pyarrow as pa
@@ -80,3 +86,166 @@ def test_default_driver_memory_is_a_third_of_physical():
     mib = int(mem[:-1])
     assert 0 < mib * 2**20 <= phys / 3
     assert mib == phys // 3 // 2**20
+
+
+OLD_PYTHON = pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="zipimport re-reads lazily from 3.13"
+)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture
+def guarded_archive(tmp_path, monkeypatch):
+    """A zip archive holding module ``sfwd_guard_probe``, imported from
+    ``sys.path``, with the daemon's guard installed (undone afterwards).
+    Yields ``(archive, reads)``: ``reads`` lists the archive paths
+    ``zipimport._read_directory`` is called with."""
+    from sparkforward import worker_daemon
+
+    archive = str(tmp_path / "probe.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("sfwd_guard_probe.py", "VALUE = 1\n")
+    reads: list[str] = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    monkeypatch.syspath_prepend(archive)
+    try:
+        import sfwd_guard_probe
+
+        assert sfwd_guard_probe.VALUE == 1
+        assert worker_daemon.install()
+        yield archive, reads
+    finally:
+        sys.modules.pop("sfwd_guard_probe", None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+@OLD_PYTHON
+def test_guard_skips_an_unchanged_archive(guarded_archive, monkeypatch):
+    """Once stamped, an unchanged archive is not re-read by
+    ``importlib.invalidate_caches()``; without the guard every call
+    re-reads it."""
+    archive, reads = guarded_archive
+    importlib.invalidate_caches()  # first guarded call stamps the importer
+    reads.clear()
+    for _ in range(3):
+        importlib.invalidate_caches()
+    assert archive not in reads
+    from sparkforward import worker_daemon
+
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", worker_daemon._read_archive
+    )
+    importlib.invalidate_caches()
+    assert archive in reads
+
+
+@OLD_PYTHON
+def test_guard_rereads_a_rewritten_archive(guarded_archive):
+    """An archive rewritten with new content (and a new size) is re-read,
+    and the new module content imports after ``invalidate_caches()``."""
+    archive, reads = guarded_archive
+    importlib.invalidate_caches()
+    reads.clear()
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("sfwd_guard_probe.py", "VALUE = 22222  # rewritten\n")
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1
+    sys.modules.pop("sfwd_guard_probe")
+    import sfwd_guard_probe
+
+    assert sfwd_guard_probe.VALUE == 22222
+
+
+def _guard_reporter():
+    """A mapInPandas body reporting whether its worker runs the guarded
+    ``invalidate_caches`` and how many of its zip importers are stamped
+    (a nested function, so it pickles by value)."""
+
+    def report(it):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        guarded = zipimport.zipimporter.invalidate_caches.__module__
+        stamped = sum(
+            hasattr(f, "_sfwd_stamp") for f in list(sys.path_importer_cache.values())
+        )
+        for _ in it:
+            pass
+        yield pd.DataFrame({"guard": [guarded], "stamped": [stamped]})
+
+    return report
+
+
+@OLD_PYTHON
+def test_session_workers_run_the_guard(spark):
+    """A one-partition Python stage of a ``get_spark`` session runs in a
+    worker forked by the engine's daemon: the guard is installed and has
+    stamped the worker's zip importers (a conf that silently did not take
+    effect would report pyspark's own method)."""
+    row = (
+        spark.range(0, 1, 1, 1)
+        .mapInPandas(_guard_reporter(), "guard string, stamped long")
+        .collect()[0]
+    )
+    assert row["guard"] == "sparkforward.worker_daemon"
+    assert row["stamped"] > 0
+
+
+def _run_session(tmp_path, extra_conf: dict) -> subprocess.CompletedProcess:
+    """Start a one-core ``get_spark`` session in a fresh interpreter whose
+    working directory is outside the repository and whose environment has
+    no PYTHONPATH (only the driver puts the repo on ``sys.path``), then run
+    one Python stage."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from sparkforward.session import get_spark
+        spark = get_spark(cores=1, shuffle_partitions=1, extra_conf={extra_conf!r})
+        from tests.test_session import _guard_reporter
+        row = spark.range(0, 1, 1, 1).mapInPandas(
+            _guard_reporter(), "guard string, stamped long").collect()[0]
+        print("GUARD", row["guard"])
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    return subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+
+
+def test_session_started_outside_the_repo_runs_python_stages(tmp_path):
+    """Workers find the daemon module whatever the driver's working
+    directory: a session started elsewhere runs a Python stage."""
+    out = _run_session(tmp_path, {})
+    assert out.returncode == 0, out.stderr[-3000:]
+    want = "sparkforward.worker_daemon" if sys.version_info < (3, 13) else "zipimport"
+    assert f"GUARD {want}" in out.stdout, out.stdout[-2000:]
+
+
+def test_unimportable_worker_daemon_fails_loudly(tmp_path):
+    """A daemon module the workers cannot import fails session creation
+    with an error naming the module and the workers' PYTHONPATH, instead
+    of an opaque end-of-stream error in a later Python stage."""
+    out = _run_session(
+        tmp_path, {"spark.python.daemon.module": "sparkforward.no_such_daemon"}
+    )
+    assert out.returncode != 0
+    assert "RuntimeError: Python workers failed to start" in out.stderr, out.stderr[-3000:]
+    assert "'sparkforward.no_such_daemon'" in out.stderr
+    assert f"workers' PYTHONPATH '{REPO}" in out.stderr
