@@ -23,28 +23,48 @@ sys.path.insert(0, _REPO)
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
+def _package_zip() -> str:
+    """Path of a zip of this tree's ``sparkforward`` sources, named by a
+    hash of their paths and bytes: another checkout gets another file, so
+    a run never ships a different tree's package. Written once per content
+    (temp file + rename, so no reader sees a torn zip)."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    pkg = os.path.join(_REPO, "sparkforward")
+    sources = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    sources.append((os.path.relpath(full, _REPO), fh.read()))
+    sources.sort()
+    h = hashlib.sha256()
+    for rel, data in sources:
+        h.update(rel.encode() + b"\0" + len(data).to_bytes(8, "little") + data)
+    tmp_dir = tempfile.gettempdir()
+    zip_path = os.path.join(tmp_dir, f"sparkforward_pkg-{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        fd, tmp = tempfile.mkstemp(dir=tmp_dir, suffix=".zip")
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for rel, data in sources:
+                zf.writestr(rel, data)
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ensure_pkg_on_executors(spark: SparkSession) -> None:
     """Ship sparkforward to executors (addPyFile zip) — covers sessions that
     were created before this module set PYTHONPATH, and any non-local master."""
-    import zipfile
-
     marker = "_sparkforward_shipped"
     sc = spark.sparkContext
     if getattr(sc, marker, False):
         return
-    zip_path = os.path.join("/tmp", "sparkforward_pkg.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            pkg = os.path.join(_REPO, "sparkforward")
-            for root, _dirs, files in os.walk(pkg):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        zf.write(full, os.path.relpath(full, _REPO))
-    try:
-        sc.addPyFile(zip_path)
-    except Exception:  # noqa: BLE001 — already added in this context
-        pass
+    # re-adding a registered path only logs a warning, and the hash-named
+    # path is registered only with these bytes
+    sc.addPyFile(_package_zip())
     setattr(sc, marker, True)
 
 
@@ -78,8 +98,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_wand_batch_topk": q.q_bm25_wand_batch_topk,
         # incremental maintenance: build 80%, append 20%, serve (judge r5 #4)
         "bm25_appended_topk": q.q_bm25_appended_topk,
-        # LSM segment-mode maintenance: 70% + two stacked segment appends,
-        # served from the 3-segment stack (untouched rows never rewritten)
+        # LSM maintenance across a compaction: 70% + two lsm appends (the
+        # second auto-compacts), then one lsm segment on the compacted base
         "bm25_segment_topk": q.q_bm25_segment_topk,
         # Lucene-style LSM maintenance: each append writes ONLY the delta's
         # own mini-index (O(delta bytes)); serve concatenates per-segment

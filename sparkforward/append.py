@@ -46,34 +46,6 @@ Two append modes trade write amplification against read fan-in:
     mirroring the reference's append-only contract; a colliding id would
     corrupt posting order and is rejected up front (B2 analog).
 
-* ``mode="segment"``: the 100-TB fast path — untouched base rows are **not
-  rewritten at all**. The new generation holds ONLY the delta-touched
-  terms' re-merged rows; a term-tombstone list hides those terms' stale
-  rows in older segments, and :func:`postings.compose_segment_postings`
-  stacks the segments at load time, inflating stale segments' ``max_z`` /
-  deflating ``min_z`` by the avgdl-ratio bound (sound pruning; serving is
-  EXACT because final scores always recompute from raw tf/dl under the
-  current avgdl). :func:`compact_index` folds the stack back into one
-  generation that is byte-identical to a scratch union build — block
-  boundaries are avgdl-free and each visible row was produced by the exact
-  merge kernel at SOME append, so compaction is a map-only metadata refresh
-  plus a rewrite.
-
-Scale notes (100 TB): the delta pays tokenize + shuffle only for ITS OWN
-postings. In rewrite mode the base additionally pays one
-embarrassingly-parallel metadata rewrite (every byte rewritten once per
-append — amortize by batching appends); in segment mode it pays NOTHING
-per append beyond the touched-term re-merge, at the cost of one extra
-parquet scan branch per segment at serve time — compact on a cadence
-(``max_segments``) exactly like an LSM store.
-
-Honest caveat on ``mode="segment"``: tombstoning is TERM-granular, and
-under a Zipfian vocabulary nearly every delta touches the head terms that
-hold most of the index's bytes — so segment mode's write savings over
-rewrite mode is mostly the untouched-TAIL re-merge plus the whole
-untouched metadata refresh, not the head bytes. That is why the third
-mode exists:
-
 * ``mode="lsm"`` (Lucene-style per-segment postings): the delta writes its
   OWN complete mini-index — every delta term's posting lists built from
   the delta's docs alone, salted under the pinned union head map — and NO
@@ -85,28 +57,38 @@ mode exists:
   list IN GLOBAL DOC ORDER (appends are id-monotone, so segment order is
   doc order; blocks are delta-restarted and self-contained) — the
   cursor-level cross-segment merge degenerates to concatenation.
-  Two invariants make this exact:
+  Three invariants make this exact:
 
   - **Pinned salt layout.** Every visible row of a term, in every
     segment, is salted at the SAME doc-modulo. The head map is persisted
     in ``stats.json``; each lsm append re-derives the union head map and
-    re-merges (tombstone + rewrite into the new segment) ONLY the terms
-    whose modulus changed — a df-doubling event, so each term re-shards
-    O(log df) times over the index's lifetime, amortized O(bytes · log)
-    instead of O(bytes · appends).
+    re-merges ONLY the terms whose modulus changed into the new segment,
+    writing a term tombstone that hides their rows in every older segment
+    — a df-doubling event, so each term re-shards O(log df) times over the
+    index's lifetime, amortized O(bytes · log) instead of
+    O(bytes · appends).
+  - **Sound stale bounds.** Each segment records the avgdl its block
+    bounds were written under; the compose scales older segments'
+    ``max_z`` / ``min_z`` by the avgdl ratio (sound pruning), and serving
+    stays EXACT because final scores always recompute from raw tf/dl under
+    the current avgdl.
   - **Additive term dictionaries.** Each lsm segment stores its DELTA's
     (term, df) only; :func:`postings.current_terms` sums them at
     load and re-derives idf/n_shards under the current corpus — so the
     dictionary write is O(delta vocabulary) too.
 
-  Compaction of an lsm stack re-merges every visible row through the
-  exact build kernel (:func:`postings.salt_partials` +
-  :func:`postings.merge_salted`) — byte-identical to a scratch union
-  build by construction; the metadata-refresh shortcut only applies to
-  term-granular stacks, where each (term, salt) is visible from exactly
-  one segment. ``mode="segment"`` appends cannot stack on an lsm index
-  (their union-dictionary and one-segment-per-shard invariants would
-  break) — compact first, or keep using lsm.
+  :func:`compact_index` folds a stack back into one generation by
+  re-merging every visible row through the exact build kernel
+  (:func:`postings.salt_partials` + :func:`postings.merge_salted`) —
+  byte-identical to a scratch union build by construction. Compact on a
+  cadence (``max_segments``) exactly like an LSM store: each segment is
+  one more parquet scan branch at serve time.
+
+Scale notes (100 TB): the delta pays tokenize + shuffle only for ITS OWN
+postings. In rewrite mode the base additionally pays one
+embarrassingly-parallel metadata rewrite (every byte rewritten once per
+append — amortize by batching appends); in lsm mode it pays nothing per
+append beyond the resharded terms' re-merge.
 """
 
 from __future__ import annotations
@@ -133,7 +115,6 @@ from sparkforward.postings import (
     compose_segment_postings,
     current_terms,
     head_map,
-    index_data_root,
     load_deletes,
     merge_salted,
     salt_partials,
@@ -225,20 +206,21 @@ def _dir_bytes(d: str) -> int:
     return total
 
 
-def _stored_head(stats: dict, base_terms: DataFrame) -> dict[str, int]:
-    """The per-term shard moduli the committed index's visible rows were
-    ACTUALLY written under. Round-7+ builds/appends pin it in stats.json;
-    older indexes derive it from the terms table (n_shards > 1 rows only —
-    bounded by the head-term count, tiny by construction)."""
-    h = stats.get("head")
-    if h is not None:
-        return {t: int(m) for t, m in h.items()}
-    return {
-        r["term"]: int(r["n_shards"])
-        for r in base_terms.filter(F.col("n_shards") > 1)
-        .select("term", "n_shards")
-        .collect()
-    }
+def _load_stats(path: str, op: str) -> dict:
+    """The committed ``stats.json``, checked for what maintenance needs and
+    every build writes: the block layout, the exact integer token total
+    (``n_docs * avgdl`` cannot recover it exactly) and the pinned head map
+    (the shard moduli the visible rows were written under)."""
+    with open(os.path.join(path, "stats.json")) as fh:
+        stats = json.load(fh)
+    missing = [k for k in ("sum_dl", "head") if k not in stats]
+    if stats.get("layout") != "block" or missing:
+        lacks = f" and no {missing}" if missing else ""
+        raise ValueError(
+            f"{op}: index at {path} has layout={stats.get('layout')!r}{lacks}"
+            " — rebuild it with postings.build_inverted_index"
+        )
+    return stats
 
 
 def _visible_base(spark: SparkSession, path: str, stats: dict) -> DataFrame:
@@ -317,14 +299,15 @@ def append_to_index(
     (streaming.stream_ingest_lsm's exactly-once recipe).
 
     ``mode="rewrite"`` produces a single generation byte-identical to a
-    scratch union build; ``mode="segment"`` stacks a segment holding only
-    the touched terms; ``mode="lsm"`` stacks the delta's own complete
+    scratch union build; ``mode="lsm"`` stacks the delta's own complete
     mini-index — O(delta bytes) written, no base row read (see module
-    docstring). ``max_segments`` (segment/lsm modes) auto-compacts once
-    the stack exceeds that many segments.
+    docstring). ``max_segments`` (lsm mode) auto-compacts once the stack
+    exceeds that many segments.
     """
-    if mode not in ("rewrite", "segment", "lsm"):
-        raise ValueError(f"append_to_index: unknown mode {mode!r}")
+    if mode not in ("rewrite", "lsm"):
+        raise ValueError(
+            f"append_to_index: unknown mode {mode!r} (use 'rewrite' or 'lsm')"
+        )
     if extra_stats:
         clash = sorted(set(extra_stats) & _ENGINE_STATS_KEYS)
         if clash:
@@ -333,26 +316,8 @@ def append_to_index(
                 f"engine-owned stats: {clash} — rename them (e.g. under "
                 "an app prefix)"
             )
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
+    stats = _load_stats(path, "append_to_index")
     additive_base = stats.get("terms_layout") == "additive"
-    if mode == "segment" and additive_base:
-        raise ValueError(
-            "append_to_index: mode='segment' cannot stack on an lsm index "
-            "(its union-dictionary and one-segment-per-shard invariants do "
-            "not hold there) — compact_index first, or keep using mode='lsm'"
-        )
-    if stats.get("layout") != "block":
-        raise ValueError(
-            "append_to_index requires the block-granular layout; "
-            f"index at {path} has layout={stats.get('layout')!r} — rebuild it"
-        )
-    if "sum_dl" not in stats:
-        raise ValueError(
-            "append_to_index needs the exact integer token total "
-            "(stats.sum_dl, written by round-6+ builds); rebuild the base "
-            "index once — n_docs*avgdl cannot recover it exactly"
-        )
     referenced = _referenced_dirs(stats)
 
     # wipe orphaned generations from a crashed append: stats.json never
@@ -441,8 +406,8 @@ def append_to_index(
         touched_terms = F.broadcast(delta_df.select("term"))
 
         # which base rows feed the merge kernel, per mode:
-        #   rewrite/segment — the delta-TOUCHED terms' rows (their lists are
-        #     re-merged whole, so older copies can be dropped/tombstoned);
+        #   rewrite — the delta-TOUCHED terms' rows (their lists are
+        #     re-merged whole; untouched rows get a metadata refresh);
         #   lsm — only the RESHARDED terms' rows (union df pushed the term's
         #     pow-2 doc-modulo up, so every visible row of it must re-salt;
         #     a df-doubling event — each term reshards O(log df) times over
@@ -457,23 +422,21 @@ def append_to_index(
         #     functions of the union corpus).
         resharded: list[str] = []
         if mode == "lsm":
-            stored = _stored_head(stats, base_terms)
+            stored = stats["head"]
             resharded = sorted(
                 t for t, m in head.items() if int(stored.get(t, 1)) != int(m)
+            )
+            resharded_df = local_frame(
+                spark, [(t,) for t in resharded], "term string"
             )
         if mode == "rewrite" and additive_base:
             base_input = base_post
         elif mode == "lsm":
-            if resharded:
-                base_input = base_post.join(
-                    F.broadcast(
-                        local_frame(spark, [(t,) for t in resharded], "term string")
-                    ),
-                    "term",
-                    "left_semi",
-                )
-            else:
-                base_input = None
+            base_input = (
+                base_post.join(F.broadcast(resharded_df), "term", "left_semi")
+                if resharded
+                else None
+            )
         else:
             base_input = base_post.join(touched_terms, "term", "left_semi")
 
@@ -507,31 +470,22 @@ def append_to_index(
                 _write_postings(
                     touched_rows.unionByName(refreshed), gen_dir, n_buckets
                 )
+            attach_term_meta(df_union, float(n_union), head).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(gen_dir, "terms"))
         else:
             _write_postings(touched_rows, gen_dir, n_buckets)
-            # term tombstones hide stale rows in every OLDER segment:
-            # segment mode tombstones all touched terms (their lists were
-            # re-merged whole); lsm tombstones only the resharded ones
-            # (everything else concatenates) — both driver-bounded
-            tomb = (
-                delta_df.select("term")
-                if mode == "segment"
-                else local_frame(spark, [(t,) for t in resharded], "term string")
-            )
-            tomb.write.mode("overwrite").parquet(
+            # term tombstones hide the resharded terms' stale rows in every
+            # OLDER segment (everything else concatenates) — driver-bounded
+            resharded_df.write.mode("overwrite").parquet(
                 os.path.join(gen_dir, "tombstones")
             )
-        if mode == "lsm":
             # additive dictionary: the DELTA's (term, df) only — summed and
             # re-idf'd under the current corpus at load
             # (postings.current_terms)
             delta_df.select("term", "df").write.mode("overwrite").parquet(
                 os.path.join(gen_dir, "terms")
             )
-        else:
-            attach_term_meta(df_union, float(n_union), head).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(gen_dir, "terms"))
         delta_df.unpersist()
 
         # generation manifest: lineage + metrics for the append itself.
@@ -560,9 +514,9 @@ def append_to_index(
             "sum_dl": sum_dl_union,
             "data_dir": f"gen-{gen_no}",
             # re-pin the union head map: every visible row is now salted
-            # under it (rewrite/segment re-merge touched terms whole; lsm
-            # re-merges exactly the resharded ones; untouched terms keep
-            # their df, hence their modulus)
+            # under it (rewrite re-merges touched terms whole; lsm re-merges
+            # exactly the resharded ones; untouched terms keep their df,
+            # hence their modulus)
             "head": {t: int(m) for t, m in head.items()},
         }
         # the new generation carries the full union dictionary (lsm: the
@@ -572,11 +526,11 @@ def append_to_index(
         if mode != "lsm":
             new_stats.pop("terms_dir", None)
         new_stats.pop("data_avgdl", None)
-        if mode == "segment" or mode == "lsm":
+        if mode == "lsm":
             segs = stats.get("segments") or [
-                # first segment append: the committed base becomes segment
-                # 0 — its bounds were written under data_avgdl (== avgdl
-                # unless docs were deleted from the base since)
+                # first lsm append: the committed base becomes segment 0 —
+                # its bounds were written under data_avgdl (== avgdl unless
+                # docs were deleted from the base since)
                 {
                     "dir": stats.get("data_dir") or "",
                     "avgdl": float(stats.get("data_avgdl", stats["avgdl"])),
@@ -587,12 +541,11 @@ def append_to_index(
                 "dir": f"gen-{gen_no}",
                 "avgdl": avgdl,
                 "tombstones": f"gen-{gen_no}/tombstones",
+                "kind": "lsm",
             }
-            if mode == "lsm":
-                entry["kind"] = "lsm"
-                # the stack's dictionary is now additive: newest segments
-                # hold delta-local (term, df) summed at load
-                new_stats["terms_layout"] = "additive"
+            # the stack's dictionary is now additive: newest segments hold
+            # delta-local (term, df) summed at load
+            new_stats["terms_layout"] = "additive"
             new_stats["segments"] = segs + [entry]
         else:
             # rewrite: one complete generation, full union dictionary
@@ -644,30 +597,16 @@ def delete_docs(
     visible corpus (mirrors the reference's missing-ID raise, S3) and not
     be deleted already.
 
-    Works on single-generation indexes AND term-granular segment stacks
-    (the scan runs over the composed visible rows; the compose's
-    avgdl-ratio bound adjustment tracks the moved stats automatically).
-    Only lsm (additive-dictionary) stacks must compact first — their
-    per-segment dictionary sum cannot absorb a full-union rewrite.
+    Works on single-generation indexes; an lsm segment stack must compact
+    first — its additive per-segment dictionary sum cannot absorb a
+    full-union rewrite (takedown batches ride the compaction cadence).
     """
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
-    if stats.get("layout") != "block":
+    stats = _load_stats(path, "delete_docs")
+    if stats.get("segments"):
         raise ValueError(
-            "delete_docs requires the block-granular layout; "
-            f"index at {path} has layout={stats.get('layout')!r} — rebuild it"
-        )
-    if stats.get("terms_layout") == "additive":
-        raise ValueError(
-            "delete_docs on an lsm (additive-dictionary) stack is "
-            "unsupported — run compact_index first (the additive "
-            "per-segment dictionary sum cannot absorb a full-union "
-            "rewrite; takedown batches ride the compaction cadence)"
-        )
-    if "sum_dl" not in stats:
-        raise ValueError(
-            "delete_docs needs the exact integer token total "
-            "(stats.sum_dl, written by round-6+ builds); rebuild the base"
+            "delete_docs on an lsm segment stack is unsupported — run "
+            "compact_index first (the additive per-segment dictionary sum "
+            "cannot absorb a full-union rewrite)"
         )
     if isinstance(ids, DataFrame):
         ids = [r[0] for r in ids.collect()]
@@ -686,12 +625,10 @@ def delete_docs(
         if os.path.basename(d) not in referenced:
             shutil.rmtree(d, ignore_errors=True)
 
-    # the VISIBLE posting rows: term-granular stacks compose with their
-    # tombstones applied (a doc's postings live in exactly one visible
-    # row per term), single generations read directly. Deleting from a
-    # stack needs no data rewrite either — serve-side masking is
-    # segment-agnostic, and the compose's avgdl-ratio bound adjustment
-    # (driven by stats.avgdl, which this commit moves) stays sound.
+    # the committed posting rows (a doc's postings live in exactly one row
+    # per term); they stay on disk, and the loader's avgdl-ratio bound
+    # adjustment (driven by stats.avgdl, which this commit moves) keeps
+    # serving sound
     post = _visible_base(spark, path, stats)
     dels = new_ids  # ships in the kernel closure (bounded)
 
@@ -775,7 +712,6 @@ def delete_docs(
         # STORED head map (rows on disk stay salted at their moduli —
         # moduli never shrink in place, exactly like Lucene segments)
         base_terms = current_terms(spark, path, stats)
-        stored_head = _stored_head(stats, base_terms)
         df_delta = found.groupBy("term").agg(F.count("*").alias("ddf"))
         new_terms = (
             base_terms.select("term", "df")
@@ -788,7 +724,7 @@ def delete_docs(
             )
             .filter(F.col("df") > 0)
         )
-        attach_term_meta(new_terms, float(n_new), stored_head).write.mode(
+        attach_term_meta(new_terms, float(n_new), stats["head"]).write.mode(
             "overwrite"
         ).parquet(os.path.join(gen_dir, "terms"))
         all_dels = np.union1d(old_dels, new_ids)
@@ -830,88 +766,54 @@ def delete_docs(
 
 
 def compact_index(spark: SparkSession, path: str) -> PostingIndex:
-    """Fold a segment stack back into a single generation — byte-identical
-    to a from-scratch build of the same corpus.
+    """Fold an lsm segment stack and/or a delete sidecar back into a single
+    generation — byte-identical to a from-scratch build of the same
+    (surviving) corpus.
 
-    Term-granular stacks (``mode="segment"``): every visible (term, salt)
-    shard lives whole in exactly one segment, block boundaries and blobs
-    are avgdl-free, and every visible row was produced by the exact merge
-    kernel at some append — so compaction is a MAP-ONLY metadata refresh
-    (recompute max_z/min_z under the current avgdl — bit-identical to what
-    a scratch build computes for the same blocks) plus one bucketed
-    rewrite. No tokenize, no merge shuffle.
-
-    LSM stacks (``mode="lsm"``, ``terms_layout == "additive"``): a shard's
-    rows span segments, so the visible rows re-merge through the exact
-    build kernel (:func:`postings.salt_partials` +
+    A shard's rows span segments, so the visible rows re-merge through the
+    exact build kernel (:func:`postings.salt_partials` +
     :func:`postings.merge_salted`) under the pinned head map — the same
     inputs a scratch union build would stable-sort and re-encode, hence
     byte-identical output. The union dictionary is materialized from the
     additive per-segment tables (:func:`postings.current_terms`).
     One merge shuffle over the index — the LSM cadence cost, paid once per
-    ``max_segments`` appends instead of per append.
+    ``max_segments`` appends instead of per append. Tombstoned docs'
+    postings drop after assembly, and since deletes shrink dfs, the head
+    map then re-derives from the SURVIVING dictionary (what a scratch
+    build over the survivors would compute).
     """
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
+    stats = _load_stats(path, "compact_index")
     deletes = load_deletes(path, stats)
     if not stats.get("segments") and not len(deletes):
         return PostingIndex.load(spark, path)
 
-    additive = stats.get("terms_layout") == "additive"
-    if stats.get("segments"):
-        visible = compose_segment_postings(
-            spark, path, stats, adjust_bounds=False
-        ).drop("bucket")
-    else:  # deletes-only compaction of a single-generation index
-        visible = spark.read.parquet(
-            os.path.join(index_data_root(path, stats), "postings")
-        ).drop("bucket")
+    visible = _visible_base(spark, path, stats)
     terms_df = current_terms(spark, path, stats)
-    if additive or len(deletes):
-        # the full re-merge path: additive stacks interleave one shard's
-        # blocks across segments, and tombstone drops change blob bytes —
-        # both disqualify the map-only refresh. Deletes also shrink dfs,
-        # so the head map re-derives from the SURVIVING dictionary (what a
-        # scratch build over the survivors would compute).
-        if len(deletes):
-            salt_threshold = int(stats["salt_threshold"])
-            head = head_map(
-                [
-                    (r["term"], int(r["df"]))
-                    for r in terms_df.filter(
-                        F.col("df") > salt_threshold
-                    ).collect()
-                ],
-                salt_threshold,
-                int(stats["n_salt"]),
-                int(stats.get("target_shard_postings", TARGET_SHARD_POSTINGS)),
-            )
-        else:
-            head = {t: int(m) for t, m in (stats.get("head") or {}).items()}
-        salted = salt_partials(
-            visible.select("term", "n", "doc_blob", "tf_blob", "dl_blob"),
-            head,
+    if len(deletes):
+        salt_threshold = int(stats["salt_threshold"])
+        head = head_map(
+            [
+                (r["term"], int(r["df"]))
+                for r in terms_df.filter(F.col("df") > salt_threshold).collect()
+            ],
+            salt_threshold,
+            int(stats["n_salt"]),
+            int(stats.get("target_shard_postings", TARGET_SHARD_POSTINGS)),
         )
-        refreshed = merge_salted(
-            salted, head, float(stats["avgdl"]), int(stats["block_size"]),
-            drop_docs=deletes if len(deletes) else None,
+        # dictionary already holds surviving dfs; refresh n_shards under
+        # the re-derived head (idf unchanged — same df, n_docs)
+        terms_df = attach_term_meta(
+            terms_df.select("term", "df"), float(stats["n_docs"]), head
         )
-        if len(deletes):
-            # dictionary already holds surviving dfs; refresh n_shards
-            # under the re-derived head (idf unchanged — same df, n_docs)
-            terms_df = attach_term_meta(
-                terms_df.select("term", "df"), float(stats["n_docs"]), head
-            )
     else:
-        # map-only path: pin the moduli the visible rows were ACTUALLY
-        # written under (pre-round-7 stacks have no stored head — derive
-        # it from the dictionary rather than pinning a wrong empty map,
-        # which would make a later lsm append reshard the whole head)
-        head = _stored_head(stats, terms_df)
-        refreshed = visible.select(*_BLOCK_COLS).mapInPandas(
-            _refresh_block_meta(float(stats["avgdl"])),
-            schema=BLOCK_POSTING_SCHEMA,
-        )
+        head = {t: int(m) for t, m in stats["head"].items()}
+    refreshed = merge_salted(
+        salt_partials(
+            visible.select("term", "n", "doc_blob", "tf_blob", "dl_blob"), head
+        ),
+        head, float(stats["avgdl"]), int(stats["block_size"]),
+        drop_docs=deletes if len(deletes) else None,
+    )
     gen_no = _next_gen(stats)
     gen_dir = os.path.join(path, f"gen-{gen_no}")
     _write_postings(refreshed, gen_dir, int(stats["n_buckets"]))

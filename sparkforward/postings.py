@@ -123,32 +123,6 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     return vals.astype(np.int64)
 
 
-#: legacy whole-row layout (pre-round-4): one row per (term, salt) carrying
-#: all blocks as offset-addressed slices of three blobs. Still readable by
-#: the serve (wand.py layout detection); no longer written.
-POSTING_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        # doc-modulo shard id: this row holds exactly the term's postings
-        # with doc_id % n_shards == salt. Doc-disjoint across salts, and the
-        # modulus is a power of two so shards of different terms nest — the
-        # property partition-parallel WAND serving relies on (wand.py).
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("n_shards", T.IntegerType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("doc_blob", T.BinaryType()),
-        T.StructField("tf_blob", T.BinaryType()),
-        T.StructField("dl_blob", T.BinaryType()),
-        T.StructField("block_last_doc", T.ArrayType(T.LongType())),
-        T.StructField("block_max_z", T.ArrayType(T.DoubleType())),
-        # per-block byte offsets into the three blobs: block-addressable
-        # lists, so WAND decodes only the blocks its cursors actually enter
-        T.StructField("block_doc_off", T.ArrayType(T.LongType())),
-        T.StructField("block_tf_off", T.ArrayType(T.LongType())),
-        T.StructField("block_dl_off", T.ArrayType(T.LongType())),
-    ]
-)
-
 #: block-granular layout (round 4, judge r3 #3): ONE ROW PER BLOCK, so the
 #: serve's metadata pass (term/salt/block_no/last_doc/max_z/min_z/n_bytes —
 #: parquet column pruning leaves the blob pages unread) can plan which
@@ -229,8 +203,8 @@ def encode_posting_list(
     gaps (:data:`GAP_SPLIT_FACTOR`), so a clustered term's block ranges
     hug its id runs instead of bridging them — the property that makes
     the serve's doc-range block pruning effective on crawl-ordered ids.
-    The returned ``block_len`` array carries the (now variable) lengths;
-    every decoder accepts it.
+    The returned ``block_len`` array carries the (now variable) lengths
+    the decoders read.
     """
     order = np.argsort(doc_ids, kind="stable")
     d, tf, dl = doc_ids[order], tfs[order], dls[order]
@@ -308,36 +282,22 @@ def encode_posting_blocks(
     return rows
 
 
-def decode_posting_list(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """-> (doc_ids, tfs, dls) for one PARTIAL row (plain cross-list deltas)."""
-    d = np.cumsum(varbyte_decode(bytes(row["doc_blob"])))
-    return d, varbyte_decode(bytes(row["tf_blob"])), varbyte_decode(bytes(row["dl_blob"]))
-
-
-def decode_blocked_posting_list(
-    row, block_size: int = BLOCK_SIZE
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """-> (doc_ids, tfs, dls) for one FINAL posting row (block-restart deltas).
+def decode_blocked_posting_list(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """-> (doc_ids, tfs, dls) for one (term, salt) row of block-restart
+    deltas and its per-block ``block_len`` array
+    (:func:`encode_posting_list`, or the serve's reassembly of a pruned
+    block subset).
 
     doc deltas restart at each block: within block b,
     ``doc[i] = cumsum[i] - cumsum[start_b - 1]`` (the block's first stored
-    value is absolute). A row carrying an explicit ``block_len`` array (the
-    serve's reassembly of a PRUNED block subset — interior gaps make block
-    starts non-uniform) decodes by those lengths instead of ``block_size``.
+    value is absolute).
     """
-    vals = varbyte_decode(bytes(row["doc_blob"]))
-    n = len(vals)
-    cs = np.cumsum(vals)
-    lens = row["block_len"] if "block_len" in row else None
-    if lens is not None:
-        lens = np.asarray(lens, dtype=np.int64)
-        starts = np.concatenate(([np.int64(0)], np.cumsum(lens)[:-1]))
-    else:
-        starts = np.arange(0, n, block_size)
+    cs = np.cumsum(varbyte_decode(bytes(row["doc_blob"])))
+    lens = np.asarray(row["block_len"], dtype=np.int64)
+    starts = np.concatenate(([np.int64(0)], np.cumsum(lens)[:-1]))
     base = np.zeros(len(starts), dtype=np.int64)
     base[1:] = cs[starts[1:] - 1]
-    sizes = np.diff(np.concatenate((starts, [n])))
-    d = cs - np.repeat(base, sizes)
+    d = cs - np.repeat(base, lens)
     return d, varbyte_decode(bytes(row["tf_blob"])), varbyte_decode(bytes(row["dl_blob"]))
 
 
@@ -368,10 +328,11 @@ def compose_segment_postings(
     spark: SparkSession, path: str, stats: dict, adjust_bounds: bool = True
 ) -> DataFrame:
     """Visible postings of a committed index: one generation, or an LSM
-    segment stack (append.py modes "segment" and "lsm").
+    segment stack (append.py mode "lsm").
 
     The visible set is the union over segments, where a term re-merged by a
-    NEWER segment tombstones its rows in every older one. Stale segments'
+    NEWER segment (an lsm append that resharded it) tombstones its rows in
+    every older one. Stale segments'
     block bounds were computed under THEIR avgdl; the current avgdl can move
     true z by at most the ratio avgdl_cur/avgdl_seg (monotone denominator
     bound: z = tf*(k1+1)/(tf + k1*(1-b) + k1*b*dl/avgdl), and for r =
@@ -577,9 +538,7 @@ class PlanningCatalog:
     def term_meta(self, terms: list[str]) -> dict[str, tuple[float, int]]:
         """term -> (idf, n_shards) for those of ``terms`` in the dictionary."""
         tb = self._dictionary(list(terms))
-        names, idf = tb["term"].to_pylist(), tb["idf"].to_pylist()
-        # a pre-round-2 dictionary has no n_shards: every term is unsharded
-        nsh = tb["n_shards"].to_pylist() if "n_shards" in tb.column_names else [1] * len(idf)
+        names, idf, nsh = (tb[c].to_pylist() for c in ("term", "idf", "n_shards"))
         return dict(zip(names, zip(idf, nsh)))
 
     def block_plan(self, terms: list[str], cap: int):

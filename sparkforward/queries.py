@@ -370,10 +370,12 @@ def _appended_index(spark: SparkSession, sf_dir: str):
 
 
 def _segmented_index(spark: SparkSession, sf_dir: str):
-    """An index grown to the full corpus by TWO stacked LSM segment appends
-    (70% -> 85% -> 100%): head terms are touched by both deltas, so the
-    second append re-merges rows the first one produced, and serving reads
-    a 3-deep segment stack with ratio-adjusted stale bounds."""
+    """An index grown to the full corpus by three lsm appends with one
+    auto-compaction between them (70% -> 80% -> 90% -> 100%): the second
+    append (``max_segments=2``) folds the 3-deep stack into a ``gen-N``
+    generation, and the third stacks an lsm segment on it — so serving
+    reads a stack whose base segment lives in a generation dir, not at the
+    index root, with ratio-adjusted stale bounds."""
     import tempfile
 
     from sparkforward.append import append_to_index
@@ -385,31 +387,33 @@ def _segmented_index(spark: SparkSession, sf_dir: str):
     docs = load_documents(spark, sf_dir)
     d = F.col("doc_id").cast("long")
     hi = int(docs.agg(F.max(d)).collect()[0][0])
-    c1, c2 = hi * 7 // 10, hi * 17 // 20
+    c1, c2, c3 = hi * 7 // 10, hi * 8 // 10, hi * 9 // 10
     path = tempfile.mkdtemp(prefix="sfwd_segidx_")
     build_inverted_index(
         docs.filter(d < c1), path,
         salt_threshold=100, n_salt=4, num_partitions=8,
     )
-    append_to_index(
-        spark, path, docs.filter((d >= c1) & (d < c2)),
-        num_partitions=8, mode="segment",
-    )
+    for lo, up, max_segments in ((c1, c2, None), (c2, c3, 2)):
+        append_to_index(
+            spark, path, docs.filter((d >= lo) & (d < up)),
+            num_partitions=8, mode="lsm", max_segments=max_segments,
+        )
     index = append_to_index(
-        spark, path, docs.filter(d >= c2), num_partitions=8, mode="segment"
+        spark, path, docs.filter(d >= c3), num_partitions=8, mode="lsm"
     ).cache()
     _WAND_INDEX_CACHE.put(spark, ("segmented", sf_dir), (index, path))
     return index
 
 
 def q_bm25_segment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSM segment-mode incremental maintenance under the hash gate: build
-    70% of the corpus, stack two segment appends (sparkforward.append
-    mode="segment" — untouched base rows never rewritten; term tombstones +
-    avgdl-ratio-adjusted stale bounds at load), and serve WAND top-10 from
-    the 3-segment stack. Serving a segment stack is EXACT (scores recompute
-    from raw tf/dl under the current avgdl; adjusted bounds only prune),
-    so rows must equal ``bm25_topk`` and the entry shares its oracle.
+    """LSM maintenance across a compaction under the hash gate: build 70%
+    of the corpus, stack two ``mode="lsm"`` appends (the second with
+    ``max_segments=2``, which auto-compacts the stack into one
+    generation), stack one more lsm append on the compacted generation,
+    and serve WAND top-10. Serving a segment stack is EXACT (scores
+    recompute from raw tf/dl under the current avgdl; adjusted bounds only
+    prune), so rows must equal ``bm25_topk`` and the entry shares its
+    oracle.
     """
     from sparkforward.wand import wand_topk
 

@@ -1,20 +1,28 @@
 """Top-k BM25 serving over the posting index: metadata-planned I/O,
-block-max WAND, DAAT, **lazy block decoding**.
+block-max pruning, two vectorized NumPy kernels.
 
 Per query: a driver-side metadata read of the block-granular index (its
 planning catalog: pyarrow, column-pruned — blob pages unread, no Spark
 job) plans which blocks to gather at all; the gather joins surviving
 blocks against a driver-known
 ``In(term, ...)`` predicate (pushed into the parquet scan — row-group
-min/max pruning on the sorted ``term`` column) plus broadcast key tables; a
-document-at-a-time WAND traversal with block-max skipping produces the
-top-k.
+min/max pruning on the sorted ``term`` column) plus broadcast key tables;
+one of two kernels then ranks each (query, serve shard) group:
+
+* :func:`wand_query_vec` — block-at-a-time vectorized block-max WAND over
+  a doc-range strip grid, best-first, pruning strips whose upper bound
+  cannot reach the running k-th score;
+* :func:`taat_query` — term-at-a-time exhaustive scoring of every
+  gathered posting.
+
+Both take the same input (one row per (term, salt) reassembled from the
+gathered blocks) and return the identical top-k.
 
 Three properties make this the 10^12-doc shape:
 
 * **Serving is doc-disjoint parallel.** Terms are stored in power-of-two
   doc-modulo shards (postings.py); a query fans out as one task per serve
-  shard, each traversing only docs of its residue class, and the per-shard
+  shard, each scoring only docs of its residue class, and the per-shard
   top-k merge is exact because shards are doc-disjoint. One hot query uses
   the whole cluster instead of one Python worker.
 * **Pruned blocks are pruned BYTES.** The planner lower-bounds the final
@@ -24,21 +32,22 @@ Three properties make this the 10^12-doc shape:
   workload-bounded: head terms above MAX_META_BLOCKS plan from per-shard
   aggregates with the filter pushed into Catalyst.
 * **Blocks decode lazily.** Blocks are self-contained (doc deltas restart
-  per block — postings.encode_posting_list), so ``seek`` jumps via binary
-  search over block-last metadata and only the blocks a cursor actually
-  enters are ever decompressed. Serving cost is O(blocks touched), not
-  O(df).
+  per block — postings.encode_posting_list), so the WAND kernel decodes
+  only the blocks that overlap a strip it actually scores. Serving cost
+  is O(blocks touched), not O(df).
 
 Pruning is **lossless** at every layer: block bounds are exact BM25 upper
 bounds computed at build time, and surviving documents are re-scored from
 raw (tf, dl) with the identical float64 formula as the exhaustive scorer —
 so ``wand_topk == bm25_topk`` holds exactly at the rounded-score
 granularity (it is the driver's oracle check for this query).
+
+Only the block-granular layout with doc-modulo shards (``block_no`` and
+``n_shards`` columns — what every build and append writes) is served;
+:func:`wand_topk` rejects anything else with a rebuild error.
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 import pandas as pd
@@ -50,9 +59,6 @@ from sparkforward.bm25 import B, K1, SCORE_DECIMALS
 from sparkforward.postings import PostingIndex, varbyte_decode
 from sparkforward.session import local_frame
 
-#: sentinel "no more docs in this shard" for shallow_bound's block-last slot
-_NO_DOC = 2**62
-
 RESULT_SCHEMA = T.StructType(
     [
         T.StructField("q_id", T.StringType()),
@@ -63,286 +69,11 @@ RESULT_SCHEMA = T.StructType(
 )
 
 
-class _ShardCursor:
-    """Lazy cursor over ONE (term, salt) shard row.
-
-    Decodes a block only when the cursor enters it; ``seek`` skips whole
-    blocks via binary search on ``block_last_doc``.
-    """
-
-    __slots__ = (
-        "idf", "avgdl", "n", "block_size",
-        "doc_blob", "tf_blob", "dl_blob",
-        "block_last", "block_max", "doc_off", "tf_off", "dl_off",
-        "n_blocks", "block_idx", "in_block",
-        "_docs", "_scores", "_decoded_block",
-        "max_score", "blocks_decoded", "block_len",
-    )
-
-    def __init__(self, row, avgdl: float, block_size: int):
-        self.idf = float(row["idf"])
-        self.avgdl = avgdl
-        self.n = int(row["n"])
-        self.block_size = block_size
-        self.doc_blob = bytes(row["doc_blob"])
-        self.tf_blob = bytes(row["tf_blob"])
-        self.dl_blob = bytes(row["dl_blob"])
-        self.block_last = np.asarray(row["block_last_doc"], dtype=np.int64)
-        self.block_max = self.idf * np.asarray(row["block_max_z"], dtype=np.float64)
-        self.doc_off = [int(x) for x in row["block_doc_off"]]
-        self.tf_off = [int(x) for x in row["block_tf_off"]]
-        self.dl_off = [int(x) for x in row["block_dl_off"]]
-        # explicit per-block lengths: present when the row is a serve-side
-        # reassembly of a PRUNED block subset (interior gaps break the
-        # uniform-block_size length rule)
-        bl = row["block_len"] if "block_len" in row else None
-        self.block_len = None if bl is None else [int(x) for x in bl]
-        self.n_blocks = len(self.block_last)
-        self.block_idx = 0
-        self.in_block = 0
-        self._docs: np.ndarray | None = None
-        self._scores: np.ndarray | None = None
-        self._decoded_block = -1
-        self.max_score = float(self.block_max.max()) if self.n_blocks else 0.0
-        self.blocks_decoded = 0
-
-    # ----------------------------- decoding ---------------------------- #
-    def _decode_block(self, b: int) -> None:
-        if self._decoded_block == b:
-            return
-        d0 = self.doc_off[b]
-        d1 = self.doc_off[b + 1] if b + 1 < self.n_blocks else len(self.doc_blob)
-        t0 = self.tf_off[b]
-        t1 = self.tf_off[b + 1] if b + 1 < self.n_blocks else len(self.tf_blob)
-        l0 = self.dl_off[b]
-        l1 = self.dl_off[b + 1] if b + 1 < self.n_blocks else len(self.dl_blob)
-        deltas = varbyte_decode(self.doc_blob[d0:d1])
-        self._docs = np.cumsum(deltas)  # first value is absolute (restart)
-        tf = varbyte_decode(self.tf_blob[t0:t1]).astype(np.float64)
-        dl = varbyte_decode(self.dl_blob[l0:l1]).astype(np.float64)
-        self._scores = self.idf * (tf * (K1 + 1.0)) / (
-            tf + K1 * (1.0 - B + B * dl / self.avgdl)
-        )
-        self._decoded_block = b
-        self.blocks_decoded += 1
-
-    # ------------------------------ cursor ----------------------------- #
-    def exhausted(self) -> bool:
-        return self.block_idx >= self.n_blocks
-
-    def current(self) -> int:
-        if self.exhausted():
-            return -1
-        self._decode_block(self.block_idx)
-        return int(self._docs[self.in_block])
-
-    def current_score(self) -> float:
-        self._decode_block(self.block_idx)
-        return float(self._scores[self.in_block])
-
-    def advance(self) -> None:
-        self.in_block += 1
-        block_len = self._block_len(self.block_idx)
-        if self.in_block >= block_len:
-            self.block_idx += 1
-            self.in_block = 0
-
-    def _block_len(self, b: int) -> int:
-        if self.block_len is not None:
-            return self.block_len[b]
-        if b == self.n_blocks - 1:
-            return self.n - b * self.block_size
-        return self.block_size
-
-    def shallow_bound(self, target: int) -> tuple[float, int]:
-        """(block max, block last doc) of the block that would contain
-        ``target`` — a *shallow* advance: metadata only, NO decode, cursor
-        position unchanged.
-
-        This is the sound block-max refinement bound for a pivot document:
-        the cursor's CURRENT block may end before the pivot
-        (``block_last < target``), in which case its maximum says nothing
-        about the pivot's block. Any occurrence of a doc in
-        ``[target, returned block_last]`` lies in exactly the returned
-        block, so its max is an exact upper bound for this shard's
-        contribution to any such doc. Returns ``(0.0, +inf-sentinel)`` when
-        the shard has no postings at or after ``target``.
-        """
-        if self.exhausted():
-            return 0.0, _NO_DOC
-        b = self.block_idx + int(
-            np.searchsorted(self.block_last[self.block_idx :], target, side="left")
-        )
-        if b >= self.n_blocks:
-            return 0.0, _NO_DOC
-        return float(self.block_max[b]), int(self.block_last[b])
-
-    def seek(self, target: int) -> None:
-        """First posting with doc >= target. Blocks whose last doc is below
-        the target are skipped WITHOUT decoding."""
-        if self.exhausted():
-            return
-        b = self.block_idx + int(
-            np.searchsorted(self.block_last[self.block_idx :], target, side="left")
-        )
-        if b >= self.n_blocks:
-            self.block_idx = self.n_blocks
-            self.in_block = 0
-            return
-        if b != self.block_idx:
-            self.block_idx = b
-            self.in_block = 0
-        self._decode_block(b)
-        self.in_block = max(
-            self.in_block,
-            int(np.searchsorted(self._docs, target, side="left")),
-        )
-        # target might exceed every doc in this block only if block_last lied
-        if self.in_block >= self._block_len(b):  # pragma: no cover (defensive)
-            self.block_idx += 1
-            self.in_block = 0
-
-
 def _keep_mask(docs: np.ndarray, dels: np.ndarray) -> np.ndarray:
     """True where ``docs`` is NOT in the sorted doc-tombstone array —
     vectorized membership against the (bounded) delete sidecar."""
     pos = np.searchsorted(dels, docs)
     return ~((pos < len(dels)) & (dels[np.minimum(pos, len(dels) - 1)] == docs))
-
-
-def wand_query(
-    term_rows: pd.DataFrame,
-    k: int,
-    avgdl: float,
-    block_size: int,
-    modulus: int = 1,
-    residue: int = 0,
-    stats_out: list | None = None,
-    init_threshold: float = -np.inf,
-    deletes: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Block-max WAND over one query's shard rows -> [(doc_id, score)].
-
-    ``deletes``: sorted doc-tombstone array (append.delete_docs) — a
-    tombstoned pivot is stepped over without scoring, exactly like a
-    foreign serve-shard residue; stored block bounds still include deleted
-    postings, which only over-estimates (sound).
-
-    ``stats_out``: when a list is passed, ``(blocks_decoded,
-    blocks_total)`` is appended — the pruning-efficiency counters.
-
-    ``init_threshold``: a sound lower bound on this (query, shard)'s final
-    k-th best score (the block-metadata bound the block-granular serve
-    derives before gathering) — pruning starts hot instead of waiting for
-    the heap to fill.
-
-    Returns the exact top-k by (rounded score desc, doc_id asc); ``score``
-    is the float64 BM25 sum over the query's matching terms, rounded to
-    SCORE_DECIMALS — identical to the exhaustive scorer's ranking rule.
-
-    ``modulus``/``residue`` restrict the traversal to docs with
-    ``doc_id % modulus == residue`` — the doc-disjoint serve-shard filter
-    (terms stored at a coarser shard count than the query's parallelism
-    still contain foreign residues; those are skipped without scoring).
-    """
-    cursors = [
-        _ShardCursor(row, avgdl, block_size) for _, row in term_rows.iterrows()
-    ]
-    # Heap items compare (rounded score, -doc_id): ties keep the smaller
-    # doc_id. Upper bounds are raw float64; pruning uses a one-rounding-unit
-    # margin so a raw score that would round up to tie the threshold is
-    # never skipped — pruning stays lossless w.r.t. the rounded ranking.
-    eps = 10.0 ** (-SCORE_DECIMALS)
-    heap: list[tuple[float, int]] = []
-    threshold = float(init_threshold)
-
-    while True:
-        live = [c for c in cursors if not c.exhausted()]
-        if not live:
-            break
-        live.sort(key=lambda c: c.current())
-        # pivot: smallest prefix whose UB sum could still reach the threshold
-        acc = 0.0
-        pivot_idx = -1
-        for i, c in enumerate(live):
-            acc += c.max_score
-            if acc > threshold - eps:
-                pivot_idx = i
-                break
-        if pivot_idx == -1:
-            break
-        pivot_doc = live[pivot_idx].current()
-        # extend to every cursor sitting on the pivot doc (sorted ties)
-        end = pivot_idx
-        while end + 1 < len(live) and live[end + 1].current() == pivot_doc:
-            end += 1
-        # Block-max refinement with SHALLOW-ADVANCED blocks: each prefix
-        # cursor contributes the max of the block that would contain the
-        # pivot (its current block may end before the pivot, whose max would
-        # underestimate the true bound — the unsoundness fixed in round 2).
-        prefix = live[: end + 1]
-        block_ub = 0.0
-        cover_last = _NO_DOC  # bound stays valid for all docs <= cover_last
-        for c in prefix:
-            bm, bl = c.shallow_bound(pivot_doc)
-            block_ub += bm
-            if bl < cover_last:
-                cover_last = bl
-        if block_ub <= threshold - eps:
-            # BMW skip: every doc in [pivot_doc, d_next-1] is bounded by
-            # block_ub (prefix shallow blocks cover through cover_last, and
-            # no cursor beyond the prefix holds a doc before its current),
-            # so jump the whole prefix past that range in one seek each.
-            d_next = max(pivot_doc, cover_last) + 1
-            if end + 1 < len(live):
-                d_next = min(d_next, max(pivot_doc + 1, live[end + 1].current()))
-            for c in prefix:
-                if not c.exhausted() and c.current() < d_next:
-                    c.seek(d_next)
-            continue
-        if live[0].current() == pivot_doc:
-            skip = modulus > 1 and pivot_doc % modulus != residue
-            if not skip and deletes is not None and len(deletes):
-                i = int(np.searchsorted(deletes, pivot_doc))
-                skip = i < len(deletes) and int(deletes[i]) == pivot_doc
-            if skip:
-                # foreign serve-shard residue or tombstoned doc: step over
-                # without scoring
-                for c in live:
-                    if c.current() == pivot_doc:
-                        c.advance()
-                    elif c.current() > pivot_doc:
-                        break
-                continue
-            # aligned: fully score the pivot document
-            score = 0.0
-            for c in live:
-                if c.current() == pivot_doc:
-                    score += c.current_score()
-                    c.advance()
-                elif c.current() > pivot_doc:
-                    break
-            item = (round(score, SCORE_DECIMALS), -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-                if len(heap) == k:
-                    threshold = max(heap[0][0], init_threshold)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-                threshold = max(heap[0][0], init_threshold)
-        else:
-            for c in live[:pivot_idx]:
-                if c.current() < pivot_doc:
-                    c.seek(pivot_doc)
-    if stats_out is not None:
-        stats_out.append(
-            (
-                sum(c.blocks_decoded for c in cursors),
-                sum(c.n_blocks for c in cursors),
-            )
-        )
-    out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return [(-d, s) for s, d in out]
 
 
 def _rmq_levels(a: np.ndarray) -> list[np.ndarray]:
@@ -391,7 +122,7 @@ class _VecCursor:
         "n_blocks", "_docs", "_scores", "_have", "blocks_decoded", "_avgdl",
     )
 
-    def __init__(self, row, avgdl: float, block_size: int):
+    def __init__(self, row, avgdl: float):
         self.idf = float(row["idf"])
         self._avgdl = avgdl
         self.n = int(row["n"])
@@ -399,24 +130,10 @@ class _VecCursor:
         self.tf_blob = bytes(row["tf_blob"])
         self.dl_blob = bytes(row["dl_blob"])
         self.lasts = np.asarray(row["block_last_doc"], dtype=np.int64)
+        self.firsts = np.asarray(row["block_first_doc"], dtype=np.int64)
+        self.lens = np.asarray(row["block_len"], dtype=np.int64)
         self.ubs = self.idf * np.asarray(row["block_max_z"], dtype=np.float64)
         nb = self.n_blocks = len(self.lasts)
-        fd = row["block_first_doc"] if "block_first_doc" in row else None
-        if fd is not None:
-            self.firsts = np.asarray(fd, dtype=np.int64)
-        else:
-            # sound widening: block j's docs start after block j-1's last
-            self.firsts = np.empty(nb, dtype=np.int64)
-            if nb:
-                self.firsts[0] = 0
-                self.firsts[1:] = self.lasts[:-1] + 1
-        bl = row["block_len"] if "block_len" in row else None
-        if bl is not None:
-            self.lens = np.asarray(bl, dtype=np.int64)
-        else:
-            self.lens = np.full(nb, block_size, dtype=np.int64)
-            if nb:
-                self.lens[-1] = self.n - (nb - 1) * block_size
         self.doc_bnd = np.asarray(
             list(row["block_doc_off"]) + [len(self.doc_blob)], dtype=np.int64
         )
@@ -477,25 +194,49 @@ def wand_query_vec(
     term_rows: pd.DataFrame,
     k: int,
     avgdl: float,
-    block_size: int,
     modulus: int = 1,
     residue: int = 0,
     stats_out: list | None = None,
     init_threshold: float = -np.inf,
     deletes: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
-    """Block-at-a-time vectorized block-max WAND (judge r4 #1).
+    """Block-at-a-time vectorized block-max WAND over one query's shard
+    rows -> ``[(doc_id, score)]``.
+
+    ``term_rows``: one row per (term, salt) cursor carrying ``idf``, ``n``,
+    the three blobs, per-block ``block_first_doc`` / ``block_last_doc`` /
+    ``block_len`` / ``block_max_z`` and per-block byte offsets
+    (``block_doc_off`` / ``block_tf_off`` / ``block_dl_off``) — the
+    :func:`postings.encode_posting_list` shape, or the serve's reassembly
+    of a pruned block subset (interior gaps allowed).
+
+    Returns the exact top-k by (rounded score desc, doc_id asc); ``score``
+    is the float64 BM25 sum over the query's matching terms, rounded to
+    SCORE_DECIMALS — identical to the exhaustive scorer's ranking rule and
+    to :func:`taat_query`.
+
+    ``modulus``/``residue`` restrict scoring to docs with
+    ``doc_id % modulus == residue`` — the doc-disjoint serve-shard filter
+    (terms stored at a coarser shard count than the query's parallelism
+    still contain foreign residues; those never score).
 
     ``deletes``: sorted doc-tombstone array — tombstoned postings are
-    masked out of every candidate batch alongside the serve-shard residue
-    filter; strip/block bounds keep the deleted postings' contributions,
-    which only over-estimates (sound pruning, exact scores).
+    masked out of every candidate batch alongside the residue filter;
+    strip/block bounds keep the deleted postings' contributions, which
+    only over-estimates (sound pruning, exact scores).
 
-    Same contract as :func:`wand_query` (exact top-k by rounded score
-    desc, doc asc; lossless block-max pruning with the one-rounding-unit
-    margin; ``init_threshold`` seeds the pruning threshold) but with NO
-    per-posting Python loop — the unit of work is a doc-range STRIP, and
-    everything inside a strip batch is NumPy:
+    ``init_threshold``: a sound lower bound on this (query, shard)'s final
+    k-th best score (the block-metadata bound the planner derives before
+    gathering) — pruning starts hot instead of waiting for k results.
+
+    ``stats_out``: when a list is passed, ``(blocks_decoded,
+    blocks_total)`` is appended — the pruning-efficiency counters.
+
+    Pruning is lossless: an upper bound is compared against the threshold
+    with a one-rounding-unit margin, so a raw score that would round up to
+    tie the k-th score is never skipped. There is no per-posting Python
+    loop — the unit of work is a doc-range STRIP, and everything inside a
+    strip batch is NumPy:
 
     * **Strip grid.** Strip boundaries are the union of every cursor's
       block-last docs, so each strip intersects AT MOST ONE block per
@@ -524,14 +265,11 @@ def wand_query_vec(
       applied only to docs whose strip survived pruning.
     * A strip is skipped iff ``UB <= threshold - eps`` with the threshold
       at visit time; thresholds only grow, so every skipped doc provably
-      ranks below k fully-scored docs at the rounded granularity — the
-      identical margin rule (and hence bit-identical results, tested) as
-      the per-posting kernel and the exhaustive scorer.
+      ranks below k fully-scored docs at the rounded granularity — hence
+      results bit-identical to TAAT and the exhaustive scorer (tested).
     """
     eps = 10.0 ** (-SCORE_DECIMALS)
-    cursors = [
-        _VecCursor(row, avgdl, block_size) for _, row in term_rows.iterrows()
-    ]
+    cursors = [_VecCursor(row, avgdl) for _, row in term_rows.iterrows()]
     cursors = [c for c in cursors if c.n_blocks]
     total_blocks = sum(c.n_blocks for c in cursors)
     if not cursors:
@@ -647,18 +385,23 @@ def taat_query(
     term_rows: pd.DataFrame,
     k: int,
     avgdl: float,
-    block_size: int,
     modulus: int = 1,
     residue: int = 0,
     stats_out: list | None = None,
     deletes: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
-    """Term-at-a-time exhaustive scoring, fully NumPy-vectorized.
+    """Term-at-a-time exhaustive scoring, fully NumPy-vectorized ->
+    ``[(doc_id, score)]``.
 
-    Decodes every shard, accumulates per-doc sums with
-    ``np.add.reduceat`` over the doc-sorted concatenation, ranks by
-    (rounded score desc, doc asc) — the exact rule the oracle uses.
-    ``modulus``/``residue``: serve-shard residue filter (see wand_query).
+    Takes the ``term_rows`` shape of :func:`wand_query_vec` and decodes
+    every row, accumulates per-doc float64 BM25 sums with
+    ``np.add.reduceat`` over the doc-sorted concatenation, rounds them to
+    SCORE_DECIMALS and returns the top-k by (rounded score desc, doc_id
+    asc) — the exact rule the oracle uses, so both kernels agree.
+    ``modulus``/``residue``: only docs with ``doc_id % modulus ==
+    residue`` score (the serve-shard filter). ``deletes``: sorted
+    doc-tombstone array; those docs never score. ``stats_out``: appends
+    ``(blocks, blocks)`` — TAAT decodes every block.
     """
     from sparkforward.postings import decode_blocked_posting_list
 
@@ -667,7 +410,7 @@ def taat_query(
         stats_out.append((total, total))
     docs_l, scores_l = [], []
     for _, row in term_rows.iterrows():
-        d, tf, dl = decode_blocked_posting_list(row, block_size)
+        d, tf, dl = decode_blocked_posting_list(row)
         tf64 = tf.astype(np.float64)
         s = float(row["idf"]) * (tf64 * (K1 + 1.0)) / (
             tf64 + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl)
@@ -717,8 +460,8 @@ _FINE_INTERVALS = 8
 
 def _serve_blocked(
     spark, index, postings, term_list, meta, q_terms, q_n_serve,
-    kk, avgdl, block_size, taat_max, acc_decoded, acc_total, io_stats, emit,
-    max_meta_blocks, legacy, deletes=None, deletes_bc=None,
+    kk, avgdl, taat_max, acc_decoded, acc_total, io_stats, emit,
+    max_meta_blocks, deletes=None, deletes_bc=None,
 ):
     """Block-granular serve: metadata plan -> block pre-filter -> gather.
 
@@ -776,10 +519,7 @@ def _serve_blocked(
 
     # ONE column-pruned driver-side read classifies terms, returns the fine
     # terms' block rows and the coarse terms' (term, salt) summaries.
-    # A legacy (n_shards-less) block index has arbitrary salt ids that the
-    # coarse join below cannot address — plan everything fine there.
-    cap = (1 << 62) if legacy else int(max_meta_blocks)
-    fine_tb, shard = index.catalog.block_plan(term_list, cap)
+    fine_tb, shard = index.catalog.block_plan(term_list, int(max_meta_blocks))
     coarse_terms = sorted(shard)
 
     def coarse_shardmax(t: str, s: int) -> float:
@@ -839,9 +579,8 @@ def _serve_blocked(
     fine_set = set(fine_terms)
 
     def _salts_for(t: str, s: int) -> list[int]:
-        # salt % m == s % m keeps every residue class serving shard s; for
-        # modulus-1 terms that is ALL salts (the legacy-layout case —
-        # distinct salts become distinct cursors, exact because per-term
+        # salt % m == s % m keeps every residue class serving shard s
+        # (distinct salts become distinct cursors, exact because per-term
         # salts are doc-disjoint)
         m_t = meta[t][1]
         return [salt for salt in fine_series.get(t, {}) if salt % m_t == s % m_t]
@@ -1104,8 +843,7 @@ def _serve_blocked(
                     "block_doc_off": offs(dbs),
                     "block_tf_off": offs(tbs),
                     "block_dl_off": offs(lbs),
-                    # explicit lengths: pruning leaves interior gaps, so
-                    # the uniform-block_size length rule no longer holds
+                    # pruning leaves interior gaps: lengths per block
                     "block_len": [int(x) for x in g["n"]],
                 }
             )
@@ -1132,9 +870,7 @@ def _serve_blocked(
         dels = deletes_bc.value if deletes_bc is not None else None
         if dels is not None and len(dels):
             kw["deletes"] = dels
-        hits = kernel(
-            tr, kk, avgdl, block_size, modulus, int(shard), stats_out=stats, **kw
-        )
+        hits = kernel(tr, kk, avgdl, modulus, int(shard), stats_out=stats, **kw)
         if stats:
             acc_decoded.add(stats[0][0])
             acc_total.add(stats[0][1])
@@ -1157,8 +893,10 @@ def wand_topk(
 ) -> DataFrame:
     """(q_id, id, rank, score) — doc-disjoint partition-parallel serving.
 
-    On a block-granular index (round-4 layout: one row per (term, salt,
-    block)) the serve plans I/O before touching blobs: a metadata-only pass
+    The index must be block-granular (one row per (term, salt, block),
+    with ``block_no`` and ``n_shards`` columns — what every build writes);
+    any other layout raises ``ValueError`` asking for a rebuild. The serve
+    plans I/O before touching blobs: a metadata-only pass
     (parquet column pruning — blob pages unread) derives, per (query,
     serve shard), a sound lower bound on the final k-th score from block
     MINIMA, prunes every block whose upper bound cannot reach it, and
@@ -1206,8 +944,15 @@ def wand_topk(
     up to a power of two) — lower latency for hot queries at the cost of
     replicating coarse-sharded term rows across tasks.
     """
+    postings = index.postings
+    missing = {"block_no", "n_shards"} - set(postings.columns)
+    if missing:
+        raise ValueError(
+            f"wand_topk: the index's postings have no {sorted(missing)} "
+            "column(s) — a pre-block layout that is no longer served; "
+            "rebuild the index with postings.build_inverted_index"
+        )
     avgdl = float(index.stats["avgdl"])
-    block_size = int(index.stats.get("block_size", 128))
     kk = int(k)
     spark = queries.sparkSession
 
@@ -1250,39 +995,11 @@ def wand_topk(
         hit = plan_cache.get(memo_key)
         if hit is not None:
             return hit
-    postings = index.postings
-    blocked = "block_no" in postings.columns
-    legacy = "n_shards" not in postings.columns
-    if legacy and not blocked:
-        # Pre-round-2 index layout: salts were hash-partition spill counters,
-        # NOT doc residues, so doc-disjoint fan-out is impossible — route
-        # every salt row to serve shard 0 with modulus 1 (the kernels merge
-        # multiple rows per term exactly; no residue filter may run, it
-        # would silently drop docs). A round-2 rebuild restores parallel
-        # serving. (Round 2's shim left salt>0 rows with an illegal
-        # sequence(salt, 0, 1) — judged broken; pinned by test_postings.)
-        postings = postings.withColumn("salt", F.lit(0)).withColumn(
-            "n_shards", F.lit(1)
-        )
-    # blocked + legacy (no n_shards): salts stay AS STORED — the blocked
-    # planner groups rows into per-salt cursors under one serve shard
-    # (modulus 1; the catalog reports n_shards=1), which is exact for any
-    # per-term doc-disjoint salting scheme.
     meta = index.catalog.term_meta(term_list)
 
     forced = 1
     if n_serve_shards and int(n_serve_shards) > 1:
-        if legacy:
-            import warnings
-
-            warnings.warn(
-                "n_serve_shards ignored: legacy (pre-doc-shard) index layout "
-                "has no doc-residue salts; rebuild the index for parallel "
-                "serving",
-                stacklevel=2,
-            )
-        else:
-            forced = 1 << (int(n_serve_shards) - 1).bit_length()  # next pow2
+        forced = 1 << (int(n_serve_shards) - 1).bit_length()  # next pow2
     q_terms: dict[str, list[str]] = {}
     for r in qt_rows:
         if r["term"] in meta:
@@ -1312,62 +1029,18 @@ def wand_topk(
         if deletes is not None and hasattr(index, "deletes_broadcast")
         else None
     )
-    if "block_no" in postings.columns:
-        # plan only dictionary-live terms: a deleted index can hold posting
-        # rows for a term whose df dropped to 0 (dictionary row removed,
-        # blobs untouched) — those rows are dead until compaction drops them
-        live_terms = [t for t in term_list if t in meta]
-        per_shard = _serve_blocked(
-            spark, index, postings, live_terms, meta, q_terms, q_n_serve,
-            kk, avgdl, block_size, taat_max, acc_decoded, acc_total,
-            io_stats, _emit,
-            MAX_META_BLOCKS if max_meta_blocks is None else int(max_meta_blocks),
-            legacy, deletes=deletes, deletes_bc=deletes_bc,
-        )
-        if per_shard is None:
-            return local_frame(spark, [], RESULT_SCHEMA)
-    else:
-        # legacy whole-row layout (pre-round-4 index): gather entire
-        # (term, salt) rows; laziness then saves decode but not I/O
-        qt_meta = local_frame(
-            spark,
-            [(q, t, meta[t][0], q_n_serve[q]) for q, ts in q_terms.items() for t in ts],
-            "q_id string, term string, idf double, q_n_serve int",
-        )
-        gathered = postings.filter(F.col("term").isin(term_list)).join(
-            F.broadcast(qt_meta), "term"
-        )
-        # a row with shard modulus m serves shards {salt, salt+m, ...} < q_n_serve
-        sharded = gathered.withColumn(
-            "serve_shard",
-            F.explode(
-                F.sequence(F.col("salt"), F.col("q_n_serve") - 1, F.col("n_shards"))
-            ),
-        )
-
-        def serve(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            q_id, shard = key
-            modulus = int(pdf["q_n_serve"].iloc[0])
-            # legacy layout has no planner θ0 — plain size dispatch
-            # (negative forces TAAT, 0 forces the WAND kernel)
-            if taat_max < 0 or int(pdf["n"].sum()) <= taat_max:
-                kernel = taat_query
-            else:
-                kernel = wand_query_vec
-            stats: list | None = [] if acc_decoded is not None else None
-            hits = kernel(
-                pdf, kk, avgdl, block_size, modulus, int(shard),
-                stats_out=stats,
-                deletes=deletes_bc.value if deletes_bc is not None else None,
-            )
-            if stats:
-                acc_decoded.add(stats[0][0])
-                acc_total.add(stats[0][1])
-            return _emit(q_id, hits)
-
-        per_shard = sharded.groupBy("q_id", "serve_shard").applyInPandas(
-            serve, schema=_SHARD_SCHEMA
-        )
+    # plan only dictionary-live terms: a deleted index can hold posting
+    # rows for a term whose df dropped to 0 (dictionary row removed,
+    # blobs untouched) — those rows are dead until compaction drops them
+    live_terms = [t for t in term_list if t in meta]
+    per_shard = _serve_blocked(
+        spark, index, postings, live_terms, meta, q_terms, q_n_serve,
+        kk, avgdl, taat_max, acc_decoded, acc_total, io_stats, _emit,
+        MAX_META_BLOCKS if max_meta_blocks is None else int(max_meta_blocks),
+        deletes=deletes, deletes_bc=deletes_bc,
+    )
+    if per_shard is None:
+        return local_frame(spark, [], RESULT_SCHEMA)
     # global top-k over doc-disjoint shard winners (exact: every global
     # top-k doc ranks <= k inside its own shard); the window input is
     # <= |q| x n_serve x k rows — tiny (a driver-side merge was A/B'd and

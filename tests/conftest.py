@@ -19,9 +19,8 @@ def spark():
 def index_variants(spark, tmp_path_factory):
     """Paths of one small index per on-disk layout the loader composes:
     ``plain``; ``deleted`` (data_avgdl != avgdl); ``lsm`` (a 3-deep
-    additive stack); ``segment`` (a 3-deep term-granular stack with term
-    tombstones); ``terms_dir`` (a delete's dictionary override under an
-    lsm stack)."""
+    additive stack whose appends tombstone resharded terms); ``terms_dir``
+    (a delete's dictionary override under an lsm stack)."""
     from pyspark.sql import functions as F
 
     from sparkforward.append import append_to_index, delete_docs
@@ -40,18 +39,17 @@ def index_variants(spark, tmp_path_factory):
         )
         return p
 
-    def append(p, lo, hi, mode):
+    def append(p, lo, hi):
         append_to_index(
-            spark, p, docs.filter((d >= lo) & (d < hi)), num_partitions=4, mode=mode
+            spark, p, docs.filter((d >= lo) & (d < hi)), num_partitions=4, mode="lsm"
         )
 
     build("plain", 1 << 30)
     delete_docs(spark, build("deleted", 1 << 30), docs.filter(d % 7 == 3).select(d))
-    for mode in ("lsm", "segment"):
-        p = build(mode, 300)
-        append(p, 300, 400, mode)
-        append(p, 400, 1 << 30, mode)
+    p = build("lsm", 300)
+    append(p, 300, 400)
+    append(p, 400, 1 << 30)
     p = build("terms_dir", 400)
     delete_docs(spark, p, docs.filter((d < 400) & (d % 7 == 3)).select(d))
-    append(p, 400, 1 << 30, "lsm")
+    append(p, 400, 1 << 30)
     return paths

@@ -129,112 +129,43 @@ def test_append_empty_delta_is_noop(spark, docs, tmp_path):
     assert index_signature(str(tmp_path / "a")) == before
 
 
-def test_segment_append_serves_like_scratch(spark, docs, tmp_path):
-    """LSM segment mode: untouched base rows stay on disk unrewritten; the
-    composed stack serves EXACTLY like a scratch union build (stale block
-    bounds are ratio-adjusted at load — sound pruning, exact scores)."""
-    base = docs.filter(F.col("doc_id") < 400)
-    _build(base, tmp_path / "a")
-    base_files = sorted(
-        p.name for p in (tmp_path / "a" / "postings").rglob("*.parquet")
-    )
-    idx = append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 400),
-        num_partitions=4, mode="segment",
-    )
-    scratch = _build(docs, tmp_path / "b")
-
-    # base data untouched on disk — the whole point of segment mode
-    assert sorted(
-        p.name for p in (tmp_path / "a" / "postings").rglob("*.parquet")
-    ) == base_files
+def test_segment_auto_compaction(spark, docs, tmp_path):
+    """max_segments folds an lsm stack once it grows past the cadence, and
+    a later lsm append stacks on the compacted generation: a segment 0
+    that lives in a gen-N dir (not at the index root) serves like scratch
+    and compacts byte-identical to it."""
+    d = F.col("doc_id")
+    path = str(tmp_path / "a")
+    _build(docs.filter(d < 300), path)
+    for lo, up in ((300, 360), (360, 420)):
+        append_to_index(
+            spark, path, docs.filter((d >= lo) & (d < up)),
+            num_partitions=4, mode="lsm", max_segments=2,
+        )
     with open(tmp_path / "a" / "stats.json") as fh:
         st = json.load(fh)
-    assert len(st["segments"]) == 2 and st["data_dir"] == "gen-1"
-
-    # default dispatch AND forced-WAND (pruning path under adjusted stale
-    # bounds) both == scratch
+    assert "segments" not in st and st["data_dir"] == "gen-3"  # compacted
+    idx = append_to_index(
+        spark, path, docs.filter(d >= 420), num_partitions=4, mode="lsm"
+    )
+    with open(tmp_path / "a" / "stats.json") as fh:
+        st = json.load(fh)
+    assert [seg["dir"] for seg in st["segments"]] == ["gen-3", "gen-4"]
+    scratch = _build(docs, tmp_path / "b")
     assert _serve(spark, idx).equals(_serve(spark, scratch))
     assert _serve(spark, idx, taat_max_postings=0).equals(
         _serve(spark, scratch, taat_max_postings=0)
     )
-
-
-def test_segment_append_twice_then_compact_matches_scratch(spark, docs, tmp_path):
-    """Two stacked segments (head terms touched twice — the second append
-    re-merges rows the FIRST append produced) serve like scratch, and
-    compaction folds the stack into a generation byte-identical to a
-    scratch union build."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
-    append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
-        num_partitions=4, mode="segment",
-    )
-    idx = append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-        num_partitions=4, mode="segment",
-    )
-    scratch = _build(docs, tmp_path / "b")
-    assert _serve(spark, idx).equals(_serve(spark, scratch))
-
-    compact_index(spark, str(tmp_path / "a"))
-    assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
-    with open(tmp_path / "a" / "stats.json") as fh:
-        st = json.load(fh)
-    assert "segments" not in st and st["data_dir"] == "gen-3"
-    # superseded segment data is gone; exactly one generation remains
-    assert not (tmp_path / "a" / "gen-1").exists()
-    assert not (tmp_path / "a" / "gen-2").exists()
-    assert not (tmp_path / "a" / "postings").exists()
-
-
-def test_segment_auto_compaction(spark, docs, tmp_path):
-    """max_segments folds the stack once it grows past the cadence."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
-    append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
-        num_partitions=4, mode="segment", max_segments=2,
-    )
-    with open(tmp_path / "a" / "stats.json") as fh:
-        assert len(json.load(fh)["segments"]) == 2  # under cadence: kept
-    append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-        num_partitions=4, mode="segment", max_segments=2,
-    )
-    with open(tmp_path / "a" / "stats.json") as fh:
-        assert "segments" not in json.load(fh)  # compacted
-    _build(docs, tmp_path / "b")
-    assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
-
-
-def test_rewrite_append_on_segmented_base(spark, docs, tmp_path):
-    """A rewrite-mode append composes a segmented base and lands a single
-    byte-identical generation (doubles as compaction-with-delta)."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
-    append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
-        num_partitions=4, mode="segment",
-    )
-    append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-        num_partitions=4, mode="rewrite",
-    )
-    _build(docs, tmp_path / "b")
-    assert index_signature(str(tmp_path / "a")) == index_signature(str(tmp_path / "b"))
-    with open(tmp_path / "a" / "stats.json") as fh:
-        assert "segments" not in json.load(fh)
-    assert not (tmp_path / "a" / "gen-1").exists()
-    assert not (tmp_path / "a" / "postings").exists()
+    compact_index(spark, path)
+    assert index_signature(path) == index_signature(str(tmp_path / "b"))
 
 
 def test_segment_stack_serve_fuzz_equals_exhaustive(spark, tmp_path):
-    """Seeded end-to-end fuzz over a 3-deep segment stack: random corpora
-    split at random id cuts, with deltas of very different doc lengths so
-    the union avgdl swings BOTH ways across appends (stale segments' bound
-    adjustment gets exercised in both the inflate and deflate direction).
+    """Seeded end-to-end fuzz over a 3-deep lsm segment stack: random
+    corpora split at random id cuts, with deltas of very different doc
+    lengths so the union avgdl swings BOTH ways across appends (stale
+    segments' bound adjustment gets exercised in both the inflate and
+    deflate direction).
     Serving the stack — at every planner budget regime and under the
     forced block-max WAND kernel — must be rank-identical to exhaustive
     declarative BM25 over the union corpus."""
@@ -252,10 +183,9 @@ def test_segment_stack_serve_fuzz_equals_exhaustive(spark, tmp_path):
         out["rank"] = out["rank"].astype("int64")
         return out.sort_values(["q_id", "rank"]).reset_index(drop=True)
 
-    # one seed per stack flavor keeps runtime flat while fuzzing both the
-    # term-granular (tombstone + ratio-bound) and the Lucene-style lsm
-    # (cross-segment concatenation + additive dictionary) compose paths
-    for seed, mode in ((11, "segment"), (47, "lsm")):
+    # cross-segment concatenation, additive dictionary, resharded-term
+    # tombstones and ratio-scaled bounds, over two independent corpora
+    for seed in (11, 47):
         rng = np.random.default_rng(seed)
 
         def mk(lo, hi, len_lo, len_hi):
@@ -276,10 +206,10 @@ def test_segment_stack_serve_fuzz_equals_exhaustive(spark, tmp_path):
         build_inverted_index(docs.filter(d < c1).repartition(3), path, **cfg)
         append_to_index(
             spark, path, docs.filter((d >= c1) & (d < c2)),
-            num_partitions=3, mode=mode,
+            num_partitions=3, mode="lsm",
         )
         idx = append_to_index(
-            spark, path, docs.filter(d >= c2), num_partitions=3, mode=mode
+            spark, path, docs.filter(d >= c2), num_partitions=3, mode="lsm"
         )
         queries = [
             (f"q{j}", " ".join(rng.choice(words, size=int(rng.integers(1, 4)))))
@@ -436,19 +366,28 @@ def test_lsm_auto_compaction(spark, docs, tmp_path):
 
 
 def test_segment_mode_rejected_on_lsm_base(spark, docs, tmp_path):
-    """Term-granular segment appends can't stack on an additive lsm base
-    (one-shard-one-segment + union-dictionary invariants don't hold)."""
-    _build(docs.filter(F.col("doc_id") < 300), tmp_path / "a")
+    """append_to_index has exactly two modes; the removed term-granular
+    ``mode="segment"`` is rejected before anything is written, on a
+    single generation and on an lsm stack alike."""
+    d = F.col("doc_id")
+    path = str(tmp_path / "a")
+    _build(docs.filter(d < 300), path)
+
+    def rejected():
+        before = sorted(os.listdir(path))
+        with pytest.raises(ValueError, match="unknown mode 'segment'"):
+            append_to_index(
+                spark, path, docs.filter(d >= 420), num_partitions=4,
+                mode="segment",
+            )
+        assert sorted(os.listdir(path)) == before
+
+    rejected()
     append_to_index(
-        spark, str(tmp_path / "a"),
-        docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 420)),
+        spark, path, docs.filter((d >= 300) & (d < 420)),
         num_partitions=4, mode="lsm",
     )
-    with pytest.raises(ValueError, match="lsm index"):
-        append_to_index(
-            spark, str(tmp_path / "a"), docs.filter(F.col("doc_id") >= 420),
-            num_partitions=4, mode="segment",
-        )
+    rejected()
 
 
 def test_rewrite_append_on_lsm_base(spark, docs, tmp_path):
@@ -522,3 +461,32 @@ def test_extra_stats_rejects_engine_owned_keys(spark, tmp_path):
 
     with open(_os.path.join(path, "stats.json")) as fh:
         assert _json.load(fh)["app_tag"] == "r8"
+
+
+def test_segment_stack_limit_raises_before_reading(spark, tmp_path):
+    """The documented 128-live-segment limit (the composed block_no packs
+    the segment ordinal above 24 bits): loading a 129-deep stack fails
+    with the compaction hint before reading any parquet — there is none
+    under this path, so a read would fail differently, as it does at 128."""
+
+    def load(n_segments):
+        stats = {
+            "n_docs": 10.0, "avgdl": 5.0, "layout": "block",
+            "terms_layout": "additive",
+            "segments": [
+                {"dir": f"gen-{i}" if i else "", "avgdl": 5.0,
+                 "tombstones": f"gen-{i}/tombstones" if i else None,
+                 "kind": "lsm"}
+                for i in range(n_segments)
+            ],
+        }
+        (tmp_path / "stats.json").write_text(json.dumps(stats))
+        PostingIndex.load(spark, str(tmp_path))
+
+    with pytest.raises(
+        RuntimeError, match=r"segment stack too deep \(129 > 128\).*compact_index first"
+    ):
+        load(129)
+    with pytest.raises(Exception) as e:
+        load(128)
+    assert "too deep" not in str(e.value)

@@ -13,6 +13,7 @@ all sound, so results equal exhaustive BM25 over the surviving corpus.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -126,7 +127,7 @@ def test_append_after_delete_is_exact(spark, docs, tmp_path):
     delta = docs.filter(d >= 400)
     build_inverted_index(base, str(tmp_path / "a"), **CFG)
     delete_docs(spark, str(tmp_path / "a"), _del_ids(base, 7, 3))
-    for mode in ("rewrite", "segment", "lsm"):
+    for mode in ("rewrite", "lsm"):
         import shutil
 
         shutil.copytree(tmp_path / "a", tmp_path / f"m_{mode}")
@@ -141,38 +142,36 @@ def test_append_after_delete_is_exact(spark, docs, tmp_path):
         assert _serve(spark, idx).equals(_serve(spark, scratch)), mode
 
 
-def test_delete_on_segment_stack_and_lsm_raise(spark, docs, tmp_path):
-    """Deletes compose with TERM-GRANULAR segment stacks directly (the
-    scan runs over the composed visible rows; the compose's avgdl-ratio
-    bound adjustment tracks the moved stats): serve == scratch build of
-    the survivors, and compaction physically drops the tombstones.
-    Additive (lsm) stacks still require a compaction first."""
+def test_delete_on_lsm_stack_raises(spark, docs, tmp_path):
+    """An lsm segment stack refuses a delete (its additive per-segment
+    dictionary cannot absorb a full-union rewrite) without writing
+    anything; once compacted, the delete serves == a scratch build of the
+    survivors, and a second compaction physically drops the tombstones."""
     d = F.col("doc_id").cast("long")
-    build_inverted_index(docs.filter(d < 400), str(tmp_path / "a"), **CFG)
+    path = str(tmp_path / "a")
+    build_inverted_index(docs.filter(d < 400), path, **CFG)
     append_to_index(
-        spark, str(tmp_path / "a"), docs.filter(d >= 400),
-        num_partitions=4, mode="segment",
+        spark, path, docs.filter(d >= 400), num_partitions=4, mode="lsm",
     )
-    idx = delete_docs(spark, str(tmp_path / "a"), _del_ids(docs, 7, 3))
+    def state():
+        with open(os.path.join(path, "stats.json")) as fh:
+            return sorted(os.listdir(path)), fh.read()
+
+    before = state()
+    with pytest.raises(ValueError, match="compact_index first"):
+        delete_docs(spark, path, _del_ids(docs, 7, 3))
+    assert state() == before
+
+    compact_index(spark, path)
+    idx = delete_docs(spark, path, _del_ids(docs, 7, 3))
     survivors = docs.filter(d % 7 != 3)
     scratch = build_inverted_index(survivors, str(tmp_path / "b"), **CFG)
     assert _serve(spark, idx).equals(_serve(spark, scratch))
     assert _serve(spark, idx, taat_max_postings=0).equals(
         _serve(spark, scratch, taat_max_postings=0)
     )
-    compact_index(spark, str(tmp_path / "a"))
-    assert index_signature(str(tmp_path / "a")) == index_signature(
-        str(tmp_path / "b")
-    )
-
-    # lsm stacks: additive dictionaries can't absorb a full-union rewrite
-    build_inverted_index(docs.filter(d < 400), str(tmp_path / "c"), **CFG)
-    append_to_index(
-        spark, str(tmp_path / "c"), docs.filter(d >= 400),
-        num_partitions=4, mode="lsm",
-    )
-    with pytest.raises(ValueError, match="compact"):
-        delete_docs(spark, str(tmp_path / "c"), [5])
+    compact_index(spark, path)
+    assert index_signature(path) == index_signature(str(tmp_path / "b"))
 
 
 def test_delete_entire_term_then_compact(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Maintenance-lifecycle fuzz: random sequences of appends (all three
+"""Maintenance-lifecycle fuzz: random sequences of appends (both
 modes), doc-granular deletes, and compactions over an evolving corpus —
 the composed index must always serve rank-identical to exhaustive
 declarative BM25 over the CURRENT surviving corpus.
@@ -61,12 +61,9 @@ def test_maintenance_lifecycle_fuzz(spark, tmp_path, seed):
     history = ["build"]
     for _ in range(n_ops):
         choices = ["rewrite", "lsm", "compact"]
-        additive = stats().get("terms_layout") == "additive"
-        if not additive:
-            choices.append("segment")
-        # deletes compose with single generations AND term-granular
-        # stacks; only additive (lsm) stacks require a compact first
-        if not additive and len(corpus) > 10:
+        # deletes compose with single generations; lsm stacks require a
+        # compact first
+        if not stats().get("segments") and len(corpus) > 10:
             choices += ["delete", "delete"]
         op = rng.choice(choices)
         history.append(str(op))

@@ -54,24 +54,27 @@ def test_posting_list_roundtrip():
 
 
 def test_lazy_cursor_skips_blocks():
-    """A selective seek decodes only the blocks it lands in."""
-    from sparkforward.wand import _ShardCursor
+    """The vectorized kernel's cursor decodes only the blocks it is asked
+    for: landing on one doc deep in a 79-block list decodes one block."""
+    from sparkforward.wand import _VecCursor
 
     rng = np.random.default_rng(3)
     doc_ids = np.sort(rng.choice(1_000_000, size=10_000, replace=False))
     tfs = rng.integers(1, 30, size=10_000)
     dls = rng.integers(20, 121, size=10_000)
     enc = encode_posting_list(doc_ids, tfs, dls, avgdl=70.0, block_size=128)
-    row = {**enc, "idf": 1.5}
-    cur = _ShardCursor(row, avgdl=70.0, block_size=128)
+    cur = _VecCursor({**enc, "idf": 1.5}, avgdl=70.0)
     target = int(doc_ids[9_000])
-    cur.seek(target)
-    assert cur.current() == target
-    assert cur.blocks_decoded <= 2  # jumped ~70 blocks without decoding
+    b = int(np.searchsorted(cur.lasts, target))
+    cur.decode_blocks(np.array([b]))
+    cur.decode_blocks(np.array([b]))  # already decoded: no second decode
+    assert cur.blocks_decoded == 1 and cur.n_blocks > 70
+    pos = int(np.searchsorted(cur._docs[b], target))
+    assert cur._docs[b][pos] == target
     # score at the landing position matches the direct formula
     i = 9_000
     expect = 1.5 * (tfs[i] * (1.2 + 1)) / (tfs[i] + 1.2 * (1 - 0.75 + 0.75 * dls[i] / 70.0))
-    assert abs(cur.current_score() - expect) < 1e-12
+    assert abs(cur._scores[b][pos] - expect) < 1e-12
 
 
 @pytest.fixture(scope="module")
@@ -197,7 +200,7 @@ def test_taat_equals_wand_kernel():
     """Both serving kernels must produce identical top-k on the same shards."""
     import pandas as pd
 
-    from sparkforward.wand import taat_query, wand_query, wand_query_vec
+    from sparkforward.wand import taat_query, wand_query_vec
 
     rng = np.random.default_rng(9)
     rows = []
@@ -214,19 +217,17 @@ def test_taat_equals_wand_kernel():
             rows.append({**enc, "term": t, "salt": s, "idf": idf_v})
     pdf = pd.DataFrame(rows)
     for k in (1, 10, 100):
-        a = taat_query(pdf, k, 70.0, 64)
-        b = wand_query(pdf, k, 70.0, 64)
-        assert a == b, f"k={k}: {a[:3]} vs {b[:3]}"
-        v = wand_query_vec(pdf, k, 70.0, 64)
+        a = taat_query(pdf, k, 70.0)
+        v = wand_query_vec(pdf, k, 70.0)
         assert a == v, f"vec k={k}: {a[:3]} vs {v[:3]}"
         # seeding the vectorized kernel with the true k-th score (the
         # tightest sound theta0 a planner could derive) must not drop docs
         if len(a) == k:
-            v2 = wand_query_vec(pdf, k, 70.0, 64, init_threshold=a[-1][1])
+            v2 = wand_query_vec(pdf, k, 70.0, init_threshold=a[-1][1])
             assert a == v2, f"vec+theta k={k}"
-        # residue filter parity across all three kernels
-        am = taat_query(pdf, k, 70.0, 64, modulus=4, residue=1)
-        vm = wand_query_vec(pdf, k, 70.0, 64, modulus=4, residue=1)
+        # residue filter parity across both kernels
+        am = taat_query(pdf, k, 70.0, modulus=4, residue=1)
+        vm = wand_query_vec(pdf, k, 70.0, modulus=4, residue=1)
         assert am == vm, f"vec residue k={k}"
 
 
@@ -304,20 +305,19 @@ def test_blocked_posting_property_roundtrip():
         tf = np.full(len(d), 2, dtype=np.int64)
         dl = np.full(len(d), 50, dtype=np.int64)
         enc = encode_posting_list(d, tf, dl, avgdl=70.0, block_size=block_size)
-        d2, tf2, dl2 = decode_blocked_posting_list(enc, block_size)
+        d2, tf2, dl2 = decode_blocked_posting_list(enc)
         assert (d2 == d).all() and (tf2 == tf).all() and (dl2 == dl).all()
 
     roundtrip()
 
 
 def test_wand_kernel_fuzz_vs_taat():
-    """Seeded multi-trial stress of the block-max WAND branch (small blocks,
-    overlapping lists) — round-2 regression test for the shallow-advance
-    bound: the old refinement summed each prefix cursor's CURRENT block max,
-    underestimating pivots that lie in later blocks and silently dropping
-    true top-k docs (~0.4% of random multi-block queries) — and of the
-    vectorized strip kernel against both."""
-    from sparkforward.wand import taat_query, wand_query, wand_query_vec
+    """Seeded multi-trial stress of the vectorized block-max WAND kernel
+    against exhaustive TAAT (small blocks, overlapping lists), plus an
+    adversarial family whose pivots land in much-hotter blocks far beyond
+    the dense lists' current ones — the shape that once broke a block-max
+    bound that used each cursor's CURRENT block max."""
+    from sparkforward.wand import taat_query, wand_query_vec
 
     # generic random trials
     for trial in range(100):
@@ -339,16 +339,14 @@ def test_wand_kernel_fuzz_vs_taat():
                          "idf": float(rng.uniform(0.3, 2.5))})
         pdf = pd.DataFrame(rows)
         k = int(rng.choice([3, 10]))
-        a = taat_query(pdf, k, 70.0, block)
-        b = wand_query(pdf, k, 70.0, block)
-        assert a == b, f"trial={trial} k={k}: {a[:5]} vs {b[:5]}"
-        v = wand_query_vec(pdf, k, 70.0, block)
+        a = taat_query(pdf, k, 70.0)
+        v = wand_query_vec(pdf, k, 70.0)
         assert a == v, f"vec trial={trial} k={k}: {a[:5]} vs {v[:5]}"
 
     # adversarial trials: one sparse high-idf driver term whose docs carry
     # tf spikes in the dense lists — pivots land far beyond the dense
-    # cursors' current blocks, in much-hotter blocks. The pre-fix bound
-    # returned the wrong top-k on 99/100 of these.
+    # cursors' current blocks, in much-hotter blocks. A current-block
+    # bound returned the wrong top-k on 99/100 of these.
     for trial in range(60):
         rng = np.random.default_rng(9000 + trial)
         block = 4
@@ -372,10 +370,8 @@ def test_wand_kernel_fuzz_vs_taat():
             rows.append({**enc, "term": f"t{t}", "salt": 0,
                          "idf": float(rng.uniform(0.4, 1.2))})
         pdf = pd.DataFrame(rows)
-        a = taat_query(pdf, 10, 70.0, block)
-        b = wand_query(pdf, 10, 70.0, block)
-        assert a == b, f"adversarial trial={trial}: {a[:5]} vs {b[:5]}"
-        v = wand_query_vec(pdf, 10, 70.0, block)
+        a = taat_query(pdf, 10, 70.0)
+        v = wand_query_vec(pdf, 10, 70.0)
         assert a == v, f"vec adversarial trial={trial}: {a[:5]} vs {v[:5]}"
 
 
@@ -428,47 +424,21 @@ def test_build_partitioning_invariance(spark, docs, tmp_path):
     pd.testing.assert_frame_equal(serves[0], serves[2])
 
 
-def test_legacy_layout_serves_correctly_single_shard(spark, docs, tmp_path):
-    """A pre-doc-shard index (no n_shards column, salts that are NOT doc
-    residues) must serve correct results through the modern path: all salt
-    rows route to serve shard 0 with modulus 1 (no residue filter), and a
-    forced n_serve_shards is ignored with a warning instead of silently
-    dropping docs (judge r2 advice: the old shim threw on salt>0 rows or
-    lost docs under forced fan-out)."""
-    import warnings
-
-    from pyspark.sql import functions as F
-
+def test_legacy_layout_raises_rebuild_error(spark, docs, tmp_path):
+    """Postings without ``n_shards`` (doc-modulo shards) or ``block_no``
+    (one row per block) are layouts nothing writes any more: serving them
+    raises a rebuild error before any Spark job instead of guessing."""
     from sparkforward.postings import PostingIndex
 
-    docs8 = docs.repartition(8)
     index = build_inverted_index(
-        docs8, str(tmp_path / "modern"), salt_threshold=20, n_salt=8,
-        num_partitions=8, target_shard_postings=50,
+        docs, str(tmp_path / "modern"), salt_threshold=20, n_salt=8,
+        num_partitions=4, target_shard_postings=50,
     )
-    base = _serve(spark, index)
-
-    # simulate the legacy layout: drop n_shards everywhere; keep salt>0 rows
-    legacy = PostingIndex(
-        index.postings.drop("n_shards"),
-        index.terms.drop("n_shards"),
-        index.stats,
-    )
-    assert legacy.postings.filter(F.col("salt") > 0).count() > 0
-    pd.testing.assert_frame_equal(base, _serve(spark, legacy))
-
-    # forced fan-out on a legacy index: warn, ignore, stay correct
     qdf = spark.createDataFrame(QUERIES, "q_id string, query string")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        served = (
-            wand_topk(legacy, qdf, k=10, n_serve_shards=4)
-            .toPandas()
-            .sort_values(["q_id", "rank"])
-            .reset_index(drop=True)
-        )
-    assert any("legacy" in str(x.message) for x in w)
-    pd.testing.assert_frame_equal(base, served)
+    for col in ("n_shards", "block_no"):
+        old = PostingIndex(index.postings.drop(col), index.terms, index.stats)
+        with pytest.raises(ValueError, match=f"no \\['{col}'\\].*rebuild"):
+            wand_topk(old, qdf, k=10)
 
 
 def test_forced_wand_kernel_serves_end_to_end(spark, docs, tmp_path):
@@ -840,9 +810,9 @@ def test_vec_kernel_sparse_anchor_pruning_and_reassembly():
         )
         rows.append({**enc, "term": f"h{t}", "salt": 0, "idf": 0.8})
     pdf = pd.DataFrame(rows)
-    a = taat_query(pdf, 10, 70.0, 64)
+    a = taat_query(pdf, 10, 70.0)
     st = []
-    v = wand_query_vec(pdf, 10, 70.0, 64, stats_out=st)
+    v = wand_query_vec(pdf, 10, 70.0, stats_out=st)
     assert a == v
     dec, tot = st[0]
     assert dec / tot < 0.02, f"clustered anchor should prune: {dec}/{tot}"
@@ -860,7 +830,7 @@ def test_vec_kernel_sparse_anchor_pruning_and_reassembly():
         firsts = [0] + [int(x) + 1 for x in row["block_last_doc"][:-1]]
         row["block_first_doc"] = firsts  # sound lower bounds
         rows2.append(row)
-    v2 = wand_query_vec(pd.DataFrame(rows2), 10, 70.0, 64)
+    v2 = wand_query_vec(pd.DataFrame(rows2), 10, 70.0)
     assert a == v2
 
 
@@ -889,7 +859,7 @@ def test_gap_split_blocks():
             f"block [{f}, {l}] bridges a run gap"
         )
     assert sum(enc["block_len"]) == len(d)
-    dd, tt, ll = decode_blocked_posting_list(enc, 64)
+    dd, tt, ll = decode_blocked_posting_list(enc)
     assert (dd == d).all() and (tt == tf).all() and (ll == dl).all()
 
     even = np.arange(0, 1000, 2)

@@ -249,3 +249,37 @@ def test_unimportable_worker_daemon_fails_loudly(tmp_path):
     assert "RuntimeError: Python workers failed to start" in out.stderr, out.stderr[-3000:]
     assert "'sparkforward.no_such_daemon'" in out.stderr
     assert f"workers' PYTHONPATH '{REPO}" in out.stderr
+
+
+def test_shipped_package_zip_holds_this_tree(spark):
+    """The executor package zip comes from the current tree: a stale zip
+    left at the fixed path earlier code wrote does not get shipped, and
+    shipping twice in one context raises nothing."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    import __spark_entry__ as entrymod
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    stale = os.path.join(tempfile.gettempdir(), "sparkforward_pkg.zip")
+    planted = not os.path.exists(stale)
+    if planted:
+        with zipfile.ZipFile(stale, "w") as zf:
+            zf.writestr("sparkforward/wand.py", "# a stale tree\n")
+    sc = spark.sparkContext
+    was_shipped = getattr(sc, "_sparkforward_shipped", False)
+    try:
+        for _ in range(2):
+            sc._sparkforward_shipped = False
+            entrymod._ensure_pkg_on_executors(spark)
+        shipped = [f for f in sc._python_includes if f.startswith("sparkforward_pkg")]
+        assert shipped and all(f != "sparkforward_pkg.zip" for f in shipped)
+        with open(os.path.join(repo, "sparkforward", "wand.py"), "rb") as fh:
+            want = fh.read()
+        with zipfile.ZipFile(SparkFiles.get(shipped[-1])) as zf:
+            assert zf.read("sparkforward/wand.py") == want
+    finally:
+        sc._sparkforward_shipped = was_shipped
+        if planted:
+            os.remove(stale)

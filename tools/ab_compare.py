@@ -37,13 +37,6 @@ def main() -> None:
     repo = os.path.abspath(args.repo)
     sys.path.insert(0, repo)
     os.environ["PYTHONPATH"] = repo + os.pathsep + os.environ.get("PYTHONPATH", "")
-    # __spark_entry__ caches its executor package zip at a fixed /tmp path;
-    # interleaved legs from DIFFERENT snapshots must not ship each other's
-    # code to executors
-    try:
-        os.remove("/tmp/sparkforward_pkg.zip")
-    except FileNotFoundError:
-        pass
 
     from sparkforward.session import get_spark
 

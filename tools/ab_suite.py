@@ -42,10 +42,6 @@ def main() -> None:
     repo = os.path.abspath(args.repo)
     sys.path.insert(0, repo)
     os.environ["PYTHONPATH"] = repo + os.pathsep + os.environ.get("PYTHONPATH", "")
-    try:
-        os.remove("/tmp/sparkforward_pkg.zip")
-    except FileNotFoundError:
-        pass
 
     from sparkforward.session import get_spark
 

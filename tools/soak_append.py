@@ -126,9 +126,7 @@ def _worker_append(args) -> None:
     append_to_index(
         spark, args.path, spark.read.parquet(args.corpus),
         num_partitions=args.cores * 2,
-        mode={"append_segment": "segment", "append_lsm": "lsm"}.get(
-            args.worker, "rewrite"
-        ),
+        mode="lsm" if args.worker == "append_lsm" else "rewrite",
     )
     spark.stop()
 
@@ -203,7 +201,7 @@ def run_append_soak(
     if p.returncode != 0:
         raise RuntimeError("base build failed")
     base_sig = index_signature(path_a)
-    # pristine copy of the committed base for the LSM segment-mode leg
+    # pristine copy of the committed base for the lsm and delete legs
     path_b0 = os.path.join(work, "idx_base_copy")
     shutil.copytree(path_a, path_b0)
 
@@ -248,43 +246,6 @@ def run_append_soak(
     from sparkforward.postings import index_data_root
 
     base_bytes = _dir_bytes(index_data_root(path_b0))
-
-    # ----- LSM segment-mode leg: kill mid-append (base intact), retry,
-    # then compact and require byte-identity with the union rebuild -----
-    path_s = os.path.join(work, "idx_segmented")
-    shutil.copytree(path_b0, path_s)
-    proc = _spawn("append_segment", corpus + "_delta", path_s, n_docs, n_delta, cores)
-    seg_kill_hit = False
-    seg_tmp_glob = os.path.join(path_s, "gen-*", "postings", "_temporary", "*", "*")
-    while proc.poll() is None:
-        if glob.glob(seg_tmp_glob):
-            if proc.poll() is None:
-                os.kill(proc.pid, signal.SIGKILL)
-                seg_kill_hit = True
-            break
-        time.sleep(0.05)
-    proc.wait()
-    seg_base_intact = (not seg_kill_hit) or index_signature(path_s) == base_sig
-    if not seg_kill_hit:
-        # victim completed before the kill window: reset from the pristine
-        # base so the timed retry is a clean single append
-        shutil.rmtree(path_s, ignore_errors=True)
-        shutil.copytree(path_b0, path_s)
-
-    t0 = time.time()
-    p = _spawn("append_segment", corpus + "_delta", path_s, n_docs, n_delta, cores)
-    p.wait()
-    segment_append_sec = time.time() - t0
-    seg_ok = p.returncode == 0
-    segment_bytes = int(_committed_gen_manifest(path_s).get("bytes_written", 0))
-
-    t0 = time.time()
-    p = _spawn("compact", "", path_s, n_docs, n_delta, cores)
-    p.wait()
-    compact_sec = time.time() - t0
-    segment_identical = (
-        seg_ok and p.returncode == 0 and index_signature(path_s) == ref_sig
-    )
 
     # ----- Lucene-style LSM leg: kill mid-append (base intact), retry —
     # the delta writes ONLY its own mini-index, so bytes_written must be
@@ -388,22 +349,14 @@ def run_append_soak(
         "rebuild_union_sec": round(rebuild_sec, 2),
         "append_sec": round(append_sec, 2),
         "append_vs_rebuild": round(append_sec / rebuild_sec, 3),
-        "segment_kill_hit": seg_kill_hit,
-        "segment_base_intact_after_kill": seg_base_intact,
-        "segment_compacted_identical_to_rebuild": segment_identical,
-        "segment_append_sec": round(segment_append_sec, 2),
-        "compact_sec": round(compact_sec, 2),
-        "segment_append_vs_rewrite": round(segment_append_sec / append_sec, 3),
         # --- write-amplification instrumentation (judge r6 #1: lsm bytes
         # must track the DELTA, not the head/base bytes) ---
         "base_index_bytes": base_bytes,
         "rewrite_bytes_written": rewrite_bytes,
-        "segment_bytes_written": segment_bytes,
         "lsm_bytes_written": lsm_bytes,
         "delta_fraction": round(n_delta / n_docs, 4),
         "lsm_bytes_vs_base": round(lsm_bytes / base_bytes, 4) if base_bytes else None,
         "lsm_bytes_vs_rewrite": round(lsm_bytes / rewrite_bytes, 4) if rewrite_bytes else None,
-        "segment_bytes_vs_rewrite": round(segment_bytes / rewrite_bytes, 4) if rewrite_bytes else None,
         "lsm_resharded_terms": int(lsm_manifest.get("resharded_terms", 0)),
         "lsm_kill_hit": lsm_kill_hit,
         "lsm_base_intact_after_kill": lsm_base_intact,
@@ -428,8 +381,7 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=16)
     ap.add_argument(
         "--worker",
-        choices=["corpus", "build", "append", "append_segment", "append_lsm",
-                 "compact", "delete"],
+        choices=["corpus", "build", "append", "append_lsm", "compact", "delete"],
     )
     ap.add_argument("--corpus")
     ap.add_argument("--path")
@@ -440,7 +392,7 @@ def main() -> None:
     if args.worker == "build":
         _worker_build(args)
         return
-    if args.worker in ("append", "append_segment", "append_lsm"):
+    if args.worker in ("append", "append_lsm"):
         _worker_append(args)
         return
     if args.worker == "compact":
@@ -454,8 +406,6 @@ def main() -> None:
     if not (
         result["base_intact_after_kill"]
         and result["appended_identical_to_rebuild"]
-        and result["segment_base_intact_after_kill"]
-        and result["segment_compacted_identical_to_rebuild"]
         and result["lsm_base_intact_after_kill"]
         and result["lsm_compacted_identical_to_rebuild"]
         and result["delete_base_intact_after_kill"]
