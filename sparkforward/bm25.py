@@ -119,47 +119,40 @@ def _scores_for_pairs(
     return contribs.groupBy("q_id", "doc_id").agg(F.sum("contrib").alias("score"))
 
 
-#: session-scoped tokenize-pass cache: (session, corpus plan hash, cols)
-#: -> persisted tf DataFrame. Two purposes: (a) within one query, tf feeds
-#: three subtrees (scores, df-stats, N/avgdl) and Catalyst does NOT dedupe
-#: identical subplans — persist gives one tokenize pass, not three (verified
-#: via .explain); (b) across queries over the same corpus, reusing the one
-#: persisted DF instead of re-persisting an identical plan avoids both a
-#: redundant corpus scan and the CacheManager "already cached" leak the
-#: round-1 audit flagged (bm25.py:97). Entries auto-expire when their
-#: session stops (SessionScopedCache sweeps on every access); an explicit
-#: :func:`release_caches` remains for within-session corpus rotation.
-from sparkforward.session import SessionScopedCache, local_frame  # noqa: E402
-
-_TF_CACHE = SessionScopedCache()
+#: The tokenize pass is persisted in :data:`session.SESSION_CACHE` under
+#: ``("tf", corpus plan hash, cols)``. Two purposes: (a) within one query,
+#: tf feeds three subtrees (scores, df-stats, N/avgdl) and Catalyst does NOT
+#: dedupe identical subplans — persist gives one tokenize pass, not three
+#: (verified via .explain); (b) across queries over the same corpus, reusing
+#: the one persisted DF instead of re-persisting an identical plan avoids
+#: both a redundant corpus scan and the CacheManager "already cached" leak.
+#: ``semanticHash`` is a 32-bit Java int, so the entry keeps its source plan
+#: and a hit also needs ``sameSemantics``: two corpora whose hashes collide
+#: never share term frequencies.
+from sparkforward.session import SESSION_CACHE, local_frame, unpersist  # noqa: E402
 
 
 def _tf_persisted(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    sess = docs.sparkSession
-    try:
-        key = (docs.semanticHash(), id_col, text_col)
-    except NotImplementedError:  # hashing unsupported: fall back, uncached
-        key = None
-    if key is not None:
-        hit = _TF_CACHE.get(sess, key)
-        if hit is not None:
-            return hit
     # spread a too-few-splits corpus before the Python tokenize pass so the
     # per-doc Counter kernel fans across cores (no-op for real multi-file
     # corpora); keyed on the UNspread plan so cache hits are layout-free
     from sparkforward.tokenize import spread_small_input
 
-    tf = term_frequencies(
-        spread_small_input(docs), id_col=id_col, text_col=text_col
-    ).persist()
-    if key is not None:
-        _TF_CACHE.put(sess, key, tf)
+    def build():
+        return term_frequencies(
+            spread_small_input(docs), id_col=id_col, text_col=text_col
+        ).persist()
+
+    try:
+        key = ("tf", docs.semanticHash(), id_col, text_col)
+    except NotImplementedError:  # hashing unsupported: serve uncached
+        return build()
+    _src, tf = SESSION_CACHE.get_or_build(
+        docs.sparkSession, key, lambda: (docs, build()),
+        release=lambda entry, live: unpersist(entry[1], live),
+        accept=lambda entry: entry[0].sameSemantics(docs),
+    )
     return tf
-
-
-def release_caches() -> None:
-    """Unpersist every cached tokenize pass (long-lived session hygiene)."""
-    _TF_CACHE.release()
 
 
 def bm25_scores(

@@ -627,6 +627,9 @@ class PostingIndex:
         #: index generation instead of a task-closure copy per serve (at
         #: takedown-batch scale the closure re-ship is the cost)
         self._deletes_bc = None
+        #: wand_topk's serve-plan memo: (tokenized queries, k, flags) -> the
+        #: built result DataFrame. Per object, so per loaded generation.
+        self.serve_plans: dict[tuple, DataFrame] = {}
 
     def deletes_broadcast(self, spark: SparkSession):
         """The tombstone array as a broadcast variable, created once per

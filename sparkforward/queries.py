@@ -75,14 +75,11 @@ def queries_df(spark: SparkSession, subset: list[str] | None = None) -> DataFram
     """Fixed-query set as an Arrow local relation (:func:`local_frame`, a
     JVM ``LocalTableScan``: reading or broadcasting it runs no job),
     memoized per (session, subset) so repeated entries reuse one frame."""
-    key = (tuple(subset) if subset is not None else None,)
-    hit = _QUERIES_DF_CACHE.get(spark, key)
-    if hit is not None:
-        return hit
     rows = [(q, t) for q, t in QUERY_SET if subset is None or q in subset]
-    df = local_frame(spark, rows, "q_id string, query string")
-    _QUERIES_DF_CACHE.put(spark, key, df)
-    return df
+    return SESSION_CACHE.get_or_build(
+        spark, ("queries_df", tuple(subset) if subset is not None else None),
+        lambda: local_frame(spark, rows, "q_id string, query string"),
+    )
 
 
 # ------------------------------------------------------------ SQL helpers #
@@ -137,85 +134,68 @@ def _bm25_ctes(subset: list[str] | None = None, source: str = "documents") -> st
 
 
 # ------------------------------------------------- Spark building blocks #
-#: first-stage run cache: (session, sf_dir) -> persisted BM25 ranking.
-#: One sparse first stage feeds every re-ranking strategy (cut, normalize,
-#: interpolate, RRF, early stopping) — exactly how a serving stack shares a
-#: retrieval run — so the engine materializes it once per corpus+session
-#: instead of re-deriving it per downstream operator. Entries auto-expire
-#: when their session stops (SessionScopedCache sweeps on access).
-from sparkforward.session import SessionScopedCache, is_alive, local_frame  # noqa: E402
+# Session-scoped artifacts live in session.SESSION_CACHE, one namespace per
+# kind. The first-stage run ("ranked") is the main one: one sparse first
+# stage feeds every re-ranking strategy (cut, normalize, interpolate, RRF,
+# early stopping) — exactly how a serving stack shares a retrieval run — so
+# the engine materializes it once per corpus+session instead of re-deriving
+# it per downstream operator. Entries die with their session;
+# session.release_caches() frees them eagerly.
+from sparkforward.session import (  # noqa: E402
+    SESSION_CACHE,
+    driver_memo,
+    local_frame,
+    remove_dir,
+    unpersist,
+)
 
-_RANKED_CACHE = SessionScopedCache()
-#: (session, subset) -> fixed-query-set local relation (see queries_df)
-_QUERIES_DF_CACHE = SessionScopedCache()
+
+def _drop_index(index, live: bool) -> None:
+    """``release`` of a cached gate index: remove its temp dir and, for a
+    live session, unpersist its cached frames."""
+    remove_dir(index.path, live)
+    if live:
+        index.postings.unpersist()
+        index.terms.unpersist()
 
 
-class _IndexDirCache(SessionScopedCache):
-    """Session cache whose values are ``(PostingIndex, tempdir)``.
+def _gate_index(spark: SparkSession, sf_dir: str, namespace: str, grow=None):
+    """The ``namespace`` variant of the salted WAND index over ``sf_dir``,
+    built once per (session, corpus) into a temp dir and pinned in executor
+    memory for repeated serves; eviction unpersists it and removes the dir.
 
-    Eviction (session death or explicit release) unpersists the index's
-    cached DataFrames and removes the on-disk temp directory — a long-lived
-    service invoking the WAND gate entries repeatedly pays ONE build per
-    (session, corpus) and strands zero directories (judge r3 #3)."""
+    ``grow(docs, path, build)`` makes the variant and returns its index:
+    ``build(frame)`` writes the salted index of ``frame`` at ``path``
+    (salt_threshold low enough that head terms really shard at test
+    scale). Without ``grow`` the whole corpus is built."""
 
-    @staticmethod
-    def _evict(value) -> None:
-        import shutil
+    def make():
+        import tempfile
 
-        index, path = value
+        from sparkforward.postings import build_inverted_index
+
+        def build(frame):
+            return build_inverted_index(
+                frame, path, salt_threshold=100, n_salt=4, num_partitions=8
+            )
+
+        docs = load_documents(spark, sf_dir)
+        path = tempfile.mkdtemp(prefix=f"sfwd_{namespace}_")
         try:
-            index.postings.unpersist()
-            index.terms.unpersist()
-        except Exception:  # noqa: BLE001 — racing a session stop
-            pass
-        shutil.rmtree(path, ignore_errors=True)
+            return (grow(docs, path, build) if grow else build(docs)).cache()
+        except BaseException:  # a failed build strands no temp dir
+            remove_dir(path, False)
+            raise
 
-    def sweep(self) -> None:
-        dead = [k for k, (s, _) in self._entries.items() if not is_alive(s)]
-        for k in dead:
-            self._evict(self._entries.pop(k)[1])
-
-    def release(self) -> None:
-        for _s, value in self._entries.values():
-            self._evict(value)
-        self._entries.clear()
+    return SESSION_CACHE.get_or_build(
+        spark, (namespace, sf_dir), make, release=_drop_index
+    )
 
 
-_WAND_INDEX_CACHE = _IndexDirCache()
-
-
-def _wand_index(spark: SparkSession, sf_dir: str):
-    """The salted delta+varbyte index for ``sf_dir``, built once per
-    (session, corpus) into a managed temp dir and pinned in executor
-    memory for repeated serves."""
-    import tempfile
-
-    from sparkforward.postings import build_inverted_index
-
-    hit = _WAND_INDEX_CACHE.get(spark, (sf_dir,))
-    if hit is not None:
-        return hit[0]
-    docs = load_documents(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="sfwd_idx_")
-    index = build_inverted_index(
-        docs, path, salt_threshold=100, n_salt=4, num_partitions=8
-    ).cache()
-    _WAND_INDEX_CACHE.put(spark, (sf_dir,), (index, path))
-    return index
-
-
-def release_caches() -> None:
-    """Unpersist cached first-stage runs + WAND indexes (removing their
-    temp dirs) + the tokenize-pass cache."""
-    from sparkforward import bm25
-
-    _RANKED_CACHE.release()
-    _DENSE_CACHE.release()
-    _QVEC_CACHE.release()
-    _QUERIES_DF_CACHE.release()
-    _WAND_INDEX_CACHE.release()
-    _TREC_DIR_CACHE.release()
-    bm25.release_caches()
+def _doc_id_cuts(docs: DataFrame, *fractions: tuple[int, int]) -> list[int]:
+    """``max(doc_id) * num // den`` for each ``(num, den)`` fraction."""
+    hi = int(docs.agg(F.max(F.col("doc_id").cast("long"))).collect()[0][0])
+    return [hi * num // den for num, den in fractions]
 
 
 def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,22 +209,22 @@ def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the window sort and the persisted cache hold K x |queries| rows
     instead of |scored corpus| x |queries| (guide §2.3 — shuffle fewer
     bytes; the dominant term at web scale)."""
-    hit = _RANKED_CACHE.get(spark, (sf_dir,))
-    if hit is not None:
-        return hit
-    docs = load_documents(spark, sf_dir)
-    scores = bm25_scores(docs, queries_df(spark))
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc(F.col("doc_id").cast("bigint"))
+
+    def build():
+        scores = bm25_scores(load_documents(spark, sf_dir), queries_df(spark))
+        w = Window.partitionBy("q_id").orderBy(
+            F.desc("score"), F.asc(F.col("doc_id").cast("bigint"))
+        )
+        return (
+            scores.withColumn("score", F.round("score", SCORE_DECIMALS))
+            .withColumn("doc_id", F.col("doc_id").cast("bigint"))
+            .withColumn("rank", F.row_number().over(w).cast("bigint"))
+            .filter(F.col("rank") <= K_CAND)
+        ).persist()
+
+    return SESSION_CACHE.get_or_build(
+        spark, ("ranked", sf_dir), build, release=unpersist
     )
-    out = (
-        scores.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("doc_id", F.col("doc_id").cast("bigint"))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= K_CAND)
-    ).persist()
-    _RANKED_CACHE.put(spark, (sf_dir,), out)
-    return out
 
 
 def _dense_scores(
@@ -300,12 +280,13 @@ def q_bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Builds the salted delta+varbyte index (salt_threshold low enough that
     head terms really shard at test scale — cached per session+corpus,
-    cleaned by :func:`release_caches`) and serves top-10; must equal
+    cleaned by :func:`session.release_caches`) and serves top-10; must equal
     ``bm25_topk`` exactly — the driver compares it against the same oracle.
     """
     from sparkforward.wand import wand_topk
 
-    return wand_topk(_wand_index(spark, sf_dir), queries_df(spark), k=K_FINAL)
+    index = _gate_index(spark, sf_dir, "wand")
+    return wand_topk(index, queries_df(spark), k=K_FINAL)
 
 
 #: batched-serve fixture: 64 deterministic 3-term queries drawn from the
@@ -339,70 +320,42 @@ def q_bm25_wand_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.wand import wand_topk
 
     qdf = local_frame(spark, BATCH_QUERY_SET, "q_id string, query string")
-    return wand_topk(_wand_index(spark, sf_dir), qdf, k=K_FINAL)
+    return wand_topk(_gate_index(spark, sf_dir, "wand"), qdf, k=K_FINAL)
 
 
-def _appended_index(spark: SparkSession, sf_dir: str):
-    """An index built over the first ~80% of the corpus then GROWN to the
-    full corpus via :func:`sparkforward.append.append_to_index` — cached
-    per (session, corpus) exactly like the scratch WAND index."""
-    import tempfile
-
+def _grow_appended(docs: DataFrame, path: str, build):
+    """Build over the first ~80% of the corpus, then GROW it to the full
+    corpus via :func:`sparkforward.append.append_to_index`."""
     from sparkforward.append import append_to_index
-    from sparkforward.postings import build_inverted_index
 
-    hit = _WAND_INDEX_CACHE.get(spark, ("appended", sf_dir))
-    if hit is not None:
-        return hit[0]
-    docs = load_documents(spark, sf_dir)
     d = F.col("doc_id").cast("long")
-    cut = int(docs.agg(F.max(d)).collect()[0][0]) * 4 // 5
-    path = tempfile.mkdtemp(prefix="sfwd_appidx_")
-    build_inverted_index(
-        docs.filter(d < cut), path,
-        salt_threshold=100, n_salt=4, num_partitions=8,
+    (cut,) = _doc_id_cuts(docs, (4, 5))
+    build(docs.filter(d < cut))
+    return append_to_index(
+        docs.sparkSession, path, docs.filter(d >= cut), num_partitions=8
     )
-    index = append_to_index(
-        spark, path, docs.filter(d >= cut), num_partitions=8
-    ).cache()
-    _WAND_INDEX_CACHE.put(spark, ("appended", sf_dir), (index, path))
-    return index
 
 
-def _segmented_index(spark: SparkSession, sf_dir: str):
-    """An index grown to the full corpus by three lsm appends with one
+def _grow_segmented(docs: DataFrame, path: str, build):
+    """Grow to the full corpus by three lsm appends with one
     auto-compaction between them (70% -> 80% -> 90% -> 100%): the second
     append (``max_segments=2``) folds the 3-deep stack into a ``gen-N``
     generation, and the third stacks an lsm segment on it — so serving
     reads a stack whose base segment lives in a generation dir, not at the
     index root, with ratio-adjusted stale bounds."""
-    import tempfile
-
     from sparkforward.append import append_to_index
-    from sparkforward.postings import build_inverted_index
 
-    hit = _WAND_INDEX_CACHE.get(spark, ("segmented", sf_dir))
-    if hit is not None:
-        return hit[0]
-    docs = load_documents(spark, sf_dir)
     d = F.col("doc_id").cast("long")
-    hi = int(docs.agg(F.max(d)).collect()[0][0])
-    c1, c2, c3 = hi * 7 // 10, hi * 8 // 10, hi * 9 // 10
-    path = tempfile.mkdtemp(prefix="sfwd_segidx_")
-    build_inverted_index(
-        docs.filter(d < c1), path,
-        salt_threshold=100, n_salt=4, num_partitions=8,
-    )
+    c1, c2, c3 = _doc_id_cuts(docs, (7, 10), (8, 10), (9, 10))
+    build(docs.filter(d < c1))
     for lo, up, max_segments in ((c1, c2, None), (c2, c3, 2)):
         append_to_index(
-            spark, path, docs.filter((d >= lo) & (d < up)),
+            docs.sparkSession, path, docs.filter((d >= lo) & (d < up)),
             num_partitions=8, mode="lsm", max_segments=max_segments,
         )
-    index = append_to_index(
-        spark, path, docs.filter(d >= c3), num_partitions=8, mode="lsm"
-    ).cache()
-    _WAND_INDEX_CACHE.put(spark, ("segmented", sf_dir), (index, path))
-    return index
+    return append_to_index(
+        docs.sparkSession, path, docs.filter(d >= c3), num_partitions=8, mode="lsm"
+    )
 
 
 def q_bm25_segment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,43 +370,30 @@ def q_bm25_segment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from sparkforward.wand import wand_topk
 
-    return wand_topk(_segmented_index(spark, sf_dir), queries_df(spark), k=K_FINAL)
+    index = _gate_index(spark, sf_dir, "segmented", _grow_segmented)
+    return wand_topk(index, queries_df(spark), k=K_FINAL)
 
 
-def _lsm_index(spark: SparkSession, sf_dir: str):
-    """An index grown to the full corpus by TWO stacked Lucene-style LSM
-    appends (70% -> 85% -> 100%, append.py mode="lsm"): each delta writes
-    its OWN complete mini-index (no base row read except df-resharded
-    terms), so head-term (term, salt) shards hold block rows in all three
-    segments and serving exercises the cross-segment concatenation
-    (postings.compose_segment_postings block renumbering) plus the
-    additive dictionary (postings.current_terms)."""
-    import tempfile
-
+def _grow_lsm(docs: DataFrame, path: str, build):
+    """Grow to the full corpus by TWO stacked Lucene-style LSM appends
+    (70% -> 85% -> 100%, append.py mode="lsm"): each delta writes its OWN
+    complete mini-index (no base row read except df-resharded terms), so
+    head-term (term, salt) shards hold block rows in all three segments and
+    serving exercises the cross-segment concatenation
+    (postings.compose_segment_postings block renumbering) plus the additive
+    dictionary (postings.current_terms)."""
     from sparkforward.append import append_to_index
-    from sparkforward.postings import build_inverted_index
 
-    hit = _WAND_INDEX_CACHE.get(spark, ("lsm", sf_dir))
-    if hit is not None:
-        return hit[0]
-    docs = load_documents(spark, sf_dir)
     d = F.col("doc_id").cast("long")
-    hi = int(docs.agg(F.max(d)).collect()[0][0])
-    c1, c2 = hi * 7 // 10, hi * 17 // 20
-    path = tempfile.mkdtemp(prefix="sfwd_lsmidx_")
-    build_inverted_index(
-        docs.filter(d < c1), path,
-        salt_threshold=100, n_salt=4, num_partitions=8,
-    )
+    c1, c2 = _doc_id_cuts(docs, (7, 10), (17, 20))
+    build(docs.filter(d < c1))
     append_to_index(
-        spark, path, docs.filter((d >= c1) & (d < c2)),
+        docs.sparkSession, path, docs.filter((d >= c1) & (d < c2)),
         num_partitions=8, mode="lsm",
     )
-    index = append_to_index(
-        spark, path, docs.filter(d >= c2), num_partitions=8, mode="lsm"
-    ).cache()
-    _WAND_INDEX_CACHE.put(spark, ("lsm", sf_dir), (index, path))
-    return index
+    return append_to_index(
+        docs.sparkSession, path, docs.filter(d >= c2), num_partitions=8, mode="lsm"
+    )
 
 
 def q_bm25_lsm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,7 +409,8 @@ def q_bm25_lsm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from sparkforward.wand import wand_topk
 
-    return wand_topk(_lsm_index(spark, sf_dir), queries_df(spark), k=K_FINAL)
+    index = _gate_index(spark, sf_dir, "lsm", _grow_lsm)
+    return wand_topk(index, queries_df(spark), k=K_FINAL)
 
 
 #: the deleted slice for bm25_deleted_topk — SQL-expressible so the DuckDB
@@ -477,30 +418,19 @@ def q_bm25_lsm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 DELETE_MOD, DELETE_RES = 7, 3
 
 
-def _deleted_index(spark: SparkSession, sf_dir: str):
-    """Full-corpus index with every ``doc_id % 7 == 3`` document deleted
-    via :func:`sparkforward.append.delete_docs` — doc-tombstone sidecar,
-    postings untouched on disk, dictionary + stats adjusted exactly."""
-    import tempfile
-
+def _grow_deleted(docs: DataFrame, path: str, build):
+    """Build the full corpus, then delete every ``doc_id % 7 == 3``
+    document via :func:`sparkforward.append.delete_docs` — doc-tombstone
+    sidecar, postings untouched on disk, dictionary + stats adjusted
+    exactly."""
     from sparkforward.append import delete_docs
-    from sparkforward.postings import build_inverted_index
 
-    hit = _WAND_INDEX_CACHE.get(spark, ("deleted", sf_dir))
-    if hit is not None:
-        return hit[0]
-    docs = load_documents(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="sfwd_delidx_")
-    build_inverted_index(
-        docs, path, salt_threshold=100, n_salt=4, num_partitions=8
-    )
+    build(docs)
     d = F.col("doc_id").cast("long")
-    index = delete_docs(
-        spark, path,
+    return delete_docs(
+        docs.sparkSession, path,
         docs.filter(d % DELETE_MOD == DELETE_RES).select(d.alias("doc_id")),
-    ).cache()
-    _WAND_INDEX_CACHE.put(spark, ("deleted", sf_dir), (index, path))
-    return index
+    )
 
 
 def q_bm25_deleted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -515,7 +445,8 @@ def q_bm25_deleted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from sparkforward.wand import wand_topk
 
-    return wand_topk(_deleted_index(spark, sf_dir), queries_df(spark), k=K_FINAL)
+    index = _gate_index(spark, sf_dir, "deleted", _grow_deleted)
+    return wand_topk(index, queries_df(spark), k=K_FINAL)
 
 
 def sql_bm25_deleted_topk() -> str:
@@ -540,7 +471,8 @@ def q_bm25_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from sparkforward.wand import wand_topk
 
-    return wand_topk(_appended_index(spark, sf_dir), queries_df(spark), k=K_FINAL)
+    index = _gate_index(spark, sf_dir, "appended", _grow_appended)
+    return wand_topk(index, queries_df(spark), k=K_FINAL)
 
 
 def _values_batch_queries() -> str:
@@ -575,7 +507,7 @@ def q_interpolate_from_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from sparkforward.wand import wand_topk
 
-    index = _wand_index(spark, sf_dir)
+    index = _gate_index(spark, sf_dir, "wand")
     cand = wand_topk(index, queries_df(spark), k=K_CAND).select(
         "q_id", F.col("id").cast("bigint").alias("doc_id"), "score"
     )
@@ -598,30 +530,6 @@ def q_interpolate_from_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class _TempDirCache(SessionScopedCache):
-    """Session cache of temp DIRECTORIES: eviction (session death or
-    explicit release) removes the directory from disk — repeated gate
-    calls reuse one dir per (session, corpus) and strand nothing."""
-
-    def _evict(self, value) -> None:
-        import shutil
-
-        shutil.rmtree(value, ignore_errors=True)
-
-    def sweep(self) -> None:
-        dead = [k for k, (s, _) in self._entries.items() if not is_alive(s)]
-        for k in dead:
-            self._evict(self._entries.pop(k)[1])
-
-    def release(self) -> None:
-        for _s, value in self._entries.values():
-            self._evict(value)
-        self._entries.clear()
-
-
-_TREC_DIR_CACHE = _TempDirCache()
-
-
 def q_trec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TREC runfile sink + source under the driver gate (judge r3 #5).
 
@@ -640,10 +548,10 @@ def q_trec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     top = q_bm25_topk(spark, sf_dir)
     ranking = Ranking(top.select("q_id", "id", "score"), name="bm25")
-    d = _TREC_DIR_CACHE.get(spark, (sf_dir,))
-    if d is None:
-        d = tempfile.mkdtemp(prefix="sfwd_trec_")
-        _TREC_DIR_CACHE.put(spark, (sf_dir,), d)
+    d = SESSION_CACHE.get_or_build(
+        spark, ("trec", sf_dir), lambda: tempfile.mkdtemp(prefix="sfwd_trec_"),
+        release=remove_dir,
+    )
     path = os.path.join(d, "run.tsv")
     write_trec_run(ranking, path)
     back = read_trec_run(spark, path)
@@ -706,19 +614,17 @@ FROM cand CROSS JOIN extrema
 """
 
 
-#: (session, sf_dir) -> persisted dense scores of the default candidate set
-#: (shared by interpolate_rerank and rr_fusion — one gather, two consumers)
-_DENSE_CACHE = SessionScopedCache()
-
-
 def _dense_default(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _DENSE_CACHE.get(spark, (sf_dir,))
-    if hit is not None:
-        return hit
-    cand = _bm25_ranked(spark, sf_dir).filter(F.col("rank") <= K_CAND)
-    out = _dense_scores(spark, sf_dir, cand.select("q_id", "doc_id")).persist()
-    _DENSE_CACHE.put(spark, (sf_dir,), out)
-    return out
+    """Persisted dense scores of the default candidate set (shared by
+    interpolate_rerank and rr_fusion — one gather, two consumers)."""
+
+    def build():
+        cand = _bm25_ranked(spark, sf_dir).filter(F.col("rank") <= K_CAND)
+        return _dense_scores(spark, sf_dir, cand.select("q_id", "doc_id")).persist()
+
+    return SESSION_CACHE.get_or_build(
+        spark, ("dense", sf_dir), build, release=unpersist
+    )
 
 
 def q_interpolate_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1009,22 +915,20 @@ PQ_SEED = 42
 PQ_FIT_N = 256  # fit sample: embeddings with vec_id < PQ_FIT_N
 
 
-def _pq_fit_matrix(spark: SparkSession, sf_dir: str):
+def _pq_fit_sample(sf_dir: str):
     """The deterministic PQ/OPQ fit sample (embeddings with ``vec_id <
-    PQ_FIT_N``, ascending vec_id) as a float32 matrix — ONE definition so
-    every quantizer-bearing entry trains on the identical sample (the
-    oracles inline the fitted codebooks, so a drifted sample in any one
-    entry would silently break its row identity)."""
+    PQ_FIT_N``, ascending vec_id) as a float32 matrix, read on the driver —
+    ONE definition so every quantizer-bearing entry and its oracle train on
+    the identical sample (the oracles inline the fitted codebooks, so a
+    drifted sample would silently break their row identity)."""
+    import duckdb
     import numpy as np
 
-    rows = (
-        load_embeddings(spark, sf_dir)
-        .filter(F.col("vec_id") < PQ_FIT_N)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    rows.sort(key=lambda r: r["vec_id"])
-    return np.asarray([r["embedding"] for r in rows], dtype=np.float32)
+    rows = duckdb.sql(
+        f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' "
+        f"WHERE vec_id < {PQ_FIT_N} ORDER BY vec_id"
+    ).fetchall()
+    return np.asarray([r[0] for r in rows], dtype=np.float32)
 
 
 def _oracle_sf_dir() -> str:
@@ -1055,38 +959,17 @@ def _require_oracle_corpus(sf_dir: str, entry: str) -> None:
             f"served corpus so engine and oracle consume one codebook"
         )
 
-_PQ_CACHE: dict[str, object] = {}
-
-
-def _fitted_pq(sf_dir: str, X=None):
-    """Seeded ProductQuantizer fitted on the deterministic sample
-    (embeddings with ``vec_id < PQ_FIT_N``, ordered by vec_id) of
+@driver_memo
+def _fitted_pq(sf_dir: str):
+    """Seeded ProductQuantizer fitted on :func:`_pq_fit_sample` of
     ``sf_dir`` — ref util/indexer.py:106-121's buffer-first-batches fit.
 
     Driver-side memo shared by the Spark entry and the oracle generator,
     so both sides consume ONE codebook; a refit is bit-identical anyway
-    (seeded k-means over a sorted sample). ``X`` lets the Spark entry pass
-    the sample it collected through Spark; the oracle generator (no
-    SparkSession) reads the parquet directly.
-    """
-    import numpy as np
-
+    (seeded k-means over a sorted sample)."""
     from sparkforward.quantize import ProductQuantizer
 
-    q = _PQ_CACHE.get(sf_dir)
-    if q is not None:
-        return q
-    if X is None:
-        import duckdb
-
-        rows = duckdb.sql(
-            f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' "
-            f"WHERE vec_id < {PQ_FIT_N} ORDER BY vec_id"
-        ).fetchall()
-        X = np.asarray([r[0] for r in rows], dtype=np.float32)
-    q = ProductQuantizer(M=PQ_M, Ks=PQ_KS, seed=PQ_SEED).fit(X)
-    _PQ_CACHE[sf_dir] = q
-    return q
+    return ProductQuantizer(M=PQ_M, Ks=PQ_KS, seed=PQ_SEED).fit(_pq_fit_sample(sf_dir))
 
 
 def q_quantized_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,15 +987,11 @@ def q_quantized_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ProductQuantizer.encode's contract).
     Ref quantizer/nanopq.py:29-44, quantizer/base.py:109-132.
     """
-    import numpy as np
-
     from sparkforward.index import Mode, VectorIndex
     from sparkforward.quantize import decode_column, encode_column
 
     _require_oracle_corpus(sf_dir, "quantized_index")
-    quant = _PQ_CACHE.get(sf_dir)
-    if quant is None:
-        quant = _fitted_pq(sf_dir, X=_pq_fit_matrix(spark, sf_dir))
+    quant = _fitted_pq(sf_dir)
     emb = load_embeddings(spark, sf_dir).select(
         "vec_id", F.col("embedding").alias("vector")
     )
@@ -1203,31 +1082,16 @@ SELECT q_id, CAST(doc_id AS VARCHAR) AS id, rank, score FROM rr WHERE rank <= 20
 # ----------------------------------------- OPQ passage index (judge r4 #2) #
 OPQ_ROT_ITERS = 3
 
-_OPQ_CACHE: dict[str, object] = {}
-
-
-def _fitted_opq(sf_dir: str, X=None):
-    """Seeded OPQ (rotation + codebooks) fitted on the same deterministic
-    sample as :func:`_fitted_pq`; memoized so the Spark entry and the
-    oracle generator consume ONE (R, codebooks) pair."""
-    import numpy as np
-
+@driver_memo
+def _fitted_opq(sf_dir: str):
+    """Seeded OPQ (rotation + codebooks) fitted on the same sample as
+    :func:`_fitted_pq`; memoized so the Spark entry and the oracle
+    generator consume ONE (R, codebooks) pair."""
     from sparkforward.quantize import OPQ
 
-    q = _OPQ_CACHE.get(sf_dir)
-    if q is not None:
-        return q
-    if X is None:
-        import duckdb
-
-        rows = duckdb.sql(
-            f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' "
-            f"WHERE vec_id < {PQ_FIT_N} ORDER BY vec_id"
-        ).fetchall()
-        X = np.asarray([r[0] for r in rows], dtype=np.float32)
-    q = OPQ(M=PQ_M, Ks=PQ_KS, seed=PQ_SEED, rotation_iters=OPQ_ROT_ITERS).fit(X)
-    _OPQ_CACHE[sf_dir] = q
-    return q
+    return OPQ(
+        M=PQ_M, Ks=PQ_KS, seed=PQ_SEED, rotation_iters=OPQ_ROT_ITERS
+    ).fit(_pq_fit_sample(sf_dir))
 
 
 def q_opq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1238,15 +1102,11 @@ def q_opq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sequential float64 fold, float32 cast), so the DuckDB oracle
     reproduces every rotated coordinate bit-for-bit from the R matrix
     inlined as SQL literals. Ref quantizer/nanopq.py:77-149."""
-    import numpy as np
-
     from sparkforward.index import Mode, VectorIndex
     from sparkforward.quantize import decode_column, encode_column
 
     _require_oracle_corpus(sf_dir, "opq_index")
-    quant = _OPQ_CACHE.get(sf_dir)
-    if quant is None:
-        quant = _fitted_opq(sf_dir, X=_pq_fit_matrix(spark, sf_dir))
+    quant = _fitted_opq(sf_dir)
     emb = load_embeddings(spark, sf_dir).select(
         "vec_id", F.col("embedding").alias("vector")
     )
@@ -1436,16 +1296,11 @@ SELECT q_id, CAST(doc_id AS VARCHAR) AS id, rank, score FROM rr WHERE rank <= 10
 
 
 # ------------------------------------------------- IVF-PQ (ADC) serving #
-_ADC_LUT_CACHE: dict[str, list] = {}
-
-
+@driver_memo
 def _adc_luts(sf_dir: str) -> list:
     """Shared ADC look-up tables for the gate queries — computed ONCE from
     the parquet fixture (no SparkSession needed, so the oracle generator
     and the Spark entry consume byte-identical values) and memoized."""
-    hit = _ADC_LUT_CACHE.get(sf_dir)
-    if hit is not None:
-        return hit
     import duckdb
 
     from sparkforward.similarity import build_adc_luts
@@ -1457,9 +1312,7 @@ def _adc_luts(sf_dir: str) -> list:
     ).fetchall()
     by_id = {r[0]: r[1] for r in rows}
     qvecs = {q: by_id[v] for q, v in MODE_QVEC_ID.items()}
-    out = build_adc_luts(_fitted_pq(sf_dir), qvecs)
-    _ADC_LUT_CACHE[sf_dir] = out
-    return out
+    return build_adc_luts(_fitted_pq(sf_dir), qvecs)
 
 
 def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1471,11 +1324,7 @@ def q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkforward.similarity import ivfpq_topk
 
     _require_oracle_corpus(sf_dir, "similarity_ivfpq_topk")
-    quant = _PQ_CACHE.get(sf_dir)
-    if quant is None:
-        import numpy as np
-
-        quant = _fitted_pq(sf_dir, X=_pq_fit_matrix(spark, sf_dir))
+    quant = _fitted_pq(sf_dir)
     emb = load_embeddings(spark, sf_dir)
     qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
@@ -1571,9 +1420,6 @@ SELECT q_id, CAST(vec_id AS VARCHAR) AS id, rank, score FROM rr WHERE rank <= {K
 """
 
 
-_IVFPQ_DIR_CACHE = _TempDirCache()
-
-
 def q_similarity_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-ADC serving from a PERSISTED index (judge r5 #5): the codes
     table is written once per (session, corpus) as cent_id-partitioned
@@ -1594,17 +1440,18 @@ def q_similarity_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _require_oracle_corpus(sf_dir, "similarity_ivfpq_persisted")
     emb = load_embeddings(spark, sf_dir)
-    d = _IVFPQ_DIR_CACHE.get(spark, (sf_dir,))
-    if d is None:
-        quant = _PQ_CACHE.get(sf_dir)
-        if quant is None:
-            quant = _fitted_pq(sf_dir, X=_pq_fit_matrix(spark, sf_dir))
+
+    def build():
         d = tempfile.mkdtemp(prefix="sfwd_ivfpq_")
         write_ivfpq_index(
-            emb, quant, d,
+            emb, _fitted_pq(sf_dir), d,
             centroids=_default_centroids(emb, IVF_CENTROIDS, "vec_id", "embedding"),
         )
-        _IVFPQ_DIR_CACHE.put(spark, (sf_dir,), d)
+        return d
+
+    d = SESSION_CACHE.get_or_build(
+        spark, ("ivfpq", sf_dir), build, release=remove_dir
+    )
     index = load_ivfpq_index(spark, d)
     qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
@@ -1642,20 +1489,20 @@ def q_similarity_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _require_oracle_corpus(sf_dir, "similarity_ivfpq_appended")
     emb = load_embeddings(spark, sf_dir)
-    d = _IVFPQ_DIR_CACHE.get(spark, ("appended", sf_dir))
-    if d is None:
-        quant = _PQ_CACHE.get(sf_dir)
-        if quant is None:
-            quant = _fitted_pq(sf_dir, X=_pq_fit_matrix(spark, sf_dir))
-        hi = int(emb.agg(F.max("vec_id")).collect()[0][0])
-        cut = hi * 4 // 5
+
+    def build():
+        cut = int(emb.agg(F.max("vec_id")).collect()[0][0]) * 4 // 5
         d = tempfile.mkdtemp(prefix="sfwd_ivfpqapp_")
         write_ivfpq_index(
-            emb.filter(F.col("vec_id") < cut), quant, d,
+            emb.filter(F.col("vec_id") < cut), _fitted_pq(sf_dir), d,
             centroids=_default_centroids(emb, IVF_CENTROIDS, "vec_id", "embedding"),
         )
         append_ivfpq_index(spark, d, emb.filter(F.col("vec_id") >= cut))
-        _IVFPQ_DIR_CACHE.put(spark, ("appended", sf_dir), d)
+        return d
+
+    d = SESSION_CACHE.get_or_build(
+        spark, ("ivfpq_appended", sf_dir), build, release=remove_dir
+    )
     index = load_ivfpq_index(spark, d)
     qmap = local_frame(spark, list(MODE_QVEC_ID.items()), "q_id string, qvec_id long")
     qvecs = qmap.join(emb, qmap.qvec_id == emb.vec_id).select(
@@ -2554,30 +2401,21 @@ SELECT q_id, CAST(doc_id AS VARCHAR) AS id,
 """
 
 
-#: (session, sf_dir, mapping) -> {q_id: [float]} — collected once, reused by
-#: every dense entry (each collect was a full embeddings-scan job)
-_QVEC_CACHE = SessionScopedCache()
-
-
 def _collect_qvecs(spark, sf_dir, mapping) -> dict[str, list[float]]:
-    key = (sf_dir, tuple(sorted(mapping.items())))
-    hit = _QVEC_CACHE.get(spark, key)
-    if hit is not None:
-        return hit
-    ids = list(mapping.values())
-    rows: dict[int, list[float]] | None = None
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except ImportError:  # no pyarrow on the driver: use Spark
-        pq = None
-    if pq is not None:
+    """{q_id: [float]} of the mapped query vectors — collected once per
+    (session, corpus, mapping) and reused by every dense entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def build():
+        ids = list(mapping.values())
         # |queries| vectors from a LOCAL parquet fixture: read them on the
         # driver (row-group-pruned pyarrow scan) instead of launching a
         # Spark job — the same driver-side shortcut as query tokenization.
         # float32 -> Python float upcasts identically to a Spark collect,
         # so downstream dot products are bit-identical. Only a missing or
         # unreadable file falls back; a type mismatch raises.
+        rows: dict[int, list[float]] | None
         try:
             tbl = pq.read_table(
                 f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"],
@@ -2588,15 +2426,16 @@ def _collect_qvecs(spark, sf_dir, mapping) -> dict[str, list[float]]:
                 rows = None
         except (OSError, pa.ArrowInvalid):  # remote/exotic storage: use Spark
             rows = None
-    if rows is None:
-        emb = load_embeddings(spark, sf_dir)
-        rows = {
-            r["vec_id"]: r["embedding"]
-            for r in emb.filter(F.col("vec_id").isin(ids)).collect()
-        }
-    out = {q: rows[v] for q, v in mapping.items()}
-    _QVEC_CACHE.put(spark, key, out)
-    return out
+        if rows is None:
+            emb = load_embeddings(spark, sf_dir)
+            rows = {
+                r["vec_id"]: r["embedding"]
+                for r in emb.filter(F.col("vec_id").isin(ids)).collect()
+            }
+        return {q: rows[v] for q, v in mapping.items()}
+
+    key = ("qvec", sf_dir, tuple(sorted(mapping.items())))
+    return SESSION_CACHE.get_or_build(spark, key, build)
 
 
 def _local_qvec_df(spark, sf_dir, mapping) -> DataFrame:

@@ -10,7 +10,10 @@ to AQE's coalescing).
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -162,41 +165,101 @@ def is_alive(session: SparkSession) -> bool:
 
 
 class SessionScopedCache:
-    """Persisted-DataFrame cache whose entries die with their session.
+    """Driver-side cache of per-session artifacts: persisted frames, built
+    indexes, the temp dirs they live in.
 
-    Every access sweeps entries owned by stopped sessions (their executor
-    storage died with the context; the sweep frees the driver-side
-    references), so long-lived services get correct lifecycle without ever
-    calling an explicit release (judge r2 #6). ``release()`` additionally
-    unpersists live entries — the eager variant for tests and services
-    that rotate corpora within one session.
+    Keys are tuples whose first element names a namespace
+    (``("ranked", sf_dir)``); hits and misses are counted per namespace in
+    :attr:`hits` and :attr:`misses`. Each entry holds its session, its value
+    and an optional ``release(value, live)`` callback that frees it: a live
+    session's entry unpersists its frames and removes its disk state; a
+    stopped session's entry only removes disk state (its executor storage
+    died with the context), so eviction then makes no Spark call. Every
+    access evicts the entries of stopped sessions, so a long-lived service
+    is cleaned up without calling :func:`release_caches`; an explicit
+    release is for tests and for rotating corpora within one session.
     """
 
     def __init__(self) -> None:
-        self._entries: dict[tuple, tuple] = {}  # key -> (session, df)
+        #: (id(session), *key) -> (session, value, release)
+        self._entries: dict[tuple, tuple] = {}
+        self.hits: Counter = Counter()
+        self.misses: Counter = Counter()
 
     def __len__(self) -> int:
         return len(self._entries)
 
-    def sweep(self) -> None:
-        dead = [k for k, (s, _) in self._entries.items() if not is_alive(s)]
-        for k in dead:
-            del self._entries[k]
+    def get_or_build(self, session: SparkSession, key: tuple, build,
+                     release=None, accept=None):
+        """The value cached under ``key`` for ``session``, else ``build()``
+        cached with ``release``. ``accept(value)``, when given, must hold
+        for a cached value to count as a hit; a rejected value is evicted
+        and rebuilt."""
+        self._sweep()
+        k = (id(session), *key)
+        entry = self._entries.get(k)
+        if entry is not None and (accept is None or accept(entry[1])):
+            self.hits[key[0]] += 1
+            return entry[1]
+        if entry is not None:
+            self._evict(self._entries.pop(k))
+        self.misses[key[0]] += 1
+        value = build()
+        self._entries[k] = (session, value, release)
+        return value
 
-    def get(self, session: SparkSession, key: tuple):
-        self.sweep()
-        hit = self._entries.get((id(session), *key))
-        return hit[1] if hit is not None else None
-
-    def put(self, session: SparkSession, key: tuple, df) -> None:
-        self.sweep()
-        self._entries[(id(session), *key)] = (session, df)
+    def _sweep(self) -> None:
+        alive: dict[int, bool] = {}
+        for k, (s, _, _) in list(self._entries.items()):
+            if not alive.setdefault(id(s), is_alive(s)):
+                self._evict(self._entries.pop(k))
 
     def release(self) -> None:
-        for s, df in self._entries.values():
-            if is_alive(s):
-                try:
-                    df.unpersist()
-                except Exception:  # noqa: BLE001 — racing a session stop
-                    pass
-        self._entries.clear()
+        """Evict every entry."""
+        while self._entries:
+            self._evict(self._entries.popitem()[1])
+
+    @staticmethod
+    def _evict(entry: tuple) -> None:
+        session, value, release = entry
+        if release is None:
+            return
+        try:
+            release(value, is_alive(session))
+        except Exception:  # noqa: BLE001 — only a session stopped mid-release
+            if is_alive(session):
+                raise
+
+
+def unpersist(df: DataFrame, live: bool) -> None:
+    """``release`` of a cached persisted frame."""
+    if live:
+        df.unpersist()
+
+
+def remove_dir(path: str, live: bool) -> None:
+    """``release`` of a cached temp directory."""
+    shutil.rmtree(path, ignore_errors=True)
+
+
+#: the engine's one cache of per-session artifacts
+SESSION_CACHE = SessionScopedCache()
+#: session-free driver memos (see :func:`driver_memo`)
+_DRIVER_MEMOS: list = []
+
+
+def driver_memo(fn):
+    """``functools.lru_cache`` for values that depend on no session (a
+    quantizer fitted on a fixture file, say); :func:`release_caches`
+    clears it."""
+    memo = functools.lru_cache(maxsize=None)(fn)
+    _DRIVER_MEMOS.append(memo)
+    return memo
+
+
+def release_caches() -> None:
+    """Evict every :data:`SESSION_CACHE` entry (unpersisting live sessions'
+    frames, removing temp dirs) and clear every :func:`driver_memo`."""
+    SESSION_CACHE.release()
+    for memo in _DRIVER_MEMOS:
+        memo.cache_clear()

@@ -987,11 +987,9 @@ def wand_topk(
         memo_key = (
             tuple(sorted((r["q_id"], r["term"]) for r in qt_rows)),
             kk, n_serve_shards, taat_max_postings, max_meta_blocks,
-            len(getattr(index, "deletes", ())),
+            len(index.deletes),
         )
-        plan_cache = getattr(index, "_serve_plan_cache", None)
-        if plan_cache is None:
-            plan_cache = index._serve_plan_cache = {}
+        plan_cache = index.serve_plans
         hit = plan_cache.get(memo_key)
         if hit is not None:
             return hit
@@ -1019,16 +1017,10 @@ def wand_topk(
             }
         )
 
-    deletes = getattr(index, "deletes", None)
-    if deletes is not None and not len(deletes):
-        deletes = None
+    deletes = index.deletes if len(index.deletes) else None
     # one broadcast per index generation; the driver-side planner keeps the
     # local array (θ0 coverage adjustment), executors read the broadcast
-    deletes_bc = (
-        index.deletes_broadcast(spark)
-        if deletes is not None and hasattr(index, "deletes_broadcast")
-        else None
-    )
+    deletes_bc = index.deletes_broadcast(spark)
     # plan only dictionary-live terms: a deleted index can hold posting
     # rows for a term whose df dropped to 0 (dictionary row removed,
     # blobs untouched) — those rows are dead until compaction drops them

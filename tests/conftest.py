@@ -8,10 +8,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
-    from sparkforward.session import get_spark
+    from sparkforward.session import get_spark, release_caches
 
     s = get_spark(app_name="sparkforward-tests", cores=4, shuffle_partitions=4)
     yield s
+    # entries still cached at the end would leave their temp dirs behind:
+    # a stopped session's entries are only evicted by a later cache access
+    release_caches()
     s.stop()
 
 

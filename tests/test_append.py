@@ -315,6 +315,31 @@ def test_lsm_append_twice_then_compact_matches_scratch(spark, docs, tmp_path):
     assert not (tmp_path / "a" / "postings").exists()
 
 
+def test_index_signature_refuses_an_uncompacted_lsm_stack(
+    spark, docs, tmp_path, monkeypatch
+):
+    """index_signature signs one generation: on an lsm stack it raises a
+    ValueError naming compact_index before any DuckDB query runs, and signs
+    the stack once compacted."""
+    import duckdb
+
+    path = str(tmp_path / "a")
+    _build(docs.filter(F.col("doc_id") < 400), tmp_path / "a")
+    append_to_index(
+        spark, path, docs.filter(F.col("doc_id") >= 400), num_partitions=4, mode="lsm"
+    )
+
+    def no_query(*_a, **_k):
+        raise AssertionError("index_signature queried an lsm stack")
+
+    with monkeypatch.context() as m:
+        m.setattr(duckdb, "sql", no_query)
+        with pytest.raises(ValueError, match="compact_index"):
+            index_signature(path)
+    compact_index(spark, path)
+    assert index_signature(path)["rows"] > 0
+
+
 def test_lsm_append_writes_delta_proportional_bytes(spark, docs, tmp_path):
     """The LSM economics claim, asserted on bytes not wall: with no
     reshard event (generous shard target), an lsm append writes an order

@@ -116,6 +116,7 @@ def test_tf_cache_key_fallback_is_narrow(spark, monkeypatch):
     """An unsupported ``semanticHash`` serves uncached; any other error
     while keying the tf cache raises instead of silently going uncached."""
     from sparkforward import bm25
+    from sparkforward.session import SESSION_CACHE
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
@@ -123,9 +124,10 @@ def test_tf_cache_key_fallback_is_narrow(spark, monkeypatch):
         raise NotImplementedError("semanticHash")
 
     monkeypatch.setattr(docs, "semanticHash", unsupported)
-    n_cached = len(bm25._TF_CACHE)
+    n_cached, n_missed = len(SESSION_CACHE), SESSION_CACHE.misses["tf"]
     bm25._tf_persisted(docs, "doc_id", "text").unpersist()
-    assert len(bm25._TF_CACHE) == n_cached
+    assert len(SESSION_CACHE) == n_cached
+    assert SESSION_CACHE.misses["tf"] == n_missed
 
     def broken():
         raise RuntimeError("boom")
@@ -133,6 +135,32 @@ def test_tf_cache_key_fallback_is_narrow(spark, monkeypatch):
     monkeypatch.setattr(docs, "semanticHash", broken)
     with pytest.raises(RuntimeError, match="boom"):
         bm25._tf_persisted(docs, "doc_id", "text")
+
+
+def test_tf_cache_hash_collision_keeps_corpora_apart(spark, monkeypatch):
+    """``semanticHash`` is a 32-bit int: two different corpora whose hashes
+    collide must still get their own term frequencies."""
+    from sparkforward import bm25
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    a = docs.filter("doc_id % 2 = 0")
+    b = docs.filter("doc_id % 2 = 1")
+    for frame in (a, b):
+        monkeypatch.setattr(frame, "semanticHash", lambda: 12345)
+
+    def ids(tf):  # doc ids of the real rows (corpus-stats rows have none)
+        return {r["doc_id"] for r in tf.select("doc_id").distinct().collect()} - {None}
+
+    tf_a = bm25._tf_persisted(a, "doc_id", "text")
+    assert {int(d) % 2 for d in ids(tf_a)} == {0}
+    tf_b = bm25._tf_persisted(b, "doc_id", "text")
+    assert tf_b is not tf_a
+    assert {int(d) % 2 for d in ids(tf_b)} == {1}
+    # an equal plan still hits
+    same_b = docs.filter("doc_id % 2 = 1")
+    monkeypatch.setattr(same_b, "semanticHash", lambda: 12345)
+    assert bm25._tf_persisted(same_b, "doc_id", "text") is tf_b
+    tf_b.unpersist()
 
 
 def test_spread_small_input_fallback_is_narrow(spark, monkeypatch):

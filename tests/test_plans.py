@@ -73,6 +73,7 @@ def test_spread_sits_at_python_boundaries_only(spark, monkeypatch):
     serialize meaningful work (SPREAD_MIN_BYTES floor)."""
     from sparkforward import bm25, tokenize
     from sparkforward.dedup import simhash
+    from sparkforward.session import release_caches
     from sparkforward.textstats import repetition_stats, token_counts
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -81,7 +82,7 @@ def test_spread_sits_at_python_boundaries_only(spark, monkeypatch):
     assert "RoundRobinPartitioning" not in _plan(
         bm25._tf_persisted(docs, "doc_id", "text")
     )
-    bm25._TF_CACHE.release()
+    release_caches()
     # above the floor, the exchange feeds exactly the Python kernels; the
     # frames cached under the patched floor are released even on failure
     monkeypatch.setattr(tokenize, "SPREAD_MIN_BYTES", 0)
@@ -97,15 +98,16 @@ def test_spread_sits_at_python_boundaries_only(spark, monkeypatch):
             assert 0 <= i_py < i_ex, plan[:400]  # exchange feeds the kernel
         assert "Exchange" not in _plan(token_counts(docs))
     finally:
-        bm25._TF_CACHE.release()
+        release_caches()
 
 
 def test_bm25_scan_is_pruned(spark):
     """The corpus scan under BM25 must read only (doc_id, text) — a scan
     that drags lang/source/n_chars through tokenization is wrong."""
     from sparkforward import queries as q
+    from sparkforward.session import release_caches
 
-    q.release_caches()  # force a fresh, uncached first-stage plan
+    release_caches()  # force a fresh, uncached first-stage plan
     df = q.q_bm25_topk(spark, SF)
     plan = _plan(df)
     scan = [ln for ln in plan.splitlines() if "FileScan" in ln and "documents" in ln]

@@ -41,13 +41,23 @@ def index_signature(path: str) -> dict:
 
     Identical recipe to tools/soak_resume._signature but GENERATION-AWARE:
     data is read from the committed ``data_dir`` (postings.index_data_root),
-    so fresh and appended indexes compare on logical content.
+    so fresh and appended indexes compare on logical content. An
+    uncompacted lsm stack has no single generation to sign (its segments'
+    dictionaries hold only ``(term, df)``), so it raises a ``ValueError``
+    before any query runs; sign it after ``compact_index``.
     """
     import duckdb
 
     from sparkforward.postings import index_data_root
 
-    root = index_data_root(path)
+    with open(os.path.join(path, "stats.json")) as fh:
+        stats = json.load(fh)
+    if stats.get("segments"):
+        raise ValueError(
+            f"index_signature: {path} is a {len(stats['segments'])}-segment "
+            "lsm stack; run sparkforward.append.compact_index first"
+        )
+    root = index_data_root(path, stats)
     post = duckdb.sql(
         f"""
         SELECT md5(string_agg(h, '|' ORDER BY term, salt, block_no)) AS sig,
@@ -68,8 +78,6 @@ def index_signature(path: str) -> dict:
         FROM read_parquet('{root}/terms/*.parquet')
         """
     ).fetchone()[0]
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
     return {
         "postings_sig": post[0],
         "rows": int(post[1]),
