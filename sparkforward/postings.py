@@ -370,13 +370,14 @@ def compose_segment_postings(
     postings: DataFrame | None = None
     for pdir, ratio, offset, tombs in _posting_parts(path, stats):
         df = spark.read.parquet(pdir)
-        if tombs:
-            # tombstone vocabulary is bounded by the deltas' vocabularies
-            tomb = reduce(
-                DataFrame.unionByName,
-                [spark.read.parquet(t).select("term") for t in tombs],
-            )
-            df = df.join(F.broadcast(tomb), "term", "left_anti")
+        # tombstone vocabulary is bounded by the deltas' vocabularies: read
+        # on the driver, it filters as a literal set (a broadcast anti-join
+        # would cost every read of the stack a job)
+        dead = sorted(
+            {t for d in tombs for t in ds.dataset(d).to_table(columns=["term"])["term"].to_pylist()}
+        )
+        if dead:
+            df = df.filter(~F.col("term").isin(dead))
         if adjust_bounds and ratio != 1.0:
             df = df.withColumn(
                 "max_z", F.col("max_z") * F.lit(max(1.0, ratio))

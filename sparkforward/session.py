@@ -10,6 +10,7 @@ to AQE's coalescing).
 
 from __future__ import annotations
 
+import atexit
 import functools
 import os
 import shutil
@@ -219,6 +220,15 @@ class SessionScopedCache:
         while self._entries:
             self._evict(self._entries.popitem()[1])
 
+    def release_disk_state(self) -> None:
+        """Drop every entry, removing only its disk state (``release(value,
+        live=False)``): what a process still holding entries does at exit,
+        when its executor storage dies with it."""
+        while self._entries:
+            _, value, release = self._entries.popitem()[1]
+            if release is not None:
+                release(value, False)
+
     @staticmethod
     def _evict(entry: tuple) -> None:
         session, value, release = entry
@@ -244,6 +254,8 @@ def remove_dir(path: str, live: bool) -> None:
 
 #: the engine's one cache of per-session artifacts
 SESSION_CACHE = SessionScopedCache()
+# entries still held at exit would otherwise strand their temp dirs
+atexit.register(SESSION_CACHE.release_disk_state)
 #: session-free driver memos (see :func:`driver_memo`)
 _DRIVER_MEMOS: list = []
 

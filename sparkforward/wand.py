@@ -21,10 +21,11 @@ gathered blocks) and return the identical top-k.
 Three properties make this the 10^12-doc shape:
 
 * **Serving is doc-disjoint parallel.** Terms are stored in power-of-two
-  doc-modulo shards (postings.py); a query fans out as one task per serve
-  shard, each scoring only docs of its residue class, and the per-shard
-  top-k merge is exact because shards are doc-disjoint. One hot query uses
-  the whole cluster instead of one Python worker.
+  doc-modulo shards (postings.py); a query fans out as one kernel call per
+  serve shard, each scoring only docs of its residue class, and the
+  per-shard top-k merge is exact because shards are doc-disjoint. A big
+  gather spreads its shards over tasks, so one hot query uses the whole
+  cluster; a small one runs in a single task with no shuffle.
 * **Pruned blocks are pruned BYTES.** The planner lower-bounds the final
   k-th score from block minima and drops blocks whose doc-range-aware upper
   bound cannot reach it BEFORE the gather (_serve_blocked) — at the
@@ -437,13 +438,95 @@ def taat_query(
     return [(int(uniq[i]), float(sums[i])) for i in sel]
 
 
-_SHARD_SCHEMA = T.StructType(
-    [
-        T.StructField("q_id", T.StringType()),
-        T.StructField("id", T.StringType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
+def _serve_partition(batches, kk, avgdl, taat_max, acc_decoded, acc_total, deletes_bc):
+    """``mapInArrow`` body of the serve: gathered block rows in,
+    :data:`RESULT_SCHEMA` rows out.
+
+    Rows sort by (q_id, serve_shard, term, salt, block_no). Each (term,
+    salt) run is one kernel term row: its blobs are one slice of the Arrow
+    data buffer, its block offsets the column's own offsets, rebased. Each
+    (q_id, serve_shard) group is one kernel call, and each query's hits in
+    the partition merge to its top-k by (score desc, doc asc) with rank —
+    final when all the query's shards sit in this partition."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not sum(b.num_rows for b in batches):
+        return
+    tbl = pa.Table.from_batches(batches).sort_by(
+        [(c, "ascending") for c in ("q_id", "serve_shard", "term", "salt", "block_no")]
+    ).combine_chunks()
+    col = {c: tbl.column(c).chunk(0) for c in tbl.column_names}
+    cut = {
+        c: np.r_[True, pc.not_equal(col[c][1:], col[c][:-1]).to_numpy(zero_copy_only=False)]
+        for c in ("q_id", "serve_shard", "term", "salt")
+    }
+    new_group = cut["q_id"] | cut["serve_shard"]
+    lo = np.flatnonzero(new_group | cut["term"] | cut["salt"])  # (term, salt) runs
+    hi = np.r_[lo[1:], tbl.num_rows]
+    groups = np.flatnonzero(new_group[lo])  # first run of each (q_id, serve_shard)
+    v = {c: col[c].to_numpy(zero_copy_only=False) for c in (
+        "serve_shard", "q_n_serve", "theta", "idf", "n", "first_doc", "last_doc", "max_z")}
+    for c in ("doc", "tf", "dl"):
+        a = col[f"{c}_blob"]
+        offs = np.frombuffer(
+            a.buffers()[1], np.int64 if pa.types.is_large_binary(a.type) else np.int32
+        )[a.offset : a.offset + len(a) + 1].astype(np.int64)
+        v[c] = (a.buffers()[2].to_pybytes(), offs)
+
+    def term_row(a: int, b: int) -> dict:
+        row = {
+            "idf": v["idf"][a], "n": int(v["n"][a:b].sum()),
+            "block_first_doc": v["first_doc"][a:b], "block_last_doc": v["last_doc"][a:b],
+            "block_max_z": v["max_z"][a:b],
+            "block_len": v["n"][a:b],  # pruning leaves interior gaps
+        }
+        for c in ("doc", "tf", "dl"):
+            data, offs = v[c]
+            row[f"{c}_blob"] = data[offs[a] : offs[b]]
+            row[f"block_{c}_off"] = offs[a:b] - offs[a]
+        return row
+
+    # tombstones arrive via ONE per-generation broadcast (resolved
+    # executor-side), not a task-closure copy per serve
+    dels = {"deletes": deletes_bc.value} if deletes_bc is not None else {}
+    out, q_hits = [], []
+    for g0, g1 in zip(groups, np.r_[groups[1:], len(lo)]):
+        r0 = lo[g0]
+        tr = pd.DataFrame([term_row(a, b) for a, b in zip(lo[g0:g1], hi[g0:g1])])
+        theta = float(v["theta"][r0])
+        # θ-aware dispatch: a finite planner θ0 means the strip kernel
+        # starts with a hot pruning threshold — it is at-or-below TAAT
+        # even with zero pruning (measured, BENCH/BASELINE.md r5), so
+        # TAAT only serves anchorless gathers below the size threshold.
+        # taat_max < 0 forces TAAT, == 0 forces the WAND kernel (probes).
+        if taat_max < 0:
+            kernel = taat_query
+        elif taat_max == 0 or theta != -np.inf or int(tr["n"].sum()) > taat_max:
+            kernel = wand_query_vec
+        else:
+            kernel = taat_query
+        kw = dict(dels)
+        if kernel is wand_query_vec and theta != -np.inf:
+            kw["init_threshold"] = theta
+        stats: list | None = [] if acc_decoded is not None else None
+        q_hits += kernel(
+            tr, kk, avgdl, int(v["q_n_serve"][r0]), int(v["serve_shard"][r0]),
+            stats_out=stats, **kw,
+        )
+        if stats:
+            acc_decoded.add(stats[0][0])
+            acc_total.add(stats[0][1])
+        if g1 == len(lo) or cut["q_id"][lo[g1]]:  # the query's last group here
+            q_id = col["q_id"][int(r0)].as_py()
+            top = sorted(q_hits, key=lambda h: (-h[1], h[0]))[:kk]
+            out += [(q_id, str(d), r, sc) for r, (d, sc) in enumerate(top, 1)]
+            q_hits = []
+    if out:
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c) for c in zip(*out)], names=RESULT_SCHEMA.fieldNames()
+        )
 
 
 #: per-term block-metadata budget for driver-side planning: a term whose
@@ -459,9 +542,8 @@ _FINE_INTERVALS = 8
 
 
 def _serve_blocked(
-    spark, index, postings, term_list, meta, q_terms, q_n_serve,
-    kk, avgdl, taat_max, acc_decoded, acc_total, io_stats, emit,
-    max_meta_blocks, deletes=None, deletes_bc=None,
+    spark, index, term_list, meta, q_terms, q_n_serve,
+    kk, avgdl, taat_max, acc_decoded, acc_total, io_stats, max_meta_blocks,
 ):
     """Block-granular serve: metadata plan -> block pre-filter -> gather.
 
@@ -510,12 +592,18 @@ def _serve_blocked(
       correctness.
     * θ0 also seeds the WAND kernel's pruning threshold.
 
-    Returns the per-shard result DataFrame, or None when no query term
-    exists in the dictionary.
+    The gather is served by :func:`_serve_partition` in one task or
+    several, as :func:`wand_topk` describes.
+
+    Returns the ranked :data:`RESULT_SCHEMA` DataFrame, or None when no
+    query term exists in the dictionary.
     """
     eps = 10.0 ** (-SCORE_DECIMALS)
     neg_inf = -np.inf
-    _levels = _rmq_levels
+    postings, deletes = index.postings, index.deletes
+    # one broadcast per index generation; the planner keeps the local
+    # array (θ0 coverage adjustment), executors read the broadcast
+    deletes_bc = index.deletes_broadcast(spark)
 
     # ONE column-pruned driver-side read classifies terms, returns the fine
     # terms' block rows and the coarse terms' (term, salt) summaries.
@@ -524,11 +612,8 @@ def _serve_blocked(
 
     def coarse_shardmax(t: str, s: int) -> float:
         m_t = meta[t][1]
-        best = 0.0
-        for salt, _b, mz, _by, _n in shard[t]:
-            if salt % m_t == s % m_t:
-                best = max(best, meta[t][0] * mz)
-        return best
+        return max((meta[t][0] * mz for salt, _b, mz, _by, _n in shard[t]
+                    if salt % m_t == s % m_t), default=0.0)
 
     def coarse_shardbytes(t: str, s: int) -> int:
         m_t = meta[t][1]
@@ -550,25 +635,20 @@ def _serve_blocked(
         firsts = cols["first_doc"][lo:hi]
         lasts = cols["last_doc"][lo:hi]
         ns = cols["n"][lo:hi]
-        if deletes is not None and len(deletes):
+        if len(deletes):
             # θ0 k-coverage counts must only count SURVIVING docs:
             # subtract the tombstones falling in each block's doc range
             # (an overcount when a tombstone's id isn't actually in the
             # block — which only LOWERS θ0: sound)
-            ns = np.maximum(
-                ns
-                - (
-                    np.searchsorted(deletes, lasts, side="right")
-                    - np.searchsorted(deletes, firsts, side="left")
-                ),
-                0,
-            )
+            dead = (np.searchsorted(deletes, lasts, side="right")
+                    - np.searchsorted(deletes, firsts, side="left"))
+            ns = np.maximum(ns - dead, 0)
         scores = idf_t * cols["max_z"][lo:hi]
         fine_series.setdefault(t, {})[int(salt)] = {
             "firsts": firsts,
             "lasts": lasts,
             "scores": scores,
-            "levels": _levels(scores),
+            "levels": _rmq_levels(scores),
             "mins": idf_t * cols["min_z"][lo:hi],
             "ns": ns,
             "nbytes": cols["n_bytes"][lo:hi],
@@ -590,51 +670,33 @@ def _serve_blocked(
     def _coverage_bound(mins: list, ns: list) -> float:
         """θ such that >= kk distinct docs have full score >= θ, from block
         (min-score, posting-count) pairs of doc-disjoint series."""
-        val = neg_inf
-        if mins:
-            m_all = np.concatenate(mins)
-            n_all = np.concatenate(ns)
-            order = np.argsort(-m_all, kind="stable")
-            csum = np.cumsum(n_all[order])
-            pos = int(np.searchsorted(csum, kk))
-            if pos < len(csum):
-                val = float(m_all[order][pos])
-        return val
+        if not mins:
+            return neg_inf
+        m_all = np.concatenate(mins)
+        order = np.argsort(-m_all, kind="stable")
+        pos = int(np.searchsorted(np.cumsum(np.concatenate(ns)[order]), kk))
+        return float(m_all[order][pos]) if pos < len(m_all) else neg_inf
 
-    def _theta_anchor(t: str, s: int) -> float:
-        """Best k-coverage lower bound from t's blocks serving shard s."""
-        m_t = meta[t][1]
-        key = (t, s % m_t)
-        hit = _theta_memo.get(key)
-        if hit is not None:
-            return hit
-        val = _coverage_bound(
-            [fine_series[t][salt]["mins"] for salt in _salts_for(t, s)],
-            [fine_series[t][salt]["ns"] for salt in _salts_for(t, s)],
-        )
-        _theta_memo[key] = val
-        return val
+    def _theta_anchor(t: str, s: int | None = None) -> float:
+        """Best k-coverage lower bound from t's blocks serving shard s.
 
-    def _theta_anchor_global(t: str) -> float:
-        """k-coverage bound over ALL of t's salts — sound for the MERGED
-        top-k regardless of t's shard modulus: >= kk distinct docs score
-        >= θ corpus-wide, so any doc pruned below θ - eps ranks strictly
-        below k fully-scored docs in the final merge (a shard may then
-        emit fewer than k rows; none of the dropped docs can reach the
+        With ``s`` None the bound is over ALL of t's salts — sound for the
+        MERGED top-k regardless of t's shard modulus: >= kk distinct docs
+        score >= θ corpus-wide, so any doc pruned below θ - eps ranks
+        strictly below k fully-scored docs in the final merge (a shard may
+        then emit fewer than k rows; none of the dropped docs can reach the
         merged top-k). This is what lets a RARE anchor term — stored
         unsalted (modulus 1) while head terms force a wider serve fan-out
         — set a strong θ0: the exact (selective term + dense heads) query
         shape WAND pruning exists for."""
-        key = (t, "g")
-        hit = _theta_memo.get(key)
-        if hit is not None:
-            return hit
-        val = _coverage_bound(
-            [ser["mins"] for ser in fine_series[t].values()],
-            [ser["ns"] for ser in fine_series[t].values()],
-        )
-        _theta_memo[key] = val
-        return val
+        key = (t, "g" if s is None else s % meta[t][1])
+        if key not in _theta_memo:
+            salts = fine_series[t] if s is None else _salts_for(t, s)
+            sers = [fine_series[t][salt] for salt in salts]
+            _theta_memo[key] = _coverage_bound(
+                [x["mins"] for x in sers], [x["ns"] for x in sers]
+            )
+        return _theta_memo[key]
 
     # (t, salt, t2, s % m_t2) -> per-block max contribution of t2 over the
     # doc range of each (t, salt) block — QUERY-INDEPENDENT, so a
@@ -677,7 +739,7 @@ def _serve_blocked(
                     theta = max(theta, _theta_anchor(t, s))
                 # ...and the global-coverage anchor (any fine term, all
                 # salts) bounds the MERGED k-th — both sound, take the max
-                theta = max(theta, _theta_anchor_global(t))
+                theta = max(theta, _theta_anchor(t))
             coarse_contrib = sum(coarse_shardmax(t2, s) for t2 in ts_coarse)
             for t in ts_fine:
                 others = [t2 for t2 in ts_fine if t2 != t]
@@ -732,34 +794,44 @@ def _serve_blocked(
     if not survive and not whole_rows and not coarse_rows:
         return None
 
+    # as many tasks as AQE would coalesce the gathered bytes into
+    min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    n_tasks = min(
+        spark.sparkContext.defaultParallelism, max(1, -(-bytes_gathered // min_part))
+    )
+
+    def keyed(terms, rows, ddl, on):
+        # the key table joins inside the one task when there is one (both
+        # sides a single partition: no exchange, and no broadcast job),
+        # else as a broadcast
+        scan = postings.filter(F.col("term").isin(terms))
+        keys = local_frame(spark, rows, ddl)
+        if n_tasks == 1:
+            return scan.coalesce(1).join(keys.coalesce(1).hint("shuffle_hash"), on)
+        return scan.join(F.broadcast(keys), on)
+
     parts = []
     sel_cols = [
         "term", "salt", "block_no", "n", "first_doc", "last_doc",
-        "max_z", "min_z", "n_bytes", "doc_blob", "tf_blob", "dl_blob",
+        "max_z", "doc_blob", "tf_blob", "dl_blob",
         "q_id", "serve_shard", "idf", "q_n_serve", "theta",
     ]
     if survive:
-        skey = local_frame(
-            spark, survive,
+        parts.append(keyed(
+            fine_terms, survive,
             "q_id string, serve_shard int, term string, salt int, block_no int, "
             "idf double, q_n_serve int, theta double",
-        )
-        parts.append(
-            postings.filter(F.col("term").isin(fine_terms))
-            .join(F.broadcast(skey), ["term", "salt", "block_no"])
-            .select(*sel_cols)
-        )
+            ["term", "salt", "block_no"],
+        ).select(*sel_cols))
     if whole_rows:
-        wkey = local_frame(
-            spark, whole_rows,
+        parts.append(keyed(
+            fine_terms, whole_rows,
             "q_id string, serve_shard int, term string, salt int, "
             "idf double, q_n_serve int, theta double",
-        )
-        parts.append(
-            postings.filter(F.col("term").isin(fine_terms))
-            .join(F.broadcast(wkey), ["term", "salt"])
-            .select(*sel_cols)
-        )
+            ["term", "salt"],
+        ).select(*sel_cols))
     if coarse_rows:
         # fine terms' doc ranges compressed to a few intervals each: the
         # per-row upper bound on their contribution to any doc in
@@ -789,14 +861,13 @@ def _serve_blocked(
                     ).otherwise(F.lit(0.0))
                 )
             contrib = contrib + F.greatest(*cases)
-        ckey = local_frame(
-            spark, coarse_rows,
-            "q_id string, serve_shard int, term string, salt int, "
-            "idf double, q_n_serve int, theta double, cother double",
-        )
-        cg = (
-            postings.filter(F.col("term").isin(coarse_terms))
-            .join(F.broadcast(ckey), ["term", "salt"])
+        parts.append(
+            keyed(
+                coarse_terms, coarse_rows,
+                "q_id string, serve_shard int, term string, salt int, "
+                "idf double, q_n_serve int, theta double, cother double",
+                ["term", "salt"],
+            )
             .filter(
                 (F.col("theta") == F.lit(float("-inf")))
                 | (
@@ -806,78 +877,27 @@ def _serve_blocked(
             )
             .select(*sel_cols)
         )
-        parts.append(cg)
     gathered = parts[0]
     for p in parts[1:]:
         gathered = gathered.unionByName(p)
 
-    def serve_blocks(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        q_id, shard = key
-        modulus = int(pdf["q_n_serve"].iloc[0])
-        theta = float(pdf["theta"].iloc[0])
-        rows = []
-        for (t, salt), g in pdf.groupby(["term", "salt"], sort=False):
-            g = g.sort_values("block_no")
-            dbs = [bytes(b) for b in g["doc_blob"]]
-            tbs = [bytes(b) for b in g["tf_blob"]]
-            lbs = [bytes(b) for b in g["dl_blob"]]
+    def serve(batches):
+        return _serve_partition(
+            batches, kk, avgdl, taat_max, acc_decoded, acc_total, deletes_bc
+        )
 
-            def offs(bufs):
-                o = [0]
-                for bb in bufs[:-1]:
-                    o.append(o[-1] + len(bb))
-                return o
-
-            rows.append(
-                {
-                    "term": t,
-                    "salt": int(salt),
-                    "idf": float(g["idf"].iloc[0]),
-                    "n": int(g["n"].sum()),
-                    "doc_blob": b"".join(dbs),
-                    "tf_blob": b"".join(tbs),
-                    "dl_blob": b"".join(lbs),
-                    "block_last_doc": [int(x) for x in g["last_doc"]],
-                    "block_first_doc": [int(x) for x in g["first_doc"]],
-                    "block_max_z": [float(x) for x in g["max_z"]],
-                    "block_doc_off": offs(dbs),
-                    "block_tf_off": offs(tbs),
-                    "block_dl_off": offs(lbs),
-                    # pruning leaves interior gaps: lengths per block
-                    "block_len": [int(x) for x in g["n"]],
-                }
-            )
-        tr = pd.DataFrame(rows)
-        # θ-aware dispatch: a finite planner θ0 means the strip kernel
-        # starts with a hot pruning threshold — it is at-or-below TAAT
-        # even with zero pruning (measured, BENCH/BASELINE.md r5), so
-        # TAAT only serves anchorless gathers below the size threshold.
-        # taat_max < 0 forces TAAT, == 0 forces the WAND kernel (probes).
-        if taat_max < 0:
-            kernel = taat_query
-        elif taat_max == 0:
-            kernel = wand_query_vec
-        elif theta != neg_inf or int(tr["n"].sum()) > taat_max:
-            kernel = wand_query_vec
-        else:
-            kernel = taat_query
-        stats: list | None = [] if acc_decoded is not None else None
-        kw = {}
-        if kernel is wand_query_vec and theta != neg_inf:
-            kw["init_threshold"] = theta
-        # tombstones arrive via ONE per-generation broadcast (resolved
-        # executor-side), not a task-closure copy per serve
-        dels = deletes_bc.value if deletes_bc is not None else None
-        if dels is not None and len(dels):
-            kw["deletes"] = dels
-        hits = kernel(tr, kk, avgdl, modulus, int(shard), stats_out=stats, **kw)
-        if stats:
-            acc_decoded.add(stats[0][0])
-            acc_total.add(stats[0][1])
-        return emit(q_id, hits)
-
-    return gathered.groupBy("q_id", "serve_shard").applyInPandas(
-        serve_blocks, schema=_SHARD_SCHEMA
+    if n_tasks == 1:
+        return gathered.coalesce(1).mapInArrow(serve, RESULT_SCHEMA)
+    # doc-disjoint shards make the global top-k of the partitions' top-k
+    # exact; the window input is <= |q| x n_serve x k rows
+    w = Window.partitionBy("q_id").orderBy(
+        F.desc("score"), F.asc(F.col("id").cast("bigint")), F.asc("id")
+    )
+    return (
+        gathered.repartition(n_tasks, "q_id", "serve_shard")
+        .mapInArrow(serve, RESULT_SCHEMA)
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= kk)
     )
 
 
@@ -936,16 +956,22 @@ def wand_topk(
     A term stored at a coarser modulus ``m < q_n_serve`` contributes its
     row ``salt = s % m`` to shard ``s`` (residues nest because both are
     powers of two); foreign docs inside that row are skipped by the kernel
-    residue filter. Per-shard top-k merge via one window — doc-disjoint
-    shards make the union's global top-k exact, so a Zipf-head query no
-    longer lands in a single Python task.
+    residue filter.
+
+    The serve takes ``n = min(defaultParallelism, ceil(bytes_gathered /
+    spark.sql.adaptive.coalescePartitions.minPartitionSize))`` tasks, as
+    many as AQE would coalesce the gather into. With ``n = 1`` one task
+    runs the scan, every (q_id, serve_shard) kernel and each query's top-k
+    merge: no exchange, no window, one Spark job. With ``n > 1`` the gather
+    is hash-partitioned on (q_id, serve_shard) and one window merges the
+    tasks' top-k — exact because shards are doc-disjoint, so a Zipf-head
+    query's shards spread over tasks instead of one Python task.
 
     ``n_serve_shards`` forces AT LEAST that many shards per query (rounded
     up to a power of two) — lower latency for hot queries at the cost of
     replicating coarse-sharded term rows across tasks.
     """
-    postings = index.postings
-    missing = {"block_no", "n_shards"} - set(postings.columns)
+    missing = {"block_no", "n_shards"} - set(index.postings.columns)
     if missing:
         raise ValueError(
             f"wand_topk: the index's postings have no {sorted(missing)} "
@@ -967,14 +993,12 @@ def wand_topk(
     # of three separate joins — two fewer stages per serve call.
     from sparkforward.tokenize import tokenize
 
-    qt_rows = []
-    for r in queries.select("q_id", "query").collect():
-        seen = set()
-        for t in tokenize(r["query"] or ""):
-            if t not in seen:
-                seen.add(t)
-                qt_rows.append({"q_id": r["q_id"], "term": t})
-    term_list = sorted({r["term"] for r in qt_rows})
+    qt_rows = [  # (q_id, term), each query's distinct terms
+        (r["q_id"], t)
+        for r in queries.select("q_id", "query").collect()
+        for t in dict.fromkeys(tokenize(r["query"] or ""))
+    ]
+    term_list = sorted({t for _, t in qt_rows})
     # Serve-PLAN memo: repeated serves of the same (query set, k, flags)
     # over one index object skip the driver-side planning entirely and
     # reuse the built DataFrame — the plan, not results: every action on
@@ -985,7 +1009,7 @@ def wand_topk(
     memo_key = None
     if block_stats is None and io_stats is None:
         memo_key = (
-            tuple(sorted((r["q_id"], r["term"]) for r in qt_rows)),
+            tuple(sorted(qt_rows)),
             kk, n_serve_shards, taat_max_postings, max_meta_blocks,
             len(index.deletes),
         )
@@ -995,56 +1019,28 @@ def wand_topk(
             return hit
     meta = index.catalog.term_meta(term_list)
 
-    forced = 1
-    if n_serve_shards and int(n_serve_shards) > 1:
-        forced = 1 << (int(n_serve_shards) - 1).bit_length()  # next pow2
+    forced = 1 << (max(1, int(n_serve_shards or 1)) - 1).bit_length()  # next pow2
     q_terms: dict[str, list[str]] = {}
-    for r in qt_rows:
-        if r["term"] in meta:
-            q_terms.setdefault(r["q_id"], []).append(r["term"])
+    for q, t in qt_rows:
+        if t in meta:
+            q_terms.setdefault(q, []).append(t)
     q_n_serve = {
         q: max(forced, max(meta[t][1] for t in ts)) for q, ts in q_terms.items()
     }
     taat_max = TAAT_MAX_POSTINGS if taat_max_postings is None else int(taat_max_postings)
     acc_decoded, acc_total = block_stats if block_stats is not None else (None, None)
 
-    def _emit(q_id, hits):
-        return pd.DataFrame(
-            {
-                "q_id": [q_id] * len(hits),
-                "id": [str(d) for d, _ in hits],
-                "score": [s for _, s in hits],
-            }
-        )
-
-    deletes = index.deletes if len(index.deletes) else None
-    # one broadcast per index generation; the driver-side planner keeps the
-    # local array (θ0 coverage adjustment), executors read the broadcast
-    deletes_bc = index.deletes_broadcast(spark)
     # plan only dictionary-live terms: a deleted index can hold posting
     # rows for a term whose df dropped to 0 (dictionary row removed,
     # blobs untouched) — those rows are dead until compaction drops them
     live_terms = [t for t in term_list if t in meta]
-    per_shard = _serve_blocked(
-        spark, index, postings, live_terms, meta, q_terms, q_n_serve,
-        kk, avgdl, taat_max, acc_decoded, acc_total, io_stats, _emit,
+    result = _serve_blocked(
+        spark, index, live_terms, meta, q_terms, q_n_serve,
+        kk, avgdl, taat_max, acc_decoded, acc_total, io_stats,
         MAX_META_BLOCKS if max_meta_blocks is None else int(max_meta_blocks),
-        deletes=deletes, deletes_bc=deletes_bc,
     )
-    if per_shard is None:
+    if result is None:
         return local_frame(spark, [], RESULT_SCHEMA)
-    # global top-k over doc-disjoint shard winners (exact: every global
-    # top-k doc ranks <= k inside its own shard); the window input is
-    # <= |q| x n_serve x k rows — tiny (a driver-side merge was A/B'd and
-    # showed no win over this)
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc(F.col("id").cast("bigint")), F.asc("id")
-    )
-    result = (
-        per_shard.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= kk)
-        .select("q_id", "id", "rank", "score")
-    )
     if memo_key is not None:
         if len(plan_cache) >= 64:  # bounded: long-lived bulk services
             plan_cache.pop(next(iter(plan_cache)))

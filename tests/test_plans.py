@@ -6,7 +6,9 @@ refactor that silently degrades a plan fails CI, not a 100 TB run.
 """
 
 import ast
+import contextlib
 import os
+import re
 
 import pytest
 
@@ -139,16 +141,35 @@ def docs_index(spark, tmp_path_factory):
 
 def test_blocked_gather_joins_are_broadcast(spark, docs_index):
     """The block-granular serve's key tables (surviving blocks /
-    whole-series / coarse) must join the postings scan as broadcast hash
-    joins — a sort-merge of the posting table against a handful of planner
-    keys would shuffle the blobs."""
+    whole-series / coarse) never shuffle the posting blobs. A serve over
+    several tasks joins them to the postings scan as broadcast hash joins
+    (a sort-merge of the posting table against a handful of planner keys
+    would shuffle the blobs); a one-task serve joins them inside its task,
+    both sides one partition, so neither a shuffle nor a broadcast runs."""
     from sparkforward.wand import wand_topk
 
     index, qdf = docs_index
-    plan = _plan(wand_topk(index, qdf, k=5))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
+    one = _plan(wand_topk(index, qdf, k=5))
+    with _min_partition_size(spark, "1"):
+        many = _plan(wand_topk(index, qdf, k=5, io_stats={}))
+    assert "ShuffledHashJoin" in one and not re.search(r"\bExchange\b", one), one
+    assert "BroadcastHashJoin" in many, many
+    for plan in (one, many):
+        assert "SortMergeJoin" not in plan
+        assert "CartesianProduct" not in plan
+
+
+@contextlib.contextmanager
+def _min_partition_size(spark, size: str):
+    """AQE's minimum coalesced partition size set to ``size`` for the
+    block; a serve splits its gathered bytes into tasks of that size."""
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    spark.conf.set(key, size)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_interpolate_uses_broadcast_hash_joins(spark):
@@ -184,7 +205,7 @@ def rerank_inputs(spark, docs_index):
 
 def test_fast_forward_scorers_serve_the_first_stage_once(spark, rerank_inputs):
     """Every Fast-Forward scorer reads its candidate ranking once: the
-    final plan holds ONE FlatMapGroupsInPandas (the WAND serve kernel) and
+    final plan holds ONE MapInArrow (the WAND serve kernel) and
     no FullOuter join — joining scores back to the ranking would re-run
     the first stage per join side, since Spark reuses none of them."""
     from sparkforward.score import ff_score, interpolated_rerank
@@ -195,7 +216,7 @@ def test_fast_forward_scorers_serve_the_first_stage_once(spark, rerank_inputs):
         ff_score(sparse, vectors, query_vectors=qvecs, check_missing=False),
     ):
         plan = _final_plan(out.df)
-        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
         assert "FullOuter" not in plan, plan
 
 
@@ -205,7 +226,7 @@ def test_interpolate_from_wand_serves_once(spark):
     from sparkforward import queries as q
 
     plan = _final_plan(q.q_interpolate_from_wand(spark, SF))
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "FullOuter" not in plan, plan
 
 
@@ -449,3 +470,114 @@ def test_wand_topk_plans_without_spark_jobs(spark, index_variants, layout, budge
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert (io["coarse_terms"] > 0) == (budget is not None), io
     assert len(out.collect()) == 10
+
+
+def _jobs_of(spark, group: str, action):
+    """(result of ``action()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "layout,budget",
+    [("plain", None), ("lsm", None), ("deleted", None), ("plain", 1)],
+    ids=["plain", "lsm3", "deleted", "coarse"],
+)
+def test_small_wand_serve_is_one_job_without_shuffle(
+    spark, index_variants, layout, budget
+):
+    """A serve whose gathered bytes fit in one partition runs the scan,
+    every (query, shard) kernel and each query's merge in one task: the
+    final plan holds one MapInArrow and no shuffle ``Exchange`` (broadcasts
+    of the key tables aside), and ``collect()`` runs exactly one job."""
+    from sparkforward.postings import PostingIndex
+    from sparkforward.wand import wand_topk
+
+    index = PostingIndex.load(spark, index_variants[layout])
+    qdf = local_frame(
+        spark, [("q1", "the web pages"), ("q2", "dup spark join")],
+        "q_id string, query string",
+    )
+    out = wand_topk(index, qdf, k=5, max_meta_blocks=budget)
+    rows, jobs = _jobs_of(spark, f"wand-one-task-{layout}-{budget}", out.collect)
+    plan = _plan(out).split("== Initial Plan ==")[0]
+    assert jobs == 1, plan
+    assert not re.search(r"\bExchange\b", plan), plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert len(rows) == 10
+    assert sorted(r["rank"] for r in rows) == [1, 1, 2, 2, 3, 3, 4, 4, 5, 5]
+
+
+def _exhaustive_topk(index, queries, k) -> dict:
+    """q_id -> [(id, score)]: ``taat_query`` over every stored block of each
+    query term, read on the driver (the fixture index is tiny)."""
+    import pandas as pd
+
+    from sparkforward.tokenize import tokenize
+    from sparkforward.wand import taat_query
+
+    idf = {r["term"]: r["idf"] for r in index.terms.collect()}
+    post = index.postings.toPandas().sort_values(["term", "salt", "block_no"])
+    out = {}
+    for q_id, text in queries:
+        rows = [
+            {
+                "idf": idf[t],
+                "doc_blob": b"".join(g["doc_blob"]),
+                "tf_blob": b"".join(g["tf_blob"]),
+                "dl_blob": b"".join(g["dl_blob"]),
+                "block_len": list(g["n"]),
+                "block_last_doc": list(g["last_doc"]),
+            }
+            for t in set(tokenize(text)) if t in idf
+            for _, g in post[post["term"] == t].groupby("salt")
+        ]
+        hits = taat_query(pd.DataFrame(rows), k, float(index.stats["avgdl"]))
+        out[q_id] = [(str(d), s) for d, s in hits]
+    return out
+
+
+def test_wand_serve_over_several_tasks_matches_one_task(spark, index_variants):
+    """With the minimum partition size lowered, a 16-query serve over four
+    serve shards per query takes the exchange-and-window shape; its rows,
+    block-decode counters and I/O figures equal the one-task serve's, and
+    its rows equal the exhaustive TAAT top-k."""
+    from sparkforward.postings import PostingIndex
+    from sparkforward.wand import wand_topk
+
+    words = ["query", "window", "scan", "merge", "sort", "key", "fast", "part",
+             "customer", "stream", "value", "big", "table", "agg", "spark",
+             "slow", "batch", "column", "vector", "filter", "dup", "hash"]
+    queries = [
+        (f"q{i:02d}", " ".join(words[(3 * i + j) % len(words)] for j in range(3)))
+        for i in range(16)
+    ]
+    index = PostingIndex.load(spark, index_variants["plain"])
+    qdf = local_frame(spark, queries, "q_id string, query string")
+    sc = spark.sparkContext
+
+    def serve():
+        acc = (sc.accumulator(0), sc.accumulator(0))
+        io: dict = {}
+        out = wand_topk(index, qdf, k=7, n_serve_shards=4, block_stats=acc, io_stats=io)
+        rows = sorted(tuple(r) for r in out.collect())
+        return rows, (acc[0].value, acc[1].value), io, _plan(out)
+
+    one = serve()
+    with _min_partition_size(spark, "1"):
+        many = serve()
+    assert not re.search(r"\bExchange\b", one[3]), one[3]
+    assert "Exchange hashpartitioning(q_id" in many[3], many[3]
+    assert many[:3] == one[:3]
+    assert one[1][1] > 0
+    expected = _exhaustive_topk(index, queries, 7)
+    got: dict = {}
+    for q_id, doc, rank, score in one[0]:
+        got.setdefault(q_id, []).append((rank, doc, score))
+    assert {q: [(d, s) for _, d, s in sorted(v)] for q, v in got.items()} == expected

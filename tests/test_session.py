@@ -1,5 +1,6 @@
 """Session helpers: the Arrow local-relation builder, the driver heap
-default, and the Python-worker daemon's zip-archive guard."""
+default, the Python-worker daemon's zip-archive guard, and the session
+cache's clean-up at exit."""
 
 import importlib
 import os
@@ -92,6 +93,7 @@ OLD_PYTHON = pytest.mark.skipif(
     sys.version_info >= (3, 13), reason="zipimport re-reads lazily from 3.13"
 )
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture
@@ -283,3 +285,29 @@ def test_shipped_package_zip_holds_this_tree(spark):
         sc._sparkforward_shipped = was_shipped
         if planted:
             os.remove(stale)
+
+
+def test_cache_entries_held_at_exit_leave_no_temp_dir(tmp_path):
+    """A process that builds a gate index and exits without
+    ``release_caches()`` still removes the index's temp dir: the session
+    cache drops the disk state of every entry it holds at exit."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from sparkforward import queries
+        from sparkforward.session import get_spark
+        spark = get_spark(cores=1, shuffle_partitions=1)
+        print("INDEX", queries._gate_index(spark, {SF!r}, "wand").path)
+        """
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    path = out.stdout.split("INDEX ")[-1].strip()
+    assert os.path.basename(path).startswith("sfwd_wand_"), out.stdout[-2000:]
+    assert os.path.dirname(path) == str(tmp_path)
+    assert not os.path.exists(path)
