@@ -302,25 +302,27 @@ def decode_blocked_posting_list(row) -> tuple[np.ndarray, np.ndarray, np.ndarray
 
 
 def _posting_parts(path: str, stats: dict) -> list[tuple]:
-    """``[(postings dir, avgdl ratio, block_no offset, term-tombstone dirs
-    of NEWER segments)]``, newest first: what the serve view composes
+    """``[(postings dir, avgdl ratio, block_no offset, terms tombstoned by
+    NEWER segments)]``, newest first: what the serve view composes
     (:func:`compose_segment_postings`, :class:`PlanningCatalog`). A single
     generation is one part, its ratio ``avgdl / data_avgdl`` (a delete
-    moves avgdl, not the stored bounds)."""
+    moves avgdl, not the stored bounds). The tombstone tables are read
+    here, on the driver: their vocabulary is bounded by the deltas'."""
     cur = float(stats["avgdl"])
     segs = stats.get("segments")
     if not segs:
         wrote = float(stats.get("data_avgdl", cur))
         pdir = os.path.join(index_data_root(path, stats), "postings")
-        return [(pdir, cur / wrote if wrote > 0 else 1.0, 0, [])]
-    parts, newer = [], []
+        return [(pdir, cur / wrote if wrote > 0 else 1.0, 0, frozenset())]
+    parts, dead = [], frozenset()
     for ord_ in range(len(segs) - 1, -1, -1):
         seg = segs[ord_]
         d = os.path.join(path, seg["dir"]) if seg["dir"] else path
         ratio = cur / float(seg["avgdl"])
-        parts.append((os.path.join(d, "postings"), ratio, ord_ << 24, list(newer)))
+        parts.append((os.path.join(d, "postings"), ratio, ord_ << 24, dead))
         if seg.get("tombstones"):
-            newer.append(os.path.join(path, seg["tombstones"]))
+            tomb = ds.dataset(os.path.join(path, seg["tombstones"]))
+            dead = dead | set(tomb.to_table(columns=["term"])["term"].to_pylist())
     return parts
 
 
@@ -368,16 +370,12 @@ def compose_segment_postings(
             f"segment stack too deep ({len(segs)} > 128) — compact_index first"
         )
     postings: DataFrame | None = None
-    for pdir, ratio, offset, tombs in _posting_parts(path, stats):
+    for pdir, ratio, offset, dead in _posting_parts(path, stats):
         df = spark.read.parquet(pdir)
-        # tombstone vocabulary is bounded by the deltas' vocabularies: read
-        # on the driver, it filters as a literal set (a broadcast anti-join
+        # the dead terms filter as a literal set (a broadcast anti-join
         # would cost every read of the stack a job)
-        dead = sorted(
-            {t for d in tombs for t in ds.dataset(d).to_table(columns=["term"])["term"].to_pylist()}
-        )
         if dead:
-            df = df.filter(~F.col("term").isin(dead))
+            df = df.filter(~F.col("term").isin(sorted(dead)))
         if adjust_bounds and ratio != 1.0:
             df = df.withColumn(
                 "max_z", F.col("max_z") * F.lit(max(1.0, ratio))
@@ -496,8 +494,8 @@ class PlanningCatalog:
         self._jvm = spark._jvm
         self._stats = stats
         self._parts = [
-            (ds.dataset(p), ratio, offset, [ds.dataset(t) for t in tombs])
-            for p, ratio, offset, tombs in _posting_parts(path, stats)
+            (ds.dataset(p), ratio, offset, dead)
+            for p, ratio, offset, dead in _posting_parts(path, stats)
         ]
         self._terms = [ds.dataset(d) for d in _terms_dirs(path, stats)]
 
@@ -517,9 +515,7 @@ class PlanningCatalog:
     def _blocks(self, terms: list[str]) -> Iterator[pa.Table]:
         """Composed (term, *BLOCK_META_COLS) rows of ``terms``, a table per
         scanned batch."""
-        for dset, ratio, offset, tombs in self._parts:
-            flt = _term_in(terms)
-            dead = {t for ts in tombs for t in ts.to_table(filter=flt)["term"].to_pylist()}
+        for dset, ratio, offset, dead in self._parts:
             live = [t for t in terms if t not in dead]
             if not live:
                 continue

@@ -50,6 +50,8 @@ Only the block-granular layout with doc-modulo shards (``block_no`` and
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -442,87 +444,108 @@ def _serve_partition(batches, kk, avgdl, taat_max, acc_decoded, acc_total, delet
     """``mapInArrow`` body of the serve: gathered block rows in,
     :data:`RESULT_SCHEMA` rows out.
 
-    Rows sort by (q_id, serve_shard, term, salt, block_no). Each (term,
-    salt) run is one kernel term row: its blobs are one slice of the Arrow
-    data buffer, its block offsets the column's own offsets, rebased. Each
-    (q_id, serve_shard) group is one kernel call, and each query's hits in
-    the partition merge to its top-k by (score desc, doc asc) with rank —
-    final when all the query's shards sit in this partition."""
+    Rows arrive sorted by (q_id, serve_shard, term, salt, block_no). Each
+    batch's complete (q_id, serve_shard) groups are served together, so a
+    task holds one batch plus the one group still open, not its whole
+    partition. Each (term, salt) run is one kernel term row: its blobs are
+    one slice of the Arrow data buffer, its block offsets the column's own
+    offsets, rebased. Each (q_id, serve_shard) group is one kernel call,
+    and each query's hits merge to its top-k by (score desc, doc asc) with
+    rank — final when all the query's shards sit in this partition."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    batches = list(batches)
-    if not sum(b.num_rows for b in batches):
-        return
-    tbl = pa.Table.from_batches(batches).sort_by(
-        [(c, "ascending") for c in ("q_id", "serve_shard", "term", "salt", "block_no")]
-    ).combine_chunks()
-    col = {c: tbl.column(c).chunk(0) for c in tbl.column_names}
-    cut = {
-        c: np.r_[True, pc.not_equal(col[c][1:], col[c][:-1]).to_numpy(zero_copy_only=False)]
-        for c in ("q_id", "serve_shard", "term", "salt")
-    }
-    new_group = cut["q_id"] | cut["serve_shard"]
-    lo = np.flatnonzero(new_group | cut["term"] | cut["salt"])  # (term, salt) runs
-    hi = np.r_[lo[1:], tbl.num_rows]
-    groups = np.flatnonzero(new_group[lo])  # first run of each (q_id, serve_shard)
-    v = {c: col[c].to_numpy(zero_copy_only=False) for c in (
-        "serve_shard", "q_n_serve", "theta", "idf", "n", "first_doc", "last_doc", "max_z")}
-    for c in ("doc", "tf", "dl"):
-        a = col[f"{c}_blob"]
-        offs = np.frombuffer(
-            a.buffers()[1], np.int64 if pa.types.is_large_binary(a.type) else np.int32
-        )[a.offset : a.offset + len(a) + 1].astype(np.int64)
-        v[c] = (a.buffers()[2].to_pybytes(), offs)
-
-    def term_row(a: int, b: int) -> dict:
-        row = {
-            "idf": v["idf"][a], "n": int(v["n"][a:b].sum()),
-            "block_first_doc": v["first_doc"][a:b], "block_last_doc": v["last_doc"][a:b],
-            "block_max_z": v["max_z"][a:b],
-            "block_len": v["n"][a:b],  # pruning leaves interior gaps
-        }
-        for c in ("doc", "tf", "dl"):
-            data, offs = v[c]
-            row[f"{c}_blob"] = data[offs[a] : offs[b]]
-            row[f"block_{c}_off"] = offs[a:b] - offs[a]
-        return row
+    def chunks():
+        """Tables of complete (q_id, serve_shard) groups, in order."""
+        held, key = [], None  # the open group's batch slices, and its key
+        for b in batches:
+            if not b.num_rows:
+                continue
+            qs = b.column("q_id").to_numpy(zero_copy_only=False)
+            ss = b.column("serve_shard").to_numpy(zero_copy_only=False)
+            starts = np.r_[(qs[0], ss[0]) != key, (qs[1:] != qs[:-1]) | (ss[1:] != ss[:-1])]
+            last = np.flatnonzero(starts)[-1:]
+            if len(last):
+                if held or last[0]:
+                    yield pa.Table.from_batches([*held, b.slice(0, last[0])])
+                held = [b.slice(last[0])]
+            else:
+                held.append(b)
+            key = (qs[-1], ss[-1])
+        if held:
+            yield pa.Table.from_batches(held)
 
     # tombstones arrive via ONE per-generation broadcast (resolved
     # executor-side), not a task-closure copy per serve
     dels = {"deletes": deletes_bc.value} if deletes_bc is not None else {}
-    out, q_hits = [], []
-    for g0, g1 in zip(groups, np.r_[groups[1:], len(lo)]):
-        r0 = lo[g0]
-        tr = pd.DataFrame([term_row(a, b) for a, b in zip(lo[g0:g1], hi[g0:g1])])
-        theta = float(v["theta"][r0])
-        # θ-aware dispatch: a finite planner θ0 means the strip kernel
-        # starts with a hot pruning threshold — it is at-or-below TAAT
-        # even with zero pruning (measured, BENCH/BASELINE.md r5), so
-        # TAAT only serves anchorless gathers below the size threshold.
-        # taat_max < 0 forces TAAT, == 0 forces the WAND kernel (probes).
-        if taat_max < 0:
-            kernel = taat_query
-        elif taat_max == 0 or theta != -np.inf or int(tr["n"].sum()) > taat_max:
-            kernel = wand_query_vec
-        else:
-            kernel = taat_query
-        kw = dict(dels)
-        if kernel is wand_query_vec and theta != -np.inf:
-            kw["init_threshold"] = theta
-        stats: list | None = [] if acc_decoded is not None else None
-        q_hits += kernel(
-            tr, kk, avgdl, int(v["q_n_serve"][r0]), int(v["serve_shard"][r0]),
-            stats_out=stats, **kw,
-        )
-        if stats:
-            acc_decoded.add(stats[0][0])
-            acc_total.add(stats[0][1])
-        if g1 == len(lo) or cut["q_id"][lo[g1]]:  # the query's last group here
-            q_id = col["q_id"][int(r0)].as_py()
-            top = sorted(q_hits, key=lambda h: (-h[1], h[0]))[:kk]
-            out += [(q_id, str(d), r, sc) for r, (d, sc) in enumerate(top, 1)]
-            q_hits = []
+
+    def group_hits(tbl: pa.Table):
+        """(q_id, kernel hits) of each (q_id, serve_shard) group of ``tbl``."""
+        tbl = tbl.combine_chunks()
+        col = {c: tbl.column(c).chunk(0) for c in tbl.column_names}
+        cut = {
+            c: np.r_[True, pc.not_equal(col[c][1:], col[c][:-1]).to_numpy(zero_copy_only=False)]
+            for c in ("q_id", "serve_shard", "term", "salt")
+        }
+        new_group = cut["q_id"] | cut["serve_shard"]
+        lo = np.flatnonzero(new_group | cut["term"] | cut["salt"])  # (term, salt) runs
+        hi = np.r_[lo[1:], tbl.num_rows]
+        groups = np.flatnonzero(new_group[lo])  # first run of each group
+        v = {c: col[c].to_numpy(zero_copy_only=False) for c in (
+            "serve_shard", "q_n_serve", "theta", "idf", "n", "first_doc", "last_doc", "max_z")}
+        for c in ("doc", "tf", "dl"):
+            a = col[f"{c}_blob"]
+            offs = np.frombuffer(
+                a.buffers()[1], np.int64 if pa.types.is_large_binary(a.type) else np.int32
+            )[a.offset : a.offset + len(a) + 1].astype(np.int64)
+            v[c] = (a.buffers()[2].to_pybytes(), offs)
+
+        def term_row(a: int, b: int) -> dict:
+            row = {
+                "idf": v["idf"][a], "n": int(v["n"][a:b].sum()),
+                "block_first_doc": v["first_doc"][a:b], "block_last_doc": v["last_doc"][a:b],
+                "block_max_z": v["max_z"][a:b],
+                "block_len": v["n"][a:b],  # pruning leaves interior gaps
+            }
+            for c in ("doc", "tf", "dl"):
+                data, offs = v[c]
+                row[f"{c}_blob"] = data[offs[a] : offs[b]]
+                row[f"block_{c}_off"] = offs[a:b] - offs[a]
+            return row
+
+        for g0, g1 in zip(groups, np.r_[groups[1:], len(lo)]):
+            r0 = lo[g0]
+            tr = pd.DataFrame([term_row(a, b) for a, b in zip(lo[g0:g1], hi[g0:g1])])
+            theta = float(v["theta"][r0])
+            # θ-aware dispatch: a finite planner θ0 means the strip kernel
+            # starts with a hot pruning threshold — it is at-or-below TAAT
+            # even with zero pruning (measured, BENCH/BASELINE.md r5), so
+            # TAAT only serves anchorless gathers below the size threshold.
+            # taat_max < 0 forces TAAT, == 0 forces the WAND kernel (probes).
+            if taat_max < 0:
+                kernel = taat_query
+            elif taat_max == 0 or theta != -np.inf or int(tr["n"].sum()) > taat_max:
+                kernel = wand_query_vec
+            else:
+                kernel = taat_query
+            kw = dict(dels)
+            if kernel is wand_query_vec and theta != -np.inf:
+                kw["init_threshold"] = theta
+            stats: list | None = [] if acc_decoded is not None else None
+            hits = kernel(
+                tr, kk, avgdl, int(v["q_n_serve"][r0]), int(v["serve_shard"][r0]),
+                stats_out=stats, **kw,
+            )
+            if stats:
+                acc_decoded.add(stats[0][0])
+                acc_total.add(stats[0][1])
+            yield col["q_id"][int(r0)].as_py(), hits
+
+    out = []
+    per_group = (gh for tbl in chunks() for gh in group_hits(tbl))
+    for q_id, ghs in itertools.groupby(per_group, lambda gh: gh[0]):
+        top = sorted((h for _, hits in ghs for h in hits), key=lambda h: (-h[1], h[0]))
+        out += [(q_id, str(d), r, sc) for r, (d, sc) in enumerate(top[:kk], 1)]
     if out:
         yield pa.RecordBatch.from_arrays(
             [pa.array(c) for c in zip(*out)], names=RESULT_SCHEMA.fieldNames()
@@ -540,10 +563,22 @@ MAX_META_BLOCKS = 65536
 #: compressed doc-interval count per fine term for the coarse-term filter
 _FINE_INTERVALS = 8
 
+#: gathered block bytes up to which one task serves every query. Past
+#: this, spreading the kernels over every core pays for the exchange and
+#: the merge window: on 4 cores one task won at 0.6 MB gathered, tied at
+#: 0.9 MB and lost at 1.2 MB (tools/probe_serve_shapes.py, BENCH/ab_4c)
+SERVE_TASK_BYTES = 1 << 20
+#: scanned block bytes up to which that one task also runs the scan. Past
+#: this, a scan in its own tasks pays for the exchange into the serve
+#: task: on 4 cores the scan in the serve task won at 4.2 MB scanned and
+#: lost at 7.2 MB (uncached 300k-doc index, same probe)
+SERVE_SCAN_BYTES = 4 << 20
+
 
 def _serve_blocked(
-    spark, index, term_list, meta, q_terms, q_n_serve,
-    kk, avgdl, taat_max, acc_decoded, acc_total, io_stats, max_meta_blocks,
+    spark, index, postings, term_list, meta, q_terms, q_n_serve,
+    kk, avgdl, taat_max, acc_decoded, acc_total, io_stats,
+    max_meta_blocks, deletes=None, deletes_bc=None,
 ):
     """Block-granular serve: metadata plan -> block pre-filter -> gather.
 
@@ -600,10 +635,7 @@ def _serve_blocked(
     """
     eps = 10.0 ** (-SCORE_DECIMALS)
     neg_inf = -np.inf
-    postings, deletes = index.postings, index.deletes
-    # one broadcast per index generation; the planner keeps the local
-    # array (θ0 coverage adjustment), executors read the broadcast
-    deletes_bc = index.deletes_broadcast(spark)
+    _levels = _rmq_levels
 
     # ONE column-pruned driver-side read classifies terms, returns the fine
     # terms' block rows and the coarse terms' (term, salt) summaries.
@@ -612,8 +644,11 @@ def _serve_blocked(
 
     def coarse_shardmax(t: str, s: int) -> float:
         m_t = meta[t][1]
-        return max((meta[t][0] * mz for salt, _b, mz, _by, _n in shard[t]
-                    if salt % m_t == s % m_t), default=0.0)
+        best = 0.0
+        for salt, _b, mz, _by, _n in shard[t]:
+            if salt % m_t == s % m_t:
+                best = max(best, meta[t][0] * mz)
+        return best
 
     def coarse_shardbytes(t: str, s: int) -> int:
         m_t = meta[t][1]
@@ -635,20 +670,25 @@ def _serve_blocked(
         firsts = cols["first_doc"][lo:hi]
         lasts = cols["last_doc"][lo:hi]
         ns = cols["n"][lo:hi]
-        if len(deletes):
+        if deletes is not None and len(deletes):
             # θ0 k-coverage counts must only count SURVIVING docs:
             # subtract the tombstones falling in each block's doc range
             # (an overcount when a tombstone's id isn't actually in the
             # block — which only LOWERS θ0: sound)
-            dead = (np.searchsorted(deletes, lasts, side="right")
-                    - np.searchsorted(deletes, firsts, side="left"))
-            ns = np.maximum(ns - dead, 0)
+            ns = np.maximum(
+                ns
+                - (
+                    np.searchsorted(deletes, lasts, side="right")
+                    - np.searchsorted(deletes, firsts, side="left")
+                ),
+                0,
+            )
         scores = idf_t * cols["max_z"][lo:hi]
         fine_series.setdefault(t, {})[int(salt)] = {
             "firsts": firsts,
             "lasts": lasts,
             "scores": scores,
-            "levels": _rmq_levels(scores),
+            "levels": _levels(scores),
             "mins": idf_t * cols["min_z"][lo:hi],
             "ns": ns,
             "nbytes": cols["n_bytes"][lo:hi],
@@ -670,12 +710,16 @@ def _serve_blocked(
     def _coverage_bound(mins: list, ns: list) -> float:
         """θ such that >= kk distinct docs have full score >= θ, from block
         (min-score, posting-count) pairs of doc-disjoint series."""
-        if not mins:
-            return neg_inf
-        m_all = np.concatenate(mins)
-        order = np.argsort(-m_all, kind="stable")
-        pos = int(np.searchsorted(np.cumsum(np.concatenate(ns)[order]), kk))
-        return float(m_all[order][pos]) if pos < len(m_all) else neg_inf
+        val = neg_inf
+        if mins:
+            m_all = np.concatenate(mins)
+            n_all = np.concatenate(ns)
+            order = np.argsort(-m_all, kind="stable")
+            csum = np.cumsum(n_all[order])
+            pos = int(np.searchsorted(csum, kk))
+            if pos < len(csum):
+                val = float(m_all[order][pos])
+        return val
 
     def _theta_anchor(t: str, s: int | None = None) -> float:
         """Best k-coverage lower bound from t's blocks serving shard s.
@@ -782,11 +826,17 @@ def _serve_blocked(
                 cb = coarse_shardbytes(t, s)
                 bytes_total += cb
                 bytes_gathered += cb
+    # the scan reads every block of the query's terms once, whatever the
+    # pruning gathers
+    bytes_scanned = sum(
+        int(ser["nbytes"].sum()) for t in fine_terms for ser in fine_series[t].values()
+    ) + sum(by for t in coarse_terms for _s, _b, _m, by, _n in shard[t])
     if io_stats is not None:
         io_stats.update(
             {
                 "bytes_total": int(bytes_total),
                 "bytes_gathered": int(bytes_gathered),
+                "bytes_scanned": int(bytes_scanned),
                 "bytes_fraction": (bytes_gathered / bytes_total) if bytes_total else 1.0,
                 "coarse_terms": len(coarse_terms),
             }
@@ -794,21 +844,16 @@ def _serve_blocked(
     if not survive and not whole_rows and not coarse_rows:
         return None
 
-    # as many tasks as AQE would coalesce the gathered bytes into
-    min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    )
-    n_tasks = min(
-        spark.sparkContext.defaultParallelism, max(1, -(-bytes_gathered // min_part))
-    )
+    one_task = bytes_gathered <= SERVE_TASK_BYTES
+    scan_in_task = one_task and bytes_scanned <= SERVE_SCAN_BYTES
 
     def keyed(terms, rows, ddl, on):
-        # the key table joins inside the one task when there is one (both
-        # sides a single partition: no exchange, and no broadcast job),
-        # else as a broadcast
+        # the key table joins inside the one task when the scan runs there
+        # (both sides a single partition: no exchange, and no broadcast
+        # job), else as a broadcast
         scan = postings.filter(F.col("term").isin(terms))
         keys = local_frame(spark, rows, ddl)
-        if n_tasks == 1:
+        if scan_in_task:
             return scan.coalesce(1).join(keys.coalesce(1).hint("shuffle_hash"), on)
         return scan.join(F.broadcast(keys), on)
 
@@ -886,15 +931,20 @@ def _serve_blocked(
             batches, kk, avgdl, taat_max, acc_decoded, acc_total, deletes_bc
         )
 
-    if n_tasks == 1:
-        return gathered.coalesce(1).mapInArrow(serve, RESULT_SCHEMA)
+    by_group = ("q_id", "serve_shard", "term", "salt", "block_no")
+    if one_task:
+        # every query's merge is final in the one task; a scan too big for
+        # it runs in its own tasks and feeds it through one exchange
+        one = gathered.coalesce(1) if scan_in_task else gathered.repartition(1)
+        return one.sortWithinPartitions(*by_group).mapInArrow(serve, RESULT_SCHEMA)
     # doc-disjoint shards make the global top-k of the partitions' top-k
     # exact; the window input is <= |q| x n_serve x k rows
     w = Window.partitionBy("q_id").orderBy(
         F.desc("score"), F.asc(F.col("id").cast("bigint")), F.asc("id")
     )
     return (
-        gathered.repartition(n_tasks, "q_id", "serve_shard")
+        gathered.repartition(spark.sparkContext.defaultParallelism, "q_id", "serve_shard")
+        .sortWithinPartitions(*by_group)
         .mapInArrow(serve, RESULT_SCHEMA)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= kk)
@@ -958,20 +1008,21 @@ def wand_topk(
     powers of two); foreign docs inside that row are skipped by the kernel
     residue filter.
 
-    The serve takes ``n = min(defaultParallelism, ceil(bytes_gathered /
-    spark.sql.adaptive.coalescePartitions.minPartitionSize))`` tasks, as
-    many as AQE would coalesce the gather into. With ``n = 1`` one task
-    runs the scan, every (q_id, serve_shard) kernel and each query's top-k
-    merge: no exchange, no window, one Spark job. With ``n > 1`` the gather
-    is hash-partitioned on (q_id, serve_shard) and one window merges the
-    tasks' top-k — exact because shards are doc-disjoint, so a Zipf-head
+    A gather of at most :data:`SERVE_TASK_BYTES` is served by one task that
+    runs every (q_id, serve_shard) kernel and merges each query's top-k in
+    place: no window, and, when the scan reads at most
+    :data:`SERVE_SCAN_BYTES` too, the scan runs in that task — no exchange,
+    one Spark job. A bigger gather is hash-partitioned on (q_id,
+    serve_shard) over ``defaultParallelism`` tasks and one window merges
+    their top-k — exact because shards are doc-disjoint, so a Zipf-head
     query's shards spread over tasks instead of one Python task.
 
     ``n_serve_shards`` forces AT LEAST that many shards per query (rounded
     up to a power of two) — lower latency for hot queries at the cost of
     replicating coarse-sharded term rows across tasks.
     """
-    missing = {"block_no", "n_shards"} - set(index.postings.columns)
+    postings = index.postings
+    missing = {"block_no", "n_shards"} - set(postings.columns)
     if missing:
         raise ValueError(
             f"wand_topk: the index's postings have no {sorted(missing)} "
@@ -993,12 +1044,14 @@ def wand_topk(
     # of three separate joins — two fewer stages per serve call.
     from sparkforward.tokenize import tokenize
 
-    qt_rows = [  # (q_id, term), each query's distinct terms
-        (r["q_id"], t)
-        for r in queries.select("q_id", "query").collect()
-        for t in dict.fromkeys(tokenize(r["query"] or ""))
-    ]
-    term_list = sorted({t for _, t in qt_rows})
+    qt_rows = []
+    for r in queries.select("q_id", "query").collect():
+        seen = set()
+        for t in tokenize(r["query"] or ""):
+            if t not in seen:
+                seen.add(t)
+                qt_rows.append({"q_id": r["q_id"], "term": t})
+    term_list = sorted({r["term"] for r in qt_rows})
     # Serve-PLAN memo: repeated serves of the same (query set, k, flags)
     # over one index object skip the driver-side planning entirely and
     # reuse the built DataFrame — the plan, not results: every action on
@@ -1009,7 +1062,7 @@ def wand_topk(
     memo_key = None
     if block_stats is None and io_stats is None:
         memo_key = (
-            tuple(sorted(qt_rows)),
+            tuple(sorted((r["q_id"], r["term"]) for r in qt_rows)),
             kk, n_serve_shards, taat_max_postings, max_meta_blocks,
             len(index.deletes),
         )
@@ -1019,25 +1072,32 @@ def wand_topk(
             return hit
     meta = index.catalog.term_meta(term_list)
 
-    forced = 1 << (max(1, int(n_serve_shards or 1)) - 1).bit_length()  # next pow2
+    forced = 1
+    if n_serve_shards and int(n_serve_shards) > 1:
+        forced = 1 << (int(n_serve_shards) - 1).bit_length()  # next pow2
     q_terms: dict[str, list[str]] = {}
-    for q, t in qt_rows:
-        if t in meta:
-            q_terms.setdefault(q, []).append(t)
+    for r in qt_rows:
+        if r["term"] in meta:
+            q_terms.setdefault(r["q_id"], []).append(r["term"])
     q_n_serve = {
         q: max(forced, max(meta[t][1] for t in ts)) for q, ts in q_terms.items()
     }
     taat_max = TAAT_MAX_POSTINGS if taat_max_postings is None else int(taat_max_postings)
     acc_decoded, acc_total = block_stats if block_stats is not None else (None, None)
 
+    deletes = index.deletes if len(index.deletes) else None
+    # one broadcast per index generation; the driver-side planner keeps the
+    # local array (θ0 coverage adjustment), executors read the broadcast
+    deletes_bc = index.deletes_broadcast(spark)
     # plan only dictionary-live terms: a deleted index can hold posting
     # rows for a term whose df dropped to 0 (dictionary row removed,
     # blobs untouched) — those rows are dead until compaction drops them
     live_terms = [t for t in term_list if t in meta]
     result = _serve_blocked(
-        spark, index, live_terms, meta, q_terms, q_n_serve,
+        spark, index, postings, live_terms, meta, q_terms, q_n_serve,
         kk, avgdl, taat_max, acc_decoded, acc_total, io_stats,
         MAX_META_BLOCKS if max_meta_blocks is None else int(max_meta_blocks),
+        deletes=deletes, deletes_bc=deletes_bc,
     )
     if result is None:
         return local_frame(spark, [], RESULT_SCHEMA)

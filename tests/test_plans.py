@@ -6,7 +6,6 @@ refactor that silently degrades a plan fails CI, not a 100 TB run.
 """
 
 import ast
-import contextlib
 import os
 import re
 
@@ -139,37 +138,25 @@ def docs_index(spark, tmp_path_factory):
     return index, qdf
 
 
-def test_blocked_gather_joins_are_broadcast(spark, docs_index):
+def test_blocked_gather_joins_are_broadcast(spark, docs_index, monkeypatch):
     """The block-granular serve's key tables (surviving blocks /
-    whole-series / coarse) never shuffle the posting blobs. A serve over
-    several tasks joins them to the postings scan as broadcast hash joins
-    (a sort-merge of the posting table against a handful of planner keys
-    would shuffle the blobs); a one-task serve joins them inside its task,
-    both sides one partition, so neither a shuffle nor a broadcast runs."""
-    from sparkforward.wand import wand_topk
+    whole-series / coarse) never shuffle the posting blobs. A serve whose
+    scan runs in its own tasks joins them to the postings scan as
+    broadcast hash joins (a sort-merge of the posting table against a
+    handful of planner keys would shuffle the blobs); a one-task serve
+    joins them inside its task, both sides one partition, so neither a
+    shuffle nor a broadcast runs."""
+    from sparkforward import wand
 
     index, qdf = docs_index
-    one = _plan(wand_topk(index, qdf, k=5))
-    with _min_partition_size(spark, "1"):
-        many = _plan(wand_topk(index, qdf, k=5, io_stats={}))
+    one = _plan(wand.wand_topk(index, qdf, k=5))
+    monkeypatch.setattr(wand, "SERVE_TASK_BYTES", 0)
+    many = _plan(wand.wand_topk(index, qdf, k=5, io_stats={}))
     assert "ShuffledHashJoin" in one and not re.search(r"\bExchange\b", one), one
     assert "BroadcastHashJoin" in many, many
     for plan in (one, many):
         assert "SortMergeJoin" not in plan
         assert "CartesianProduct" not in plan
-
-
-@contextlib.contextmanager
-def _min_partition_size(spark, size: str):
-    """AQE's minimum coalesced partition size set to ``size`` for the
-    block; a serve splits its gathered bytes into tasks of that size."""
-    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    old = spark.conf.get(key)
-    spark.conf.set(key, size)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def test_interpolate_uses_broadcast_hash_joins(spark):
@@ -492,7 +479,8 @@ def _jobs_of(spark, group: str, action):
 def test_small_wand_serve_is_one_job_without_shuffle(
     spark, index_variants, layout, budget
 ):
-    """A serve whose gathered bytes fit in one partition runs the scan,
+    """A serve that gathers and scans less than one task's share
+    (``wand.SERVE_TASK_BYTES``, ``wand.SERVE_SCAN_BYTES``) runs the scan,
     every (query, shard) kernel and each query's merge in one task: the
     final plan holds one MapInArrow and no shuffle ``Exchange`` (broadcasts
     of the key tables aside), and ``collect()`` runs exactly one job."""
@@ -543,13 +531,18 @@ def _exhaustive_topk(index, queries, k) -> dict:
     return out
 
 
-def test_wand_serve_over_several_tasks_matches_one_task(spark, index_variants):
-    """With the minimum partition size lowered, a 16-query serve over four
-    serve shards per query takes the exchange-and-window shape; its rows,
-    block-decode counters and I/O figures equal the one-task serve's, and
-    its rows equal the exhaustive TAAT top-k."""
+def test_wand_serve_over_several_tasks_matches_one_task(
+    spark, index_variants, monkeypatch
+):
+    """A 16-query serve over four serve shards per query, in every serve
+    shape: one task; one task fed by a scan too big for it (one exchange,
+    no window); one task fed 2-row Arrow batches, so (query, shard) groups
+    span batches; and, past the one-task gather size, the
+    exchange-and-window shape. Each shape's rows, block-decode counters
+    and I/O figures equal the one-task serve's, and its rows equal the
+    exhaustive TAAT top-k."""
+    from sparkforward import wand
     from sparkforward.postings import PostingIndex
-    from sparkforward.wand import wand_topk
 
     words = ["query", "window", "scan", "merge", "sort", "key", "fast", "part",
              "customer", "stream", "value", "big", "table", "agg", "spark",
@@ -565,16 +558,30 @@ def test_wand_serve_over_several_tasks_matches_one_task(spark, index_variants):
     def serve():
         acc = (sc.accumulator(0), sc.accumulator(0))
         io: dict = {}
-        out = wand_topk(index, qdf, k=7, n_serve_shards=4, block_stats=acc, io_stats=io)
+        out = wand.wand_topk(
+            index, qdf, k=7, n_serve_shards=4, block_stats=acc, io_stats=io
+        )
         rows = sorted(tuple(r) for r in out.collect())
         return rows, (acc[0].value, acc[1].value), io, _plan(out)
 
     one = serve()
-    with _min_partition_size(spark, "1"):
-        many = serve()
+    monkeypatch.setattr(wand, "SERVE_SCAN_BYTES", 0)
+    fed = serve()
+    monkeypatch.undo()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        small = serve()
+    finally:
+        spark.conf.set(key, old)
+    monkeypatch.setattr(wand, "SERVE_TASK_BYTES", 0)
+    many = serve()
     assert not re.search(r"\bExchange\b", one[3]), one[3]
+    assert "Exchange SinglePartition" in fed[3] and "Window" not in fed[3], fed[3]
     assert "Exchange hashpartitioning(q_id" in many[3], many[3]
-    assert many[:3] == one[:3]
+    for other in (fed, small, many):
+        assert other[:3] == one[:3]
     assert one[1][1] > 0
     expected = _exhaustive_topk(index, queries, 7)
     got: dict = {}
