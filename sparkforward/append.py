@@ -11,84 +11,63 @@ flip sees a complete, consistent index; a crash mid-append leaves the base
 index untouched and the next append wipes the orphaned generation and
 redoes the work.
 
-**Concurrency contract — single writer, non-overlapping readers.** The
-commit point is atomic, but superseded generations are deleted immediately
-after the flip: a reader that loaded the OLD stats.json and is still
-mid-scan when a writer commits would read deleted parquet. This mirrors the
-reference's single-process h5py store (no MVCC there either). A deployment
-that needs concurrent long-running readers should defer
+**Concurrency contract — single writer.** An append only adds a segment:
+it deletes no committed directory, so a reader holding an older handle
+keeps reading files that still exist. :func:`compact_index` and
+:func:`delete_docs` delete the superseded generations immediately after
+their flip; a reader that loaded the OLD stats.json and is still mid-scan
+then reads deleted parquet. A deployment that needs concurrent
+long-running readers across those two should defer
 :func:`_drop_superseded` to a grace-period GC (the flip/GC split in the
-code is exactly that seam); within this repo every soak/test/serve path
-reloads the index after append, so immediate GC is sound.
+code is exactly that seam).
 
-Two append modes trade write amplification against read fan-in:
+Every append is Lucene-style (per-segment postings): the delta writes its
+OWN complete mini-index — every delta term's posting lists built from the
+delta's docs alone, salted under the pinned union head map — and NO base
+row is read or rewritten. Write amplification is O(delta bytes). A
+(term, salt) shard may then have block rows in several segments;
+:func:`postings.compose_segment_postings` renumbers blocks as
+``segment_ordinal << 24 | block_no`` so the serve kernels' existing
+(term, salt)-group reassembly concatenates them into one valid posting
+list IN GLOBAL DOC ORDER (appends are id-monotone, so segment order is doc
+order; blocks are delta-restarted and self-contained) — the cursor-level
+cross-segment merge degenerates to concatenation. Four invariants make
+this exact:
 
-* ``mode="rewrite"`` (default): the new generation holds the COMPLETE union
-  index and is byte-identical to a from-scratch build of the union corpus
-  (verified by the DuckDB signature in tools/soak_append.py). Byte-identity
-  pins three subtleties:
+- **Append is id-monotone** (new doc ids strictly above the base max),
+  mirroring the reference's append-only contract; a colliding id would
+  corrupt posting order and is rejected up front (B2 analog). The exact
+  integer token total (``stats.sum_dl``) is persisted at build time so
+  the union avgdl reproduces the builder's float64 division bit-for-bit.
+- **Pinned salt layout.** Every visible row of a term, in every segment,
+  is salted at the SAME doc-modulo. The head map is persisted in
+  ``stats.json``; each append re-derives the union head map and re-merges
+  ONLY the terms whose modulus changed into the new segment, writing a
+  term tombstone that hides their rows in every older segment — a
+  df-doubling event, so each term re-shards O(log df) times over the
+  index's lifetime, amortized O(bytes · log) instead of
+  O(bytes · appends).
+- **Sound stale bounds.** Each segment records the avgdl its block bounds
+  were written under; the compose scales older segments' ``max_z`` /
+  ``min_z`` by the avgdl ratio (sound pruning), and serving stays EXACT
+  because final scores always recompute from raw tf/dl under the current
+  avgdl.
+- **Additive term dictionaries.** Each segment stores its DELTA's
+  (term, df) only; :func:`postings.current_terms` sums them at load and
+  re-derives idf/n_shards under the current corpus — so the dictionary
+  write is O(delta vocabulary) too.
 
-  - **avgdl moves** with the union corpus, and every block's
-    ``max_z/min_z`` bakes avgdl in — so even untouched terms need their
-    metadata refreshed. Their blobs and block boundaries are avgdl-free, so
-    the refresh is a MAP-ONLY pass (decode tf/dl, recompute z extrema): no
-    tokenize, no shuffle, sequential columnar I/O. The exact integer token
-    total (``stats.sum_dl``) is persisted at build time so the union avgdl
-    reproduces the builder's float64 division bit-for-bit.
-  - **Touched terms re-merge through the identical kernel**: a final block
-    row's blobs ARE the partial-row format (absolute first doc, plain
-    deltas after), so base blocks of delta-touched terms feed straight back
-    through :func:`postings.salt_partials` + :func:`postings.merge_salted`
-    together with the delta's stage-1 partials. Salting re-derives from the
-    UNION df, so a term that crosses the salt threshold — or needs a larger
-    power-of-two modulus — re-shards exactly as a scratch build would.
-  - **Append is id-monotone** (new doc ids strictly above the base max),
-    mirroring the reference's append-only contract; a colliding id would
-    corrupt posting order and is rejected up front (B2 analog).
-
-* ``mode="lsm"`` (Lucene-style per-segment postings): the delta writes its
-  OWN complete mini-index — every delta term's posting lists built from
-  the delta's docs alone, salted under the pinned union head map — and NO
-  base row is read or rewritten. Write amplification is O(delta bytes).
-  A (term, salt) shard may then have block rows in several segments;
-  :func:`postings.compose_segment_postings` renumbers blocks as
-  ``segment_ordinal << 24 | block_no`` so the serve kernels' existing
-  (term, salt)-group reassembly concatenates them into one valid posting
-  list IN GLOBAL DOC ORDER (appends are id-monotone, so segment order is
-  doc order; blocks are delta-restarted and self-contained) — the
-  cursor-level cross-segment merge degenerates to concatenation.
-  Three invariants make this exact:
-
-  - **Pinned salt layout.** Every visible row of a term, in every
-    segment, is salted at the SAME doc-modulo. The head map is persisted
-    in ``stats.json``; each lsm append re-derives the union head map and
-    re-merges ONLY the terms whose modulus changed into the new segment,
-    writing a term tombstone that hides their rows in every older segment
-    — a df-doubling event, so each term re-shards O(log df) times over the
-    index's lifetime, amortized O(bytes · log) instead of
-    O(bytes · appends).
-  - **Sound stale bounds.** Each segment records the avgdl its block
-    bounds were written under; the compose scales older segments'
-    ``max_z`` / ``min_z`` by the avgdl ratio (sound pruning), and serving
-    stays EXACT because final scores always recompute from raw tf/dl under
-    the current avgdl.
-  - **Additive term dictionaries.** Each lsm segment stores its DELTA's
-    (term, df) only; :func:`postings.current_terms` sums them at
-    load and re-derives idf/n_shards under the current corpus — so the
-    dictionary write is O(delta vocabulary) too.
-
-  :func:`compact_index` folds a stack back into one generation by
-  re-merging every visible row through the exact build kernel
-  (:func:`postings.salt_partials` + :func:`postings.merge_salted`) —
-  byte-identical to a scratch union build by construction. Compact on a
-  cadence (``max_segments``) exactly like an LSM store: each segment is
-  one more parquet scan branch at serve time.
+:func:`compact_index` is the one fold of a stack back into one generation:
+it re-merges every visible row through the exact build kernel
+(:func:`postings.salt_partials` + :func:`postings.merge_salted`) —
+byte-identical to a scratch union build by construction. Compact on a
+cadence (``max_segments``) exactly like an LSM store: each segment is one
+more parquet scan branch at serve time. ``max_segments=1`` compacts after
+every append, for a caller that needs a single generation.
 
 Scale notes (100 TB): the delta pays tokenize + shuffle only for ITS OWN
-postings. In rewrite mode the base additionally pays one
-embarrassingly-parallel metadata rewrite (every byte rewritten once per
-append — amortize by batching appends); in lsm mode it pays nothing per
-append beyond the resharded terms' re-merge.
+postings; the base pays nothing per append beyond the resharded terms'
+re-merge, and one full re-merge per compaction.
 """
 
 from __future__ import annotations
@@ -97,16 +76,13 @@ import glob
 import json
 import os
 import shutil
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkforward.bm25 import B, K1
 from sparkforward.postings import (
-    BLOCK_POSTING_SCHEMA,
     STATS_TERM,
     TARGET_SHARD_POSTINGS,
     PostingIndex,
@@ -122,8 +98,6 @@ from sparkforward.postings import (
 )
 from sparkforward.session import local_frame
 
-_BLOCK_COLS = [f.name for f in BLOCK_POSTING_SCHEMA.fields]
-
 #: stats.json keys the engine owns — extra_stats may never clobber these
 #: (the committed index state at the flip); everything else is caller
 #: metadata and rides along freely
@@ -135,37 +109,6 @@ _ENGINE_STATS_KEYS = frozenset(
         "terms_dir", "deletes_dir", "data_avgdl",
     }
 )
-
-
-def _refresh_block_meta(avgdl: float):
-    """mapInPandas kernel: recompute ``max_z``/``min_z`` under a new avgdl.
-
-    Batched like the merge kernel: one varbyte decode per Arrow batch and
-    stream (not per row), extrema via ``np.maximum/minimum.reduceat`` at the
-    rows' posting-count boundaries. The z formula is element-for-element the
-    one in :func:`postings.encode_posting_list`, and float max/min are
-    order-independent exact comparisons — so refreshed metadata is
-    bit-identical to what a scratch build computes for the same blocks.
-    """
-
-    def refresh(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                yield pdf
-                continue
-            n_arr = pdf["n"].to_numpy(dtype=np.int64)
-            tf = varbyte_decode(b"".join(bytes(b) for b in pdf["tf_blob"]))
-            dl = varbyte_decode(b"".join(bytes(b) for b in pdf["dl_blob"]))
-            z = (tf * (K1 + 1.0)) / (
-                tf + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl)
-            )
-            starts = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
-            out = pdf.copy()
-            out["max_z"] = np.maximum.reduceat(z, starts)
-            out["min_z"] = np.minimum.reduceat(z, starts)
-            yield out
-
-    return refresh
 
 
 def _referenced_dirs(stats: dict) -> set[str]:
@@ -195,7 +138,7 @@ def _next_gen(stats: dict) -> int:
 
 def _dir_bytes(d: str) -> int:
     """Total file bytes under ``d`` — the append-economics instrument
-    (lsm appends must write O(delta) bytes; soak_append asserts it)."""
+    (appends must write O(delta) bytes; tools/soak_append.py reports it)."""
     total = 0
     for root, _dirs, files in os.walk(d):
         for f in files:
@@ -283,31 +226,32 @@ def append_to_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_partitions: int | None = None,
-    mode: str = "rewrite",
+    mode: str = "lsm",
     max_segments: int | None = None,
     extra_stats: dict | None = None,
 ) -> PostingIndex:
-    """Append ``docs`` to the committed index at ``path``; return the
-    reloaded index. Build configuration (block size, salting, bucket
-    modulus) is pinned from the base ``stats.json`` — an append must shard
-    and bucket exactly like the original build or resume/serve invariants
-    break (cf. the n_buckets resume pin in postings.merge_partials).
+    """Append ``docs`` to the committed index at ``path`` as one more lsm
+    segment; return the reloaded index. Build configuration (block size,
+    salting, bucket modulus) is pinned from the base ``stats.json`` — an
+    append must shard and bucket exactly like the original build or
+    resume/serve invariants break (cf. the n_buckets resume pin in
+    postings.merge_partials).
+
+    The segment is the delta's own complete mini-index: O(delta bytes)
+    written, no base row rewritten and no committed directory deleted, so
+    a reader holding an older handle keeps working (see module docstring).
+    ``mode`` takes the one value ``"lsm"``; any other raises before
+    anything is written. ``max_segments`` compacts (:func:`compact_index`)
+    once the stack exceeds that many segments: ``max_segments=1`` leaves a
+    single generation byte-identical to a scratch union build.
 
     ``extra_stats``: caller keys merged into the committed stats.json AT
     THE FLIP — so a caller-side progress marker (e.g. a streaming
     micro-batch id) commits atomically WITH the data it describes
     (streaming.stream_ingest_lsm's exactly-once recipe).
-
-    ``mode="rewrite"`` produces a single generation byte-identical to a
-    scratch union build; ``mode="lsm"`` stacks the delta's own complete
-    mini-index — O(delta bytes) written, no base row read (see module
-    docstring). ``max_segments`` (lsm mode) auto-compacts once the stack
-    exceeds that many segments.
     """
-    if mode not in ("rewrite", "lsm"):
-        raise ValueError(
-            f"append_to_index: unknown mode {mode!r} (use 'rewrite' or 'lsm')"
-        )
+    if mode != "lsm":
+        raise ValueError(f"append_to_index: unknown mode {mode!r} (use 'lsm')")
     if extra_stats:
         clash = sorted(set(extra_stats) & _ENGINE_STATS_KEYS)
         if clash:
@@ -317,7 +261,6 @@ def append_to_index(
                 "an app prefix)"
             )
     stats = _load_stats(path, "append_to_index")
-    additive_base = stats.get("terms_layout") == "additive"
     referenced = _referenced_dirs(stats)
 
     # wipe orphaned generations from a crashed append: stats.json never
@@ -401,96 +344,53 @@ def append_to_index(
             int(stats.get("target_shard_postings", TARGET_SHARD_POSTINGS)),
         )
 
-        # delta vocabulary is workload-bounded (<= delta postings), so the
-        # touched/untouched split broadcasts it instead of shuffling the base
-        touched_terms = F.broadcast(delta_df.select("term"))
-
-        # which base rows feed the merge kernel, per mode:
-        #   rewrite — the delta-TOUCHED terms' rows (their lists are
-        #     re-merged whole; untouched rows get a metadata refresh);
-        #   lsm — only the RESHARDED terms' rows (union df pushed the term's
-        #     pow-2 doc-modulo up, so every visible row of it must re-salt;
-        #     a df-doubling event — each term reshards O(log df) times over
-        #     the index's life). All other delta terms contribute ONLY their
-        #     delta partials: their mini posting lists land in this segment
-        #     and concatenate with base rows at compose time.
-        #   rewrite on an ADDITIVE base — every visible row: a (term, salt)
-        #     shard may span segments with colliding local block numbers, so
-        #     the map-only metadata refresh is unsound there; the full
-        #     re-merge is what a scratch union build does, byte-identically
-        #     (the kernel stable-sorts by doc id; head/avgdl are pure
-        #     functions of the union corpus).
-        resharded: list[str] = []
-        if mode == "lsm":
-            stored = stats["head"]
-            resharded = sorted(
-                t for t, m in head.items() if int(stored.get(t, 1)) != int(m)
-            )
-            resharded_df = local_frame(
-                spark, [(t,) for t in resharded], "term string"
-            )
-        if mode == "rewrite" and additive_base:
-            base_input = base_post
-        elif mode == "lsm":
-            base_input = (
-                base_post.join(F.broadcast(resharded_df), "term", "left_semi")
-                if resharded
-                else None
-            )
-        else:
-            base_input = base_post.join(touched_terms, "term", "left_semi")
+        # only the RESHARDED terms' base rows feed the merge kernel: union
+        # df pushed the term's pow-2 doc-modulo up, so every visible row of
+        # it must re-salt (a df-doubling event — each term reshards O(log df)
+        # times over the index's life). Every other delta term contributes
+        # ONLY its delta partials: its mini posting lists land in this
+        # segment and concatenate with base rows at compose time.
+        stored = stats["head"]
+        resharded = sorted(
+            t for t, m in head.items() if int(stored.get(t, 1)) != int(m)
+        )
+        resharded_df = local_frame(spark, [(t,) for t in resharded], "term string")
 
         # a block row's (n, blobs) is a valid partial row — reuse the exact
         # build machinery on base blocks + delta partials
         merged_input = delta_partials.select(
             "term", "n", "doc_blob", "tf_blob", "dl_blob"
         )
-        if base_input is not None:
-            merged_input = base_input.select(
-                "term", "n", "doc_blob", "tf_blob", "dl_blob"
-            ).unionByName(merged_input)
+        if resharded:
+            merged_input = (
+                base_post.join(F.broadcast(resharded_df), "term", "left_semi")
+                .select("term", "n", "doc_blob", "tf_blob", "dl_blob")
+                .unionByName(merged_input)
+            )
         salted = salt_partials(merged_input, head)
-        touched_rows = merge_salted(
+        segment_rows = merge_salted(
             salted, head, avgdl, int(stats["block_size"]),
             num_partitions=num_partitions,
         )
 
         gen_no = _next_gen(stats)
         gen_dir = os.path.join(path, f"gen-{gen_no}")
-        n_buckets = int(stats["n_buckets"])
-
-        if mode == "rewrite":
-            if additive_base:
-                _write_postings(touched_rows, gen_dir, n_buckets)
-            else:
-                untouched = base_post.join(touched_terms, "term", "left_anti")
-                refreshed = untouched.select(*_BLOCK_COLS).mapInPandas(
-                    _refresh_block_meta(avgdl), schema=BLOCK_POSTING_SCHEMA
-                )
-                _write_postings(
-                    touched_rows.unionByName(refreshed), gen_dir, n_buckets
-                )
-            attach_term_meta(df_union, float(n_union), head).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(gen_dir, "terms"))
-        else:
-            _write_postings(touched_rows, gen_dir, n_buckets)
-            # term tombstones hide the resharded terms' stale rows in every
-            # OLDER segment (everything else concatenates) — driver-bounded
-            resharded_df.write.mode("overwrite").parquet(
-                os.path.join(gen_dir, "tombstones")
-            )
-            # additive dictionary: the DELTA's (term, df) only — summed and
-            # re-idf'd under the current corpus at load
-            # (postings.current_terms)
-            delta_df.select("term", "df").write.mode("overwrite").parquet(
-                os.path.join(gen_dir, "terms")
-            )
+        _write_postings(segment_rows, gen_dir, int(stats["n_buckets"]))
+        # term tombstones hide the resharded terms' stale rows in every
+        # OLDER segment (everything else concatenates) — driver-bounded
+        resharded_df.write.mode("overwrite").parquet(
+            os.path.join(gen_dir, "tombstones")
+        )
+        # additive dictionary: the DELTA's (term, df) only — summed and
+        # re-idf'd under the current corpus at load (postings.current_terms)
+        delta_df.select("term", "df").write.mode("overwrite").parquet(
+            os.path.join(gen_dir, "terms")
+        )
         delta_df.unpersist()
 
         # generation manifest: lineage + metrics for the append itself.
-        # bytes_written is the append-economics instrument — lsm appends
-        # must stay O(delta bytes); tools/soak_append.py asserts it.
+        # bytes_written is the append-economics instrument — appends must
+        # stay O(delta bytes); tools/soak_append.py reports it.
         with open(os.path.join(gen_dir, "manifest.json"), "w") as fh:
             json.dump(
                 {
@@ -507,6 +407,16 @@ def append_to_index(
                 fh,
             )
 
+        segs = stats.get("segments") or [
+            # first append onto a single generation: the committed base
+            # becomes segment 0 — its bounds were written under data_avgdl
+            # (== avgdl unless docs were deleted from the base since)
+            {
+                "dir": stats.get("data_dir") or "",
+                "avgdl": float(stats.get("data_avgdl", stats["avgdl"])),
+                "tombstones": None,
+            }
+        ]
         new_stats = {
             **stats,
             "n_docs": float(n_union),
@@ -514,43 +424,23 @@ def append_to_index(
             "sum_dl": sum_dl_union,
             "data_dir": f"gen-{gen_no}",
             # re-pin the union head map: every visible row is now salted
-            # under it (rewrite re-merges touched terms whole; lsm re-merges
-            # exactly the resharded ones; untouched terms keep their df,
-            # hence their modulus)
+            # under it (the resharded terms re-merged into this segment;
+            # every other term keeps its modulus)
             "head": {t: int(m) for t, m in head.items()},
-        }
-        # the new generation carries the full union dictionary (lsm: the
-        # additive delta) — a delete-generation terms_dir override is
-        # superseded; data_avgdl folds into the segment-0 entry (stacks)
-        # or is obsolete (rewrite refreshed every bound under ``avgdl``)
-        if mode != "lsm":
-            new_stats.pop("terms_dir", None)
-        new_stats.pop("data_avgdl", None)
-        if mode == "lsm":
-            segs = stats.get("segments") or [
-                # first lsm append: the committed base becomes segment 0 —
-                # its bounds were written under data_avgdl (== avgdl unless
-                # docs were deleted from the base since)
-                {
-                    "dir": stats.get("data_dir") or "",
-                    "avgdl": float(stats.get("data_avgdl", stats["avgdl"])),
-                    "tombstones": None,
-                }
-            ]
-            entry = {
-                "dir": f"gen-{gen_no}",
-                "avgdl": avgdl,
-                "tombstones": f"gen-{gen_no}/tombstones",
-                "kind": "lsm",
-            }
             # the stack's dictionary is now additive: newest segments hold
             # delta-local (term, df) summed at load
-            new_stats["terms_layout"] = "additive"
-            new_stats["segments"] = segs + [entry]
-        else:
-            # rewrite: one complete generation, full union dictionary
-            new_stats.pop("segments", None)
-            new_stats.pop("terms_layout", None)
+            "terms_layout": "additive",
+            "segments": segs + [
+                {
+                    "dir": f"gen-{gen_no}",
+                    "avgdl": avgdl,
+                    "tombstones": f"gen-{gen_no}/tombstones",
+                    "kind": "lsm",
+                }
+            ],
+        }
+        # data_avgdl folds into the segment-0 entry
+        new_stats.pop("data_avgdl", None)
         if extra_stats:
             # engine-owned keys were rejected at entry; caller keys
             # (stream_batch_id, app metadata) commit atomically here
@@ -559,11 +449,7 @@ def append_to_index(
     finally:
         raw_partials.unpersist()
 
-    if mode == "rewrite":
-        # the superseded data is now unreferenced; keep exactly one
-        # committed generation on disk (the new one)
-        _drop_superseded(path, stats, new_stats)
-    elif max_segments is not None and len(new_stats["segments"]) > max_segments:
+    if max_segments is not None and len(new_stats["segments"]) > max_segments:
         return compact_index(spark, path)
     return PostingIndex.load(spark, path)
 

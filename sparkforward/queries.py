@@ -325,14 +325,17 @@ def q_bm25_wand_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _grow_appended(docs: DataFrame, path: str, build):
     """Build over the first ~80% of the corpus, then GROW it to the full
-    corpus via :func:`sparkforward.append.append_to_index`."""
+    corpus via :func:`sparkforward.append.append_to_index` with
+    ``max_segments=1``: the lsm append, then its compaction into one
+    generation byte-identical to a scratch build."""
     from sparkforward.append import append_to_index
 
     d = F.col("doc_id").cast("long")
     (cut,) = _doc_id_cuts(docs, (4, 5))
     build(docs.filter(d < cut))
     return append_to_index(
-        docs.sparkSession, path, docs.filter(d >= cut), num_partitions=8
+        docs.sparkSession, path, docs.filter(d >= cut), num_partitions=8,
+        max_segments=1,
     )
 
 
@@ -464,10 +467,11 @@ FROM bm25_ranked WHERE rank <= {K_FINAL}
 def q_bm25_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental index maintenance under the hash gate (judge r5 #4):
     build over the first 80% of the corpus, append the remaining 20%
-    (sparkforward.append — immutable generations, atomic stats flip), and
-    serve WAND top-10 from the appended index. Byte-identity of appends
-    means rows must equal ``bm25_topk`` exactly, so the entry shares its
-    oracle. Ref contract: B1-B4 append semantics, ``index/disk.py:243-301``.
+    (sparkforward.append — immutable generations, atomic stats flip) and
+    compact it into one generation, and serve WAND top-10 from it. The
+    compacted index is byte-identical to a scratch build, so rows must
+    equal ``bm25_topk`` exactly and the entry shares its oracle. Ref
+    contract: B1-B4 append semantics, ``index/disk.py:243-301``.
     """
     from sparkforward.wand import wand_topk
 

@@ -96,11 +96,16 @@ def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFr
     ``spark.createDataFrame(<list>, schema)`` pickles the rows into a Python
     RDD, so every action over it, a broadcast of it included, runs a
     Python-worker job. The same rows sent as a ``pyarrow.Table`` plan as a
-    JVM ``LocalTableScan``, which launches no job. Each column is built as
-    one typed Arrow array, so values convert as on the list path (doubles
-    into ``array<float>`` round to float32) and a value that does not fit
-    its type raises (``pyarrow.ArrowInvalid``), as does a row whose width
-    differs from the schema's.
+    JVM ``LocalTableScan``, which no Python worker reads: a direct collect
+    of it runs no job. A broadcast of it still runs one JVM job, because
+    ``BroadcastExchange`` collects the relation through an RDD of
+    ``defaultParallelism`` slices (a ``F.broadcast(local_frame(...))`` join
+    ran 2 jobs where the single-partition shuffle-hash join of the same
+    frame ran 1). Each column is built as one typed Arrow array, so values
+    convert as on the list path (doubles into ``array<float>`` round to
+    float32) and a value that does not fit its type raises
+    (``pyarrow.ArrowInvalid``), as does a row whose width differs from the
+    schema's.
 
     :param schema: a DDL string (``"q_id string, n int"``) or a StructType.
     """

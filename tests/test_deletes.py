@@ -127,19 +127,16 @@ def test_append_after_delete_is_exact(spark, docs, tmp_path):
     delta = docs.filter(d >= 400)
     build_inverted_index(base, str(tmp_path / "a"), **CFG)
     delete_docs(spark, str(tmp_path / "a"), _del_ids(base, 7, 3))
-    for mode in ("rewrite", "lsm"):
+    for i, kw in enumerate(({"max_segments": 1}, {})):
         import shutil
 
-        shutil.copytree(tmp_path / "a", tmp_path / f"m_{mode}")
+        shutil.copytree(tmp_path / "a", tmp_path / f"m_{i}")
         idx = append_to_index(
-            spark, str(tmp_path / f"m_{mode}"), delta,
-            num_partitions=4, mode=mode,
+            spark, str(tmp_path / f"m_{i}"), delta, num_partitions=4, **kw
         )
         union = base.filter(d % 7 != 3).unionByName(delta)
-        scratch = build_inverted_index(
-            union, str(tmp_path / f"s_{mode}"), **CFG
-        )
-        assert _serve(spark, idx).equals(_serve(spark, scratch)), mode
+        scratch = build_inverted_index(union, str(tmp_path / f"s_{i}"), **CFG)
+        assert _serve(spark, idx).equals(_serve(spark, scratch)), kw
 
 
 def test_delete_on_lsm_stack_raises(spark, docs, tmp_path):

@@ -1,4 +1,4 @@
-"""Pipeline transforms, multimodal plumbing, streaming ingest, OPQ,
+"""Pipeline transforms, streaming ingest, OPQ,
 quantized-index scoring, index transfer/consolidate/iteration."""
 
 import numpy as np
@@ -40,39 +40,6 @@ def test_ff_score_and_interpolate_transforms(spark):
     assert frows["d0"]["score"] == pytest.approx(51.0)  # .5*100 + .5*2
     assert frows["d3"]["score"] == pytest.approx(4.5)
     assert frows["d0"]["rank"] == 0  # pyterrier ranks start at 0
-
-
-# ------------------------------------------------------------ multimodal #
-def test_multimodal_decode_and_features(spark):
-    from sparkforward.multimodal import (
-        decode_media, extract_features, sample_frames, synthesize_media,
-    )
-
-    media = synthesize_media(spark, 30, num_partitions=3)
-    meta = decode_media(media).toPandas()
-    assert len(meta) == 30
-    assert (meta["n_bytes"] == meta["width"] * meta["height"] * meta["channels"] + 9).all()
-
-    feats = extract_features(media, dim=16).toPandas()
-    assert len(feats) == 30
-    assert all(len(v) == 16 for v in feats["feature"])
-    # deterministic across partitionings
-    feats2 = extract_features(synthesize_media(spark, 30, num_partitions=1), dim=16).toPandas()
-    a = {m: np.asarray(v) for m, v in zip(feats["media_id"], feats["feature"])}
-    b = {m: np.asarray(v) for m, v in zip(feats2["media_id"], feats2["feature"])}
-    assert all(np.allclose(a[m], b[m]) for m in a)
-
-    frames = sample_frames(media, frame_bytes=256, every_nth=2).toPandas()
-    assert (frames["frame_no"] % 2 == 0).all()
-    assert len(frames) > 0
-
-    # non-FAKE payload -> NotImplementedError surfaces (decode is stubbed)
-    bad = spark.createDataFrame(
-        [(99, "image", bytearray(b"PNG\x89: not our container"))],
-        "media_id long, kind string, payload binary",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|FAKE"):
-        decode_media(bad).collect()
 
 
 # ------------------------------------------------------------- streaming #
@@ -634,47 +601,6 @@ def test_spark_submit_build_and_serve_jobs(spark, tmp_path):
         ).df.collect()
     }
     assert served2 == expected2 and len(served2) == 5
-
-
-def test_real_container_header_parsing(spark):
-    """PNG/JPEG/GIF metadata parses from real container headers (no image
-    library), distributed through decode_media; unknown containers still
-    raise the documented pixel-decode stub error."""
-    import struct
-
-    import pytest
-
-    from sparkforward.multimodal import _parse_header, decode_media
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13) + b"IHDR"
-        + struct.pack(">IIBBBBB", 640, 480, 8, 6, 0, 0, 0)
-    )
-    assert _parse_header(png) == (640, 480, 4)  # RGBA
-
-    jpeg = (
-        b"\xff\xd8\xff"
-        + b"\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9  # APP0
-        + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 333, 222) + b"\x03" + b"\x00" * 10  # SOF0
-    )
-    assert _parse_header(jpeg) == (222, 333, 3)
-
-    gif = b"GIF89a" + struct.pack("<HH", 99, 77) + b"\x00\x00\x00"
-    assert _parse_header(gif) == (99, 77, 3)
-
-    with pytest.raises(NotImplementedError, match="PIL/ffmpeg"):
-        _parse_header(b"RIFFxxxxWAVE")
-
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(png)), (2, "image", bytearray(jpeg)),
-         (3, "image", bytearray(gif))],
-        "media_id long, kind string, payload binary",
-    )
-    out = {r["media_id"]: (r["width"], r["height"], r["channels"])
-           for r in decode_media(df).collect()}
-    assert out == {1: (640, 480, 4), 2: (222, 333, 3), 3: (99, 77, 3)}
 
 
 def test_windowed_event_stats_stream_equals_batch(spark, tmp_path):

@@ -1,7 +1,7 @@
-"""Maintenance-lifecycle fuzz: random sequences of appends (both
-modes), doc-granular deletes, and compactions over an evolving corpus —
-the composed index must always serve rank-identical to exhaustive
-declarative BM25 over the CURRENT surviving corpus.
+"""Maintenance-lifecycle fuzz: random sequences of appends (stacked, or
+compacted at once), doc-granular deletes, and compactions over an
+evolving corpus — the composed index must always serve rank-identical to
+exhaustive declarative BM25 over the CURRENT surviving corpus.
 
 This is the composition guarantee none of the per-op tests cover: stale
 bounds from one op ratio-adjusted by a later op, deletes surviving
@@ -60,7 +60,7 @@ def test_maintenance_lifecycle_fuzz(spark, tmp_path, seed):
     n_ops = int(rng.integers(4, 7))
     history = ["build"]
     for _ in range(n_ops):
-        choices = ["rewrite", "lsm", "compact"]
+        choices = ["lsm_compact", "lsm", "compact"]
         # deletes compose with single generations; lsm stacks require a
         # compact first
         if not stats().get("segments") and len(corpus) > 10:
@@ -87,7 +87,8 @@ def test_maintenance_lifecycle_fuzz(spark, tmp_path, seed):
                 spark.createDataFrame(
                     list(delta.items()), "doc_id long, text string"
                 ),
-                num_partitions=3, mode=str(op),
+                num_partitions=3,
+                max_segments=1 if op == "lsm_compact" else None,
             )
             corpus.update(delta)
 

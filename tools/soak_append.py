@@ -1,19 +1,22 @@
 """Incremental-append soak: kill an append mid-write, prove the base index
-survives, then prove a completed append is byte-identical to a from-scratch
-build of the union corpus — at 1M base + 100k delta scale by default.
+survives, then prove a completed append, once compacted, is byte-identical
+to a from-scratch build of the union corpus — at 1M base + 100k delta scale
+by default. A delete leg does the same for ``delete_docs``.
 
 Three claims, each verified on real subprocess JVMs (never the parent's):
 
-1. **Crash isolation**: SIGKILL while the new generation's postings job has
+1. **Crash isolation**: SIGKILL while the new segment's postings job has
    in-flight task output leaves ``stats.json`` pointing at the base
    generation — the index loads and its signature equals the pre-append
    base signature (readers never see a torn append).
 2. **Idempotent retry**: re-running the append after the kill wipes the
-   orphaned generation and completes; the result's signature equals a
-   from-scratch build of base+delta under the same build config.
-3. **Economics**: append wall-clock ≪ union rebuild wall-clock (the delta
-   pays tokenize+shuffle only for itself; the base pays one map-only
-   metadata refresh) — both timed on this box and reported.
+   orphaned generation and completes; after ``compact_index`` the result's
+   signature equals a from-scratch build of base+delta under the same
+   build config.
+3. **Economics**: the append writes O(delta) bytes (the delta's own
+   segment; no base row is rewritten) — reported as ``lsm_bytes_written``
+   against the base index's bytes, with the append, compaction and union
+   rebuild wall-clock times.
 
 Usage: python tools/soak_append.py [--docs 1000000] [--delta 100000]
 """
@@ -134,7 +137,6 @@ def _worker_append(args) -> None:
     append_to_index(
         spark, args.path, spark.read.parquet(args.corpus),
         num_partitions=args.cores * 2,
-        mode="lsm" if args.worker == "append_lsm" else "rewrite",
     )
     spark.stop()
 
@@ -196,22 +198,20 @@ def run_append_soak(
 ) -> dict:
     work = work_dir or tempfile.mkdtemp(prefix="sfwd_appsoak_")
     corpus = os.path.join(work, "corpus")
-    path_a = os.path.join(work, "idx_appended")
     path_r = os.path.join(work, "idx_rebuilt")
 
     _spawn("corpus", corpus, "", n_docs, n_delta, cores).wait()
 
-    # base build + union rebuild reference (timed — the economics claim)
+    # base build + union rebuild reference (timed — the economics claim);
+    # the pristine base is copied for the append and delete legs
+    path_b0 = os.path.join(work, "idx_base")
     t0 = time.time()
-    p = _spawn("build", corpus + "_base", path_a, n_docs, 0, cores)
+    p = _spawn("build", corpus + "_base", path_b0, n_docs, 0, cores)
     p.wait()
     base_build_sec = time.time() - t0
     if p.returncode != 0:
         raise RuntimeError("base build failed")
-    base_sig = index_signature(path_a)
-    # pristine copy of the committed base for the lsm and delete legs
-    path_b0 = os.path.join(work, "idx_base_copy")
-    shutil.copytree(path_a, path_b0)
+    base_sig = index_signature(path_b0)
 
     t0 = time.time()
     p = _spawn("build", corpus + "_union", path_r, n_docs, 0, cores)
@@ -221,47 +221,18 @@ def run_append_soak(
         raise RuntimeError("union rebuild failed")
     ref_sig = index_signature(path_r)
 
-    # victim append: REAL SIGKILL once the new generation has in-flight
-    # postings task output
-    proc = _spawn("append", corpus + "_delta", path_a, n_docs, n_delta, cores)
-    kill_hit = False
-    tmp_glob = os.path.join(path_a, "gen-*", "postings", "_temporary", "*", "*")
-    while proc.poll() is None:
-        if glob.glob(tmp_glob):
-            if proc.poll() is None:
-                os.kill(proc.pid, signal.SIGKILL)
-                kill_hit = True
-            break
-        time.sleep(0.05)
-    proc.wait()
-    base_intact = (not kill_hit) or index_signature(path_a) == base_sig
-    if not kill_hit:
-        # victim completed before the kill window: reset from the pristine
-        # base so the timed retry is a clean single append
-        shutil.rmtree(path_a, ignore_errors=True)
-        shutil.copytree(path_b0, path_a)
-
-    # retry to completion (timed)
-    t0 = time.time()
-    p = _spawn("append", corpus + "_delta", path_a, n_docs, n_delta, cores)
-    p.wait()
-    append_sec = time.time() - t0
-    appended_identical = (
-        p.returncode == 0 and index_signature(path_a) == ref_sig
-    )
-    rewrite_bytes = int(_committed_gen_manifest(path_a).get("bytes_written", 0))
     from sparkforward.append import _dir_bytes
     from sparkforward.postings import index_data_root
 
     base_bytes = _dir_bytes(index_data_root(path_b0))
 
-    # ----- Lucene-style LSM leg: kill mid-append (base intact), retry —
-    # the delta writes ONLY its own mini-index, so bytes_written must be
-    # O(delta), not O(head bytes) — then compact and require byte-identity
-    # with the union rebuild (the full re-merge path) -----
+    # ----- append leg: kill mid-append (base intact), retry — the delta
+    # writes ONLY its own mini-index, so bytes_written must be O(delta),
+    # not O(base bytes) — then compact and require byte-identity with the
+    # union rebuild (the full re-merge path) -----
     path_l = os.path.join(work, "idx_lsm")
     shutil.copytree(path_b0, path_l)
-    proc = _spawn("append_lsm", corpus + "_delta", path_l, n_docs, n_delta, cores)
+    proc = _spawn("append", corpus + "_delta", path_l, n_docs, n_delta, cores)
     lsm_kill_hit = False
     lsm_tmp_glob = os.path.join(path_l, "gen-*", "postings", "_temporary", "*", "*")
     while proc.poll() is None:
@@ -278,7 +249,7 @@ def run_append_soak(
         shutil.copytree(path_b0, path_l)
 
     t0 = time.time()
-    p = _spawn("append_lsm", corpus + "_delta", path_l, n_docs, n_delta, cores)
+    p = _spawn("append", corpus + "_delta", path_l, n_docs, n_delta, cores)
     p.wait()
     lsm_append_sec = time.time() - t0
     lsm_ok = p.returncode == 0
@@ -350,28 +321,20 @@ def run_append_soak(
         "n_docs": n_docs,
         "n_delta": n_delta,
         "cores": cores,
-        "kill_hit": kill_hit,
-        "base_intact_after_kill": base_intact,
-        "appended_identical_to_rebuild": appended_identical,
         "base_build_sec": round(base_build_sec, 2),
         "rebuild_union_sec": round(rebuild_sec, 2),
-        "append_sec": round(append_sec, 2),
-        "append_vs_rebuild": round(append_sec / rebuild_sec, 3),
         # --- write-amplification instrumentation (judge r6 #1: lsm bytes
         # must track the DELTA, not the head/base bytes) ---
         "base_index_bytes": base_bytes,
-        "rewrite_bytes_written": rewrite_bytes,
         "lsm_bytes_written": lsm_bytes,
         "delta_fraction": round(n_delta / n_docs, 4),
         "lsm_bytes_vs_base": round(lsm_bytes / base_bytes, 4) if base_bytes else None,
-        "lsm_bytes_vs_rewrite": round(lsm_bytes / rewrite_bytes, 4) if rewrite_bytes else None,
         "lsm_resharded_terms": int(lsm_manifest.get("resharded_terms", 0)),
         "lsm_kill_hit": lsm_kill_hit,
         "lsm_base_intact_after_kill": lsm_base_intact,
         "lsm_append_sec": round(lsm_append_sec, 2),
         "lsm_compact_sec": round(lsm_compact_sec, 2),
         "lsm_compacted_identical_to_rebuild": lsm_identical,
-        "lsm_append_vs_rewrite": round(lsm_append_sec / append_sec, 3),
         # --- doc-granular delete leg (10% of base tombstoned) ---
         "delete_kill_hit": del_kill_hit,
         "delete_base_intact_after_kill": del_base_intact,
@@ -389,7 +352,7 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=16)
     ap.add_argument(
         "--worker",
-        choices=["corpus", "build", "append", "append_lsm", "compact", "delete"],
+        choices=["corpus", "build", "append", "compact", "delete"],
     )
     ap.add_argument("--corpus")
     ap.add_argument("--path")
@@ -400,7 +363,7 @@ def main() -> None:
     if args.worker == "build":
         _worker_build(args)
         return
-    if args.worker in ("append", "append_lsm"):
+    if args.worker == "append":
         _worker_append(args)
         return
     if args.worker == "compact":
@@ -412,9 +375,7 @@ def main() -> None:
     result = run_append_soak(args.docs, args.delta, args.cores)
     print(json.dumps(result))
     if not (
-        result["base_intact_after_kill"]
-        and result["appended_identical_to_rebuild"]
-        and result["lsm_base_intact_after_kill"]
+        result["lsm_base_intact_after_kill"]
         and result["lsm_compacted_identical_to_rebuild"]
         and result["delete_base_intact_after_kill"]
         and result["delete_compacted_identical_to_survivor_build"]
